@@ -26,7 +26,7 @@ from .datamodel import MESSAGE_SCHEMA, RawdataMessage, RawdataMessageBuilder
 from .errors import RawdataClosedException, RawdataNoSuchPositionException
 from .metadata import RawdataMetadataClient
 from .sources.fsutil import HadoopFs
-from .sources.topic import Topic
+from .sources.topic import Topic, overlap_groups
 from .ulid import MonotonicUlidGenerator, UlidCursor
 
 
@@ -116,15 +116,12 @@ class RawdataClient:
         """
         lo_ms = approx_timestamp_ms - tolerance_ms
         hi_ms = approx_timestamp_ms + tolerance_ms
-        df = self.topic(topic).dataframe(from_ts_ms=lo_ms)
         # reference overruns only when msg ts strictly exceeds the upper
-        # bound's millisecond, so the window is inclusive of hi_ms itself
+        # bound's millisecond, so the window is inclusive of hi_ms itself;
+        # both bounds prune files and filter rows
+        df = self.topic(topic).dataframe(from_ts_ms=lo_ms, to_ts_ms=hi_ms)
         rows = (
-            df.filter(
-                (F.col("ulid_ts_ms") >= F.lit(lo_ms))
-                & (F.col("ulid_ts_ms") <= F.lit(hi_ms))
-                & (F.col("position") == F.lit(position))
-            )
+            df.filter(F.col("position") == F.lit(position))
             .orderBy("ulid")
             .limit(1)
             .collect()
@@ -354,8 +351,28 @@ class RawdataProducer:
 class RawdataConsumer:
     """Ordered sequential consume with tail-polling (S5/S6).
 
-    Batch iteration is a ``toLocalIterator`` over the ULID-ordered scan; on
-    exhaustion ``receive(timeout)`` re-lists the topic (throttled by
+    Read model.  Each (re)build lists the manifest once, reads the max-ts
+    sidecar once, prunes to the files that can hold messages after the
+    cursor, and splits them into groups of time-overlapping files (see
+    :func:`~.sources.topic.overlap_groups`): every message of a group
+    precedes every message of the next one.  Delivery then comes from
+
+    - the **head** — the cursor's group plus its successor — read as one
+      scan filtered on the cursor, ``coalesce(1)`` and sorted within that
+      one partition: one Spark job, no sampling, no shuffle, a bounded
+      number of files whatever the topic's size.  This is the reference's
+      floorEntry/higherEntry walk (AvroRawdataConsumer.java:143-179) at
+      group granularity;
+    - the **tail** — every later file — read only once the head is
+      exhausted, as one range-sorted scan (``orderBy("ulid")``), so a full
+      drain runs a number of jobs that does not grow with the file count.
+
+    The head is read in one task only while its manifest byte size is at
+    most ``spark.sql.files.maxPartitionBytes``, the amount Spark already
+    gives one scan task; a larger head goes straight to the range-sorted
+    scan.
+
+    On exhaustion ``receive(timeout)`` re-lists the topic (throttled by
     ``listing_min_interval_seconds``, TopicAvroFileCache.java:23-30) every
     0.5 s — the reference's poll loop (AvroRawdataConsumer.java:97-111) —
     and resumes strictly after the last delivered ULID.
@@ -396,19 +413,44 @@ class RawdataConsumer:
         self._include_exact = True
         self._iter = None
 
-    def _scan_df(self) -> DataFrame:
+    def _scan(self, manifest) -> DataFrame:
+        """Unordered scan of ``manifest`` filtered on the current cursor."""
         after = self._after_ulid
-        prune_ts = ulid_mod.timestamp_ms(after) if after else None
-        df = self._topic.dataframe(from_ts_ms=prune_ts)
-        if after is not None:
-            op = ">=" if self._include_exact else ">"
-            df = df.filter(F.expr(f"ulid {op} x'{after.hex()}'"))
-        return df.orderBy("ulid")
+        op = ">=" if self._include_exact else ">"
+        return (
+            self._topic.read_files(manifest)
+            .filter(F.col("ulid_ts_ms") >= F.lit(ulid_mod.timestamp_ms(after)))
+            .filter(F.expr(f"ulid {op} x'{after.hex()}'"))
+        )
 
-    def _rebuild_iter(self) -> None:
-        manifest = self._topic.list_manifest()
+    def _rows(self, manifest):
+        """Rows after the cursor in ULID order: the head group pair in one
+        task, then the rest range-sorted (see the class docstring)."""
+        max_ts = self._topic.load_max_ts()
+        manifest = self._topic.prune_from_timestamp(
+            manifest, ulid_mod.timestamp_ms(self._after_ulid), max_ts
+        )
+        groups = overlap_groups(manifest, max_ts)
+        head = [pe for group in groups[:2] for pe in group]
+        sql_conf = self._client.spark._jsparkSession.sessionState().conf()
+        task_bytes = sql_conf.filesMaxPartitionBytes()
+        if head and sum(e.last_block_offset for _, e in head) <= task_bytes:
+            yield from (
+                self._scan(head)
+                .coalesce(1)
+                .sortWithinPartitions("ulid")
+                .toLocalIterator()
+            )
+            manifest = [pe for group in groups[2:] for pe in group]
+        if manifest:
+            # the cursor has moved past every head row by now
+            yield from self._scan(manifest).orderBy("ulid").toLocalIterator()
+
+    def _rebuild_iter(self, manifest=None) -> None:
+        if manifest is None:
+            manifest = self._topic.list_manifest()
         self._seen_files = frozenset(path for path, _ in manifest)
-        self._iter = self._scan_df().toLocalIterator()
+        self._iter = self._rows(manifest)
 
     def _next_from_iter(self) -> RawdataMessage | None:
         if self._iter is None:
@@ -441,10 +483,8 @@ class RawdataConsumer:
                 # compare the file *set*, not the count: a compaction can
                 # replace files leaving the count unchanged while exposing
                 # new messages
-                names = frozenset(path for path, _ in manifest)
-                if names != self._seen_files:
-                    self._seen_files = names
-                    self._iter = self._scan_df().toLocalIterator()
+                if frozenset(path for path, _ in manifest) != self._seen_files:
+                    self._rebuild_iter(manifest)
                     msg = self._next_from_iter()
                     if msg is not None:
                         return msg
@@ -453,7 +493,10 @@ class RawdataConsumer:
 
     def dataframe(self) -> DataFrame:
         """The remaining stream as an ordered DataFrame (engine-level API)."""
-        return self._scan_df()
+        manifest = self._topic.prune_from_timestamp(
+            self._topic.list_manifest(), ulid_mod.timestamp_ms(self._after_ulid)
+        )
+        return self._scan(manifest).orderBy("ulid")
 
     def close(self):
         self._closed = True

@@ -12,8 +12,11 @@ We keep the exact convention (so a reference deployment's topic folders are
 mutually readable where the file format matches) but allow a ``.parquet``
 extension: this container ships no spark-avro datasource, and the engine's
 native columnar format is parquet.  ``lastBlockOffset`` carries the byte size
-of the file — the reference used it for O(1) tail reads (obsolete under
-Spark's ``TakeOrderedAndProject``), we retain it as a cheap size stat.
+of the file — the reference seeks to it for the last Avro block; here it
+sizes reads before they run (the consumer reads its head group in one task
+only while those bytes fit one scan task).  ``last_message`` instead reads
+top-1 by ULID over the file with the largest from-ts plus every file whose
+sidecar max-ts reaches that from-ts (one file on a time-disjoint topic).
 """
 
 from __future__ import annotations

@@ -18,13 +18,17 @@ class HadoopFs:
     """Minimal wrapper over org.apache.hadoop.fs.FileSystem via py4j."""
 
     def __init__(self, spark: SparkSession, uri: str):
-        self._jvm = spark._jvm
+        jvm = spark._jvm
+        # resolved once: each ``jvm.a.b.C`` lookup walks the package tree
+        # with one py4j round trip per segment
+        self._path_class = jvm.org.apache.hadoop.fs.Path
+        self._io_utils = jvm.org.apache.commons.io.IOUtils
         self._conf = spark._jsc.hadoopConfiguration()
-        self._root = self._jvm.org.apache.hadoop.fs.Path(uri)
+        self._root = self._path_class(uri)
         self._fs = self._root.getFileSystem(self._conf)
 
     def path(self, uri: str):
-        return self._jvm.org.apache.hadoop.fs.Path(uri)
+        return self._path_class(uri)
 
     def exists(self, uri: str) -> bool:
         return self._fs.exists(self.path(uri))
@@ -114,9 +118,7 @@ class HadoopFs:
         stream = self._fs.open(self.path(uri))
         try:
             stream.seek(offset)
-            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                stream, length
-            )
+            data = self._io_utils.toByteArray(stream, length)
             return bytes(data)
         finally:
             stream.close()
@@ -126,7 +128,7 @@ class HadoopFs:
         # not propagate back — use commons-io (on Spark's classpath) instead.
         stream = self._fs.open(self.path(uri))
         try:
-            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            data = self._io_utils.toByteArray(stream)
             return bytes(data)
         finally:
             stream.close()

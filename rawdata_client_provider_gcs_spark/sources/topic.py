@@ -89,6 +89,28 @@ def _encode_parquet_rows(
     return buf.getvalue()
 
 
+def overlap_groups(
+    manifest: list[tuple[str, FileManifestEntry]], max_ts: dict[str, int]
+) -> list[list[tuple[str, FileManifestEntry]]]:
+    """Split a from-ts-sorted manifest into runs of time-overlapping files.
+
+    A group closes when the next file starts after the group's running
+    max event time, so every message of a group precedes (by ULID) every
+    message of the next one.  A file without a sidecar entry counts its
+    from-ts as its max: the reference's disjointness assumption, as in
+    :meth:`Topic.prune_from_timestamp`.
+    """
+    groups: list[list[tuple[str, FileManifestEntry]]] = []
+    group_max = None
+    for path, entry in manifest:
+        if group_max is None or entry.from_ts_ms > group_max:
+            groups.append([])
+            group_max = entry.from_ts_ms
+        groups[-1].append((path, entry))
+        group_max = max(group_max, max_ts.get(entry.filename, entry.from_ts_ms))
+    return groups
+
+
 class ConcurrentMaintenanceError(RuntimeError):
     """Another maintenance operation (compact/expire) holds the topic lock."""
 
@@ -153,7 +175,10 @@ class Topic:
         return out
 
     def prune_from_timestamp(
-        self, manifest: list[tuple[str, FileManifestEntry]], ts_ms: int
+        self,
+        manifest: list[tuple[str, FileManifestEntry]],
+        ts_ms: int,
+        max_ts: dict[str, int] | None = None,
     ) -> list[tuple[str, FileManifestEntry]]:
         """Files that can contain events at/after ``ts_ms``.
 
@@ -167,8 +192,11 @@ class Topic:
         not.  Every engine-written file records its max event time in the
         sidecar manifest (see :meth:`load_max_ts`); any file *before* the
         floor whose ``[from_ts, max_ts]`` still reaches ``ts`` is retained
-        too.  Files without a sidecar entry (reference-written) keep the
-        reference's disjointness assumption.
+        too, and the floor file itself is dropped when its max_ts ends
+        before ``ts`` (a seek into the gap after it).  Files without a
+        sidecar entry (reference-written) keep the reference's
+        disjointness assumption.  Pass ``max_ts`` when the caller already
+        holds the sidecar table; otherwise it is read here when needed.
         """
         start = 0
         for i, (_, entry) in enumerate(manifest):
@@ -176,12 +204,16 @@ class Topic:
                 start = i
         if start == 0:
             return manifest
-        max_ts = self.load_max_ts()
-        return [
-            pe
-            for i, pe in enumerate(manifest)
-            if i >= start or max_ts.get(pe[1].filename, -1) >= ts_ms
-        ]
+        if max_ts is None:
+            max_ts = self.load_max_ts()
+
+        def may_reach(i: int, entry: FileManifestEntry) -> bool:
+            hi = max_ts.get(entry.filename)
+            if hi is None:
+                return i >= start
+            return hi >= ts_ms
+
+        return [pe for i, pe in enumerate(manifest) if may_reach(i, pe[1])]
 
     # -- sidecar manifest (engine-only; invisible to stream listings) -------
 
@@ -268,10 +300,25 @@ class Topic:
             manifest = self.prune_from_timestamp(manifest, from_ts_ms)
         if to_ts_ms is not None:
             manifest = [pe for pe in manifest if pe[1].from_ts_ms <= to_ts_ms]
+        df = self.read_files(manifest, ignore_corrupt=ignore_corrupt)
+        if from_ts_ms is not None:
+            df = df.filter(F.col("ulid_ts_ms") >= F.lit(from_ts_ms))
+        if to_ts_ms is not None:
+            df = df.filter(F.col("ulid_ts_ms") <= F.lit(to_ts_ms))
+        return df
+
+    def read_files(
+        self,
+        manifest: list[tuple[str, FileManifestEntry]],
+        ignore_corrupt: bool = False,
+    ) -> DataFrame:
+        """One unordered scan over exactly the listed manifest entries:
+        parquet files through the native reader, Avro files through
+        :meth:`_read_avro`, unioned by name."""
         if not manifest:
             return self.spark.createDataFrame([], MESSAGE_SCHEMA)
         pq_paths = [p for p, e in manifest if e.ext == "parquet"]
-        avro_paths = [p for p, e in manifest if e.ext == "avro"]
+        avro_paths = [p for p, e in manifest if e.ext != "parquet"]
         dfs = []
         if pq_paths:
             reader = self.spark.read.schema(MESSAGE_SCHEMA)
@@ -283,10 +330,6 @@ class Topic:
         df = dfs[0]
         for other in dfs[1:]:
             df = df.unionByName(other)
-        if from_ts_ms is not None:
-            df = df.filter(F.col("ulid_ts_ms") >= F.lit(from_ts_ms))
-        if to_ts_ms is not None:
-            df = df.filter(F.col("ulid_ts_ms") <= F.lit(to_ts_ms))
         return df
 
     def _read_avro(
@@ -338,21 +381,31 @@ class Topic:
         return self.dataframe(from_ts_ms, to_ts_ms).orderBy("ulid")
 
     def last_message_df(self) -> DataFrame:
-        """O(1 file) tail read: prune to the max-from-ts file, then top-1.
+        """Tail read: top-1 by ULID over the files that can hold the
+        newest message.
 
-        Replaces the reference's last-block-offset seek
-        (AvroRawdataClient.java:123-144) with manifest pruning +
-        ``TakeOrderedAndProject``.
+        Those are the file with the largest from-ts plus every file whose
+        sidecar max-ts reaches that from-ts: a compacted or event-time
+        file can start earlier yet end later.  Files without a sidecar
+        entry count their from-ts as their max (the reference's
+        disjointness assumption, as in :meth:`prune_from_timestamp`).  On
+        a topic of time-disjoint files that is one file, read with
+        ``TakeOrderedAndProject`` — the manifest-pruned analog of the
+        reference's last-block-offset seek (AvroRawdataClient.java:123-144).
         """
         manifest = self.list_manifest()
         if not manifest:
             return self.spark.createDataFrame([], MESSAGE_SCHEMA)
-        last_path, last_entry = manifest[-1]
-        if last_entry.ext == "parquet":
-            df = self.spark.read.schema(MESSAGE_SCHEMA).parquet(last_path)
-        else:
-            df = self._read_avro([last_path])
-        return df.orderBy(F.col("ulid").desc()).limit(1)
+        last_from = manifest[-1][1].from_ts_ms
+        max_ts = self.load_max_ts()
+        candidates = [
+            pe
+            for pe in manifest
+            if max_ts.get(pe[1].filename, pe[1].from_ts_ms) >= last_from
+        ]
+        return (
+            self.read_files(candidates).orderBy(F.col("ulid").desc()).limit(1)
+        )
 
     # -- write --------------------------------------------------------------
 
@@ -696,20 +749,10 @@ class Topic:
         if len(small) < 2:
             return [], []
         paths = [p for p, _ in small]
-        pq = [p for p, e in small if e.ext == "parquet"]
-        av = [p for p, e in small if e.ext != "parquet"]
-        parts = []
-        if pq:
-            parts.append(self.spark.read.schema(MESSAGE_SCHEMA).parquet(*pq))
-        if av:
-            # avro inputs compact into parquet output — compaction doubles
-            # as the reference-format -> engine-format migration step
-            parts.append(self._read_avro(av))
-        df = parts[0]
-        for other in parts[1:]:
-            df = df.unionByName(other)
+        # avro inputs compact into parquet output — compaction doubles as
+        # the reference-format -> engine-format migration step
         new_files = self.write_dataframe(
-            df,
+            self.read_files(small),
             range_partition=True,
             max_records_per_file=target_records_per_file,
         )

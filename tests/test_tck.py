@@ -482,3 +482,241 @@ def test_concurrent_maintenance_refused(spark, tmp_path):
         [],
         [],
     )
+
+
+def test_last_message_across_compacted_overlap(client):
+    """Regression: compacting non-adjacent small windows gives a file that
+    starts before a big window yet ends after it; lastMessage must return
+    the newest message, not the big window's last one."""
+    for name, n in (("s1", 3), ("big", 50), ("s2", 3)):
+        with client.producer("lm") as producer:
+            producer.publish(*[msg(f"{name}-{i}") for i in range(n)])
+    topic = client.topic("lm")
+    new_files, removed = topic.compact(
+        small_file_max_records=10, target_records_per_file=1000
+    )
+    assert len(new_files) == 1 and len(removed) == 2
+    assert topic.list_manifest()[-1][1].first_position == "big-0"
+    assert client.last_message("lm").position == "s2-2"
+
+
+def test_position_cursor_prunes_upper_bound(client, monkeypatch):
+    """cursor_of_position scans only files that can overlap its window
+    ``[approx - tol, approx + tol]``: the floor file (and overlaps), never
+    the files after the upper bound."""
+    from rawdata_client_provider_gcs_spark.sources.topic import Topic
+
+    t0 = 1_700_000_000_000
+    topic = client.topic("pcu")
+    for f in range(6):
+        topic.write_single_rows(
+            [
+                (ulid_mod.encode(t0 + f * 10_000 + i * 100, f), None, 0, f"p-{f}-{i}", {})
+                for i in range(10)
+            ]
+        )
+    scans = []
+    real = Topic.dataframe
+
+    def recording(self, *args, **kwargs):
+        df = real(self, *args, **kwargs)
+        scans.append(df)
+        return df
+
+    monkeypatch.setattr(Topic, "dataframe", recording)
+    target_ts = t0 + 20_000 + 300  # p-2-3
+    cur = client.cursor_of_position(
+        "pcu", "p-2-3", inclusive=True, approx_timestamp_ms=target_ts, tolerance_ms=500
+    )
+    assert cur.ulid == ulid_mod.encode(target_ts, 2)
+    (scan,) = scans
+    names = sorted(p.rsplit("/", 1)[-1] for p in scan.inputFiles())
+    assert len(names) == 1 and names[0].endswith("_p-2-0.parquet")
+    # the window is inclusive of its upper millisecond (reference overrun
+    # rule): a message exactly at approx + tol is found
+    edge = client.cursor_of_position(
+        "pcu", "p-3-0", inclusive=True,
+        approx_timestamp_ms=t0 + 29_500, tolerance_ms=500,
+    )
+    assert edge.ulid == ulid_mod.encode(t0 + 30_000, 3)
+    with pytest.raises(RawdataNoSuchPositionException):
+        client.cursor_of_position(
+            "pcu", "p-3-1", inclusive=True,
+            approx_timestamp_ms=t0 + 29_500, tolerance_ms=500,
+        )
+
+
+# -- the consumer's read path: head group pair, then a range-sorted tail -----
+
+
+def _spark_work(spark, fn):
+    """Run ``fn`` under a fresh job group; return ``(result, jobs,
+    shuffle_bytes)`` counted from the status tracker and status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"consumer-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    shuffle = 0
+    for jid in job_ids:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            stage = store.lastStageAttempt(sid)
+            shuffle += stage.shuffleReadBytes() + stage.shuffleWriteBytes()
+    return out, len(job_ids), shuffle
+
+
+def _write_windows(topic, windows, t0):
+    """One driver-written file per ``(start_offset_ms, count, step_ms)``
+    window; returns every written ULID."""
+    ulids = []
+    for w, (start, count, step) in enumerate(windows):
+        rows = [
+            (ulid_mod.encode(t0 + start + i * step, w * 1000 + i), None, 0, f"w{w}-{i}", {})
+            for i in range(count)
+        ]
+        topic.write_single_rows(rows)
+        ulids += [r[0] for r in rows]
+    return sorted(ulids)
+
+
+def _drain_all(consumer):
+    return [m.ulid for m in drain(consumer, 1_000_000)]
+
+
+def _assert_seeks_ordered_and_complete(client, name, truth, seek_points):
+    for ts in seek_points:
+        want = [u for u in truth if ulid_mod.timestamp_ms(u) >= ts]
+        got = _drain_all(client.consumer(name, seek_to_ts_ms=ts))
+        assert got == want, f"seek to {ts}"
+    # cursors inside the stream, both flags
+    for u in truth[:: max(1, len(truth) // 7)]:
+        inc = _drain_all(client.consumer(name, cursor=UlidCursor(u, True)))
+        assert inc == [x for x in truth if x >= u]
+        exc = _drain_all(client.consumer(name, cursor=UlidCursor(u, False)))
+        assert exc == [x for x in truth if x > u]
+
+
+def test_consumer_ordered_across_compacted_overlap_group(client):
+    """Compacting non-adjacent small files makes one file that overlaps
+    the big files between them: a group of three.  Seeks into, across and
+    after that group deliver every later message exactly once, in ULID
+    order, through both the head read and the range-sorted tail."""
+    from rawdata_client_provider_gcs_spark.sources.topic import overlap_groups
+
+    t0 = 1_700_000_000_000
+    topic = client.topic("og")
+    truth = _write_windows(
+        topic,
+        [
+            (0, 3, 7),            # small
+            (10_000, 40, 10),     # big
+            (20_000, 3, 7),       # small
+            (30_000, 40, 10),     # big
+            (40_000, 3, 7),       # small
+            (50_000, 40, 10),     # big
+            (60_000, 40, 10),     # big
+            (70_000, 40, 10),     # big
+        ],
+        t0,
+    )
+    new_files, removed = topic.compact(
+        small_file_max_records=10, target_records_per_file=1000
+    )
+    assert len(new_files) == 1 and len(removed) == 3
+    groups = overlap_groups(topic.list_manifest(), topic.load_max_ts())
+    assert [len(g) for g in groups] == [3, 1, 1, 1]
+    _assert_seeks_ordered_and_complete(
+        client,
+        "og",
+        truth,
+        [0, t0, t0 + 5, t0 + 10_200, t0 + 20_007, t0 + 25_000, t0 + 40_014,
+         t0 + 45_000, t0 + 50_390, t0 + 60_000, t0 + 79_000],
+    )
+
+
+def test_consumer_ordered_across_event_time_publish_overlap(client, spark):
+    """An event-time ``publish_dataframe`` whose times fall inside earlier
+    windows overlaps them; consumers stay ordered and complete."""
+    t0 = 1_700_000_000_000
+    topic = client.topic("ev")
+    _write_windows(
+        topic,
+        [(0, 30, 10), (1_000, 30, 10), (2_000, 30, 10), (3_000, 30, 10)],
+        t0,
+    )
+    late = spark.createDataFrame(
+        [(f"late-{i}", t0 + 150 + i * 37) for i in range(60)],
+        "position string, ts_ms long",
+    )
+    with client.producer("ev") as producer:
+        producer.publish_dataframe(late, ts_ms_col="ts_ms")
+    truth = sorted(bytes(r["ulid"]) for r in topic.dataframe().collect())
+    assert len(truth) == 180
+    _assert_seeks_ordered_and_complete(
+        client,
+        "ev",
+        truth,
+        [t0, t0 + 100, t0 + 1_111, t0 + 2_150, t0 + 2_500, t0 + 3_100, t0 + 3_300],
+    )
+
+
+def test_seek_read_of_part_of_a_file_runs_no_shuffle(client, spark):
+    """Seeking and reading fewer messages than one file holds is one
+    scan of the cursor's group pair: no sampling job, no shuffle."""
+    t0 = 1_700_000_000_000
+    topic = client.topic("ns")
+    truth = _write_windows(topic, [(i * 1_000, 20, 10) for i in range(12)], t0)
+
+    def seek_and_read():
+        consumer = client.consumer("ns", seek_to_ts_ms=t0 + 5_050)
+        return [consumer.receive(0).ulid for _ in range(5)]
+
+    got, jobs, shuffle = _spark_work(spark, seek_and_read)
+    start = truth.index(ulid_mod.encode(t0 + 5_050, 5 * 1000 + 5))
+    assert got == truth[start : start + 5]
+    assert jobs == 1
+    assert shuffle == 0
+
+
+def test_full_drain_job_count_does_not_grow_with_files(client, spark):
+    """A full drain runs a fixed number of Spark jobs however many files
+    the topic holds: the head is one job, the tail one range-sorted scan."""
+    t0 = 1_700_000_000_000
+    counts = {}
+    for n_files in (6, 24):
+        name = f"jc{n_files}"
+        truth = _write_windows(
+            client.topic(name), [(i * 1_000, 10, 10) for i in range(n_files)], t0
+        )
+        got, jobs, _ = _spark_work(spark, lambda: _drain_all(client.consumer(name)))
+        assert got == truth
+        counts[n_files] = jobs
+    assert counts[24] <= counts[6], counts
+
+
+def test_tail_poll_after_head_and_tail(client):
+    """A consumer that drained a multi-file topic (head then tail) picks
+    up files created after it subscribed, in order, without repeats."""
+    t0 = 1_700_000_000_000
+    topic = client.topic("tp")
+    first = _write_windows(topic, [(i * 1_000, 5, 10) for i in range(5)], t0)
+    consumer = client.consumer("tp")
+    assert _drain_all(consumer) == first
+    later = [
+        (ulid_mod.encode(t0 + 10_000 + i, 99_000 + i), None, 0, f"late-{i}", {})
+        for i in range(3)
+    ]
+    topic.write_single_rows(later[:2])
+    topic.write_single_rows(later[2:])
+    got = [consumer.receive(10.0).ulid for _ in range(3)]
+    assert got == [r[0] for r in later]
+    assert consumer.receive(0) is None
