@@ -88,27 +88,18 @@ class RawdataMetadataClient:
     ) -> "RawdataMetadataClient":
         """Store ``value`` under ``key``.
 
-        ``atomic=True`` writes via temp-object + rename so a crash
-        mid-write can never leave a torn value — required for markers
-        whose parse failure would wedge a consumer (the streaming sink's
-        epoch marker).  The plain path matches the reference's
+        ``atomic=True`` commits through :meth:`HadoopFs.replace_object`
+        (temp-object + rename) so a crash mid-write can never leave a torn
+        value — required for markers whose parse failure would wedge a
+        consumer (the streaming sink's epoch marker).  The plain path matches the reference's
         create/overwrite semantics (FilesystemRawdataMetadataClient.java:62-68).
         """
         self._fs.mkdirs(self._dir)
         final = f"{self._dir}/{escape_key(key)}"
-        if not atomic:
+        if atomic:
+            self._fs.replace_object(final, value)
+        else:
             self._fs.write_bytes(final, value)
-            return self
-        import uuid as _uuid
-
-        tmp = f"{final}.tmp-{_uuid.uuid4().hex}"
-        self._fs.write_bytes(tmp, value)
-        if not self._fs.rename(tmp, final):
-            # scheme refuses rename-over-existing: replace non-atomically
-            self._fs.delete(final)
-            if not self._fs.rename(tmp, final):
-                self._fs.delete(tmp)
-                raise IOError(f"metadata replace failed: {final}")
         return self
 
     def remove(self, key: str) -> "RawdataMetadataClient":

@@ -244,7 +244,28 @@ def avro_datasource_available(spark) -> bool:
     return _DATASOURCE_PROBE[key]
 
 
-def messages_from_binary_files(files_df, ignore_corrupt: bool = False):
+def envelope_to_messages(envelope_df):
+    """Project reference-envelope rows (spark-avro's columns) onto
+    MESSAGE_SCHEMA: the fixed 16-byte ``id`` is the ULID, and its first
+    six bytes are the big-endian millisecond timestamp."""
+    from pyspark.sql import functions as F
+
+    ulid = F.col("id").cast("binary")
+    return envelope_df.select(
+        ulid.alias("ulid"),
+        F.conv(F.hex(F.substring(ulid, 1, 6)), 16, 10)
+        .cast("long")
+        .alias("ulid_ts_ms"),
+        F.col("orderingGroup").alias("ordering_group"),
+        F.col("sequenceNumber").alias("sequence_number"),
+        F.col("position"),
+        F.col("data"),
+    )
+
+
+def messages_from_binary_files(
+    files_df, ignore_corrupt: bool = False, with_file: bool = False
+):
     """Distributed decode: ``binaryFile`` rows -> MESSAGE_SCHEMA rows.
 
     One Python task per Avro file (they are rotation-window sized by
@@ -257,14 +278,26 @@ def messages_from_binary_files(files_df, ignore_corrupt: bool = False):
     for the read-through-availability contract: an undecodable container
     (bad magic, torn block, truncated deflate) contributes nothing
     instead of failing the scan.
+
+    ``with_file`` appends a ``file`` column carrying each row's
+    ``binaryFile`` path — the rows are synthesized here, so
+    ``input_file_name()`` is empty downstream of this decode.
     """
+    from pyspark.sql.types import StringType, StructField, StructType
+
     from ..datamodel import MESSAGE_SCHEMA
+
+    schema = MESSAGE_SCHEMA
+    if with_file:
+        schema = StructType(
+            MESSAGE_SCHEMA.fields + [StructField("file", StringType())]
+        )
 
     def decode(iterator):
         import pandas as pd
 
         for pdf in iterator:
-            for content in pdf["content"]:
+            for path, content in zip(pdf["path"], pdf["content"]):
                 try:
                     rows = decode_container(bytes(content))
                 except Exception:
@@ -273,7 +306,7 @@ def messages_from_binary_files(files_df, ignore_corrupt: bool = False):
                     raise
                 if not rows:
                     continue
-                yield pd.DataFrame(
+                out = pd.DataFrame(
                     {
                         "ulid": [r[0] for r in rows],
                         "ulid_ts_ms": [
@@ -285,37 +318,8 @@ def messages_from_binary_files(files_df, ignore_corrupt: bool = False):
                         "data": [r[4] for r in rows],
                     }
                 )
+                if with_file:
+                    out["file"] = path
+                yield out
 
-    return files_df.select("content").mapInPandas(decode, MESSAGE_SCHEMA)
-
-
-def stats_from_binary_files(files_df):
-    """Per-file manifest facts for the commit protocol: one stats row per
-    Avro part file, computed executor-side (no row-level shuffle)."""
-
-    def stats(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                rows = decode_container(bytes(content))
-                if not rows:
-                    continue
-                first = min(rows, key=lambda r: r[0])
-                yield pd.DataFrame(
-                    {
-                        "file": [path],
-                        "from_ts_ms": [int.from_bytes(first[0][:6], "big")],
-                        "max_ts_ms": [
-                            max(int.from_bytes(r[0][:6], "big") for r in rows)
-                        ],
-                        "cnt": [len(rows)],
-                        "first_position": [first[3]],
-                    }
-                )
-
-    return files_df.select("path", "content").mapInPandas(
-        stats,
-        "file string, from_ts_ms long, max_ts_ms long, cnt long, "
-        "first_position string",
-    )
+    return files_df.select("path", "content").mapInPandas(decode, schema)

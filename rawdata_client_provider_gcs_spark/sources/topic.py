@@ -12,11 +12,16 @@ Spark-first mapping (SURVEY.md §3.4/§4):
   listing — the analog of the reference's ``NavigableMap.floorEntry``,
   AvroRawdataConsumer.java:153-157) and row-level predicates push down to
   the columnar scan.
-- **Write** = executors write task files via the commit protocol (this
-  replaces the reference's upload thread + pre-upload verification,
-  AvroRawdataProducer.java:101-133,192-198), then a driver-side pass renames
-  each committed file to its manifest name.  ``repartitionByRange(ulid)``
-  before ordered bulk writes keeps per-file min-ulid manifests truthful.
+- **Write** = a window encoded on the driver (producer flush,
+  :meth:`Topic.write_single_rows`) or task files written by executors via
+  the commit protocol (:meth:`Topic.write_dataframe`; this replaces the
+  reference's upload thread + pre-upload verification,
+  AvroRawdataProducer.java:101-133,192-198).  Both land through one path,
+  :meth:`Topic._land`: the files' max-ts sidecar entries first, then each
+  rename to its manifest name, so no reader lists a file without its
+  entry.  ``repartitionByRange(ulid)`` before ordered bulk writes keeps
+  per-file min-ulid manifests truthful.  Files leave through one path too,
+  :meth:`Topic._retire` (delete or quarantine, then one sidecar removal).
 """
 
 from __future__ import annotations
@@ -314,62 +319,78 @@ class Topic:
     ) -> DataFrame:
         """One unordered scan over exactly the listed manifest entries:
         parquet files through the native reader, Avro files through
-        :meth:`_read_avro`, unioned by name."""
+        spark-avro or the pure-Python envelope codec, unioned by name."""
         if not manifest:
             return self.spark.createDataFrame([], MESSAGE_SCHEMA)
-        pq_paths = [p for p, e in manifest if e.ext == "parquet"]
-        avro_paths = [p for p, e in manifest if e.ext != "parquet"]
+        return self._scan([(p, e.ext) for p, e in manifest], ignore_corrupt)
+
+    def per_file_agg(
+        self, files: list[tuple[str, str]], *aggs, ignore_corrupt: bool = False
+    ) -> DataFrame:
+        """One distributed aggregate per data file: a ``file`` column (the
+        file's URI) plus ``aggs`` over its rows, for ``(path, ext)``
+        pairs of any format.  Files that yield no rows have no output
+        row.  Backs the commit's manifest facts, :meth:`fsck` and the
+        sketch sidecar (:mod:`.topic_stats`)."""
+        return (
+            self._scan(files, ignore_corrupt, with_file=True)
+            .groupBy("file")
+            .agg(*aggs)
+        )
+
+    def _scan(
+        self,
+        files: list[tuple[str, str]],
+        ignore_corrupt: bool,
+        with_file: bool = False,
+    ) -> DataFrame:
+        """Distributed scan of ``(path, ext)`` pairs in MESSAGE_SCHEMA,
+        plus a ``file`` column when ``with_file``.
+
+        Avro files are read by the native datasource when spark-avro is
+        on the classpath; otherwise each file is decoded by the engine's
+        pure-Python envelope codec — one task per file, Arrow out (files
+        are rotation-window sized by construction, S1), so a large topic
+        still reads in parallel across executors.  ``ignore_corrupt``
+        gives every branch the parquet reader's ``ignoreCorruptFiles``
+        read-through contract.
+        """
+        pq_paths = [p for p, ext in files if ext == "parquet"]
+        avro_paths = [p for p, ext in files if ext != "parquet"]
         dfs = []
         if pq_paths:
             reader = self.spark.read.schema(MESSAGE_SCHEMA)
             if ignore_corrupt:
                 reader = reader.option("ignoreCorruptFiles", "true")
-            dfs.append(reader.parquet(*pq_paths))
-        if avro_paths:
-            dfs.append(self._read_avro(avro_paths, ignore_corrupt=ignore_corrupt))
+            df = reader.parquet(*pq_paths)
+            if with_file:
+                df = df.withColumn("file", F.input_file_name())
+            dfs.append(df)
+        if avro_paths and avro_codec.avro_datasource_available(self.spark):
+            reader = self.spark.read.format("avro")
+            if ignore_corrupt:
+                reader = reader.option("ignoreCorruptFiles", "true")
+            df = avro_codec.envelope_to_messages(reader.load(avro_paths))
+            if with_file:
+                df = df.withColumn("file", F.input_file_name())
+            dfs.append(df)
+        elif avro_paths:
+            reader = self.spark.read.format("binaryFile")
+            if ignore_corrupt:
+                # covers unreadable-as-bytes files (size-mismatched torn
+                # uploads); the codec flag below covers undecodable contents
+                reader = reader.option("ignoreCorruptFiles", "true")
+            dfs.append(
+                avro_codec.messages_from_binary_files(
+                    reader.load(avro_paths),
+                    ignore_corrupt=ignore_corrupt,
+                    with_file=with_file,
+                )
+            )
         df = dfs[0]
         for other in dfs[1:]:
             df = df.unionByName(other)
         return df
-
-    def _read_avro(
-        self, paths: list[str], ignore_corrupt: bool = False
-    ) -> DataFrame:
-        """Distributed scan of reference-format Avro topic files.
-
-        With spark-avro on the classpath the native datasource does the
-        scan (columnar, splittable); otherwise each file is decoded by the
-        engine's pure-Python envelope codec — one task per file, Arrow out
-        (files are rotation-window sized by construction, S1), so a large
-        topic still reads in parallel across executors.
-
-        ``ignore_corrupt`` gives both branches the same read-through
-        contract as the parquet reader's ``ignoreCorruptFiles``.
-        """
-        if avro_codec.avro_datasource_available(self.spark):
-            reader = self.spark.read.format("avro")
-            if ignore_corrupt:
-                reader = reader.option("ignoreCorruptFiles", "true")
-            raw = reader.load(paths)
-            return raw.select(
-                F.col("id").cast("binary").alias("ulid"),
-                F.conv(F.hex(F.substring(F.col("id").cast("binary"), 1, 6)), 16, 10)
-                .cast("long")
-                .alias("ulid_ts_ms"),
-                F.col("orderingGroup").alias("ordering_group"),
-                F.col("sequenceNumber").alias("sequence_number"),
-                F.col("position"),
-                F.col("data"),
-            )
-        reader = self.spark.read.format("binaryFile")
-        if ignore_corrupt:
-            # covers unreadable-as-bytes files (size-mismatched torn
-            # uploads); the codec flag below covers undecodable contents
-            reader = reader.option("ignoreCorruptFiles", "true")
-        files = reader.load(paths)
-        return avro_codec.messages_from_binary_files(
-            files, ignore_corrupt=ignore_corrupt
-        )
 
     def ordered_dataframe(
         self,
@@ -435,28 +456,17 @@ class Topic:
         if not parts:
             self.fs.delete(tmp_uri, recursive=True)
             return []
-        if ext == "parquet":
-            stats_df = (
-                self.spark.read.schema(MESSAGE_SCHEMA)
-                .parquet(*[p for p, _ in parts])
-                .groupBy(F.input_file_name().alias("file"))
-                .agg(
-                    F.min("ulid_ts_ms").alias("from_ts_ms"),
-                    F.max("ulid_ts_ms").alias("max_ts_ms"),
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.min_by("position", "ulid").alias("first_position"),
-                )
-            )
-        else:
-            files = self.spark.read.format("binaryFile").load(
-                [p for p, _ in parts]
-            )
-            stats_df = avro_codec.stats_from_binary_files(files)
-        stats = stats_df.collect()
+        stats = self.per_file_agg(
+            [(p, ext) for p, _ in parts],
+            F.min("ulid_ts_ms").alias("from_ts_ms"),
+            F.max("ulid_ts_ms").alias("max_ts_ms"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.min_by("position", "ulid").alias("first_position"),
+        ).collect()
         size_by_name = {p.rsplit("/", 1)[-1]: s for p, s in parts}
         path_by_name = {p.rsplit("/", 1)[-1]: p for p, _ in parts}
         renames: list[tuple[str, str]] = []
-        maxts_add: dict[str, int] = {}
+        max_ts_of: dict[str, int] = {}
         for row in stats:
             part_name = row["file"].rsplit("/", 1)[-1]
             src = path_by_name[part_name]
@@ -468,7 +478,7 @@ class Topic:
                 ext=ext,
             )
             renames.append((src, f"{self.uri}/{filename}"))
-            maxts_add[filename] = row["max_ts_ms"]
+            max_ts_of[filename] = row["max_ts_ms"]
         # logical-twin scan BEFORE anything lands: a replayed commit (the
         # streaming sink's write-then-epoch crash window, or an idempotent
         # re-append of the same rows) re-produces the same logical windows,
@@ -479,82 +489,111 @@ class Topic:
         # (from-ts, count, first-position, ext) on the same deterministic
         # range partitioning mean the same row set; converge on the
         # already-committed twin instead of duplicating it.
-        twin_by_facts: dict[tuple, tuple[str, str]] = {}
+        twin_by_facts: dict[tuple, str] = {}
         for path, _size in self.fs.list_files(self.uri):
-            name = path.rsplit("/", 1)[-1]
             try:
-                have = decode_filename(name)
+                have = decode_filename(path.rsplit("/", 1)[-1])
             except Exception:
                 continue
             twin_by_facts[
                 (have.from_ts_ms, have.count, have.first_position, have.ext)
-            ] = (name, path)
+            ] = path
         if pre_commit is not None:
             pre_commit([dst.rsplit("/", 1)[-1] for _, dst in renames])
-        # sidecar entries land BEFORE the renames: a reader that lists the
-        # topic between a rename and the sidecar write must still see a
-        # max-ts entry for the new (possibly time-overlapping) file, or
-        # prune_from_timestamp would fall back to the disjointness
-        # assumption and over-prune; entries for files not yet visible in
-        # listings are harmless
-        self._update_max_ts(add=maxts_add)
-        # tmp dir stays invisible to listings until each rename lands, so
-        # parallel renames keep crash consistency: a crash mid-commit leaves
-        # a valid (shorter) topic plus an orphaned .tmp dir, never a torn file
-        converged_orphans: list[str] = []
-
-        def _do(pair: tuple[str, str]) -> str:
-            """Rename, or converge on an earlier attempt's committed twin.
-
-            The twin check runs BEFORE the rename: a replayed window's
-            byte size (and therefore its name) usually differs from the
-            committed twin's, so the rename would succeed and duplicate
-            the rows — and on POSIX ``file://`` even an exact-name rename
-            replaces silently rather than failing.
-            """
-            src, dst = pair
-            dst_name = dst.rsplit("/", 1)[-1]
-            want = decode_filename(dst_name)
+        final_paths = []
+        to_land = []
+        for src, dst in renames:
+            name = dst.rsplit("/", 1)[-1]
+            want = decode_filename(name)
             twin = twin_by_facts.get(
                 (want.from_ts_ms, want.count, want.first_position, want.ext)
             )
-            if twin is not None:
-                twin_name, twin_path = twin
+            if twin is None:
+                to_land.append((src, dst))
+                final_paths.append(dst)
+            else:
+                # the twin keeps its own sidecar entry; this copy never lands
                 self.fs.delete(src)
-                if twin_name != dst_name:
-                    converged_orphans.append(dst_name)
-                return twin_path
-            if self.fs.rename(src, dst):
-                return dst
-            raise IOError(f"rename failed: {src} -> {dst}")
+                del max_ts_of[name]
+                final_paths.append(twin)
+        self._land(to_land, max_ts_of)
+        self.fs.delete(tmp_uri, recursive=True)
+        return final_paths
+
+    def _land(self, pairs: list[tuple[str, str]], max_ts: dict[str, int]) -> None:
+        """Make written files visible: the one commit path of every write.
+
+        ``pairs`` are ``(src, dst)`` renames from invisible temp names to
+        manifest names; ``max_ts`` maps each dst filename to its max
+        event time.  The sidecar entries land BEFORE the renames: a
+        reader that lists the topic between a rename and a later sidecar
+        write would see no max-ts entry for the new (possibly
+        time-overlapping) file, and :meth:`prune_from_timestamp` would
+        fall back to the disjointness assumption and over-prune; entries
+        for files not yet visible are harmless.  More than two renames
+        run on a thread pool; sources stay invisible until each rename
+        lands, so a crash mid-way leaves a valid (shorter) topic, never a
+        torn file.  On failure the entries of exactly the renames that
+        did not land are dropped (best effort, so failed commits don't
+        accrete orphans; ``compact`` sweeps stragglers) and the error is
+        raised.
+        """
+        if not pairs:
+            return
+        self._update_max_ts(add=max_ts)
+        landed: set[str] = set()
+
+        def rename(pair: tuple[str, str]) -> None:
+            src, dst = pair
+            if not self.fs.rename(src, dst):
+                raise IOError(f"rename failed: {src} -> {dst}")
+            landed.add(dst)
 
         try:
-            if len(renames) <= 2:
-                final_paths = [_do(p) for p in renames]
+            if len(pairs) <= 2:
+                for pair in pairs:
+                    rename(pair)
             else:
-                with ThreadPoolExecutor(
-                    max_workers=min(32, len(renames))
-                ) as pool:
-                    final_paths = list(pool.map(_do, renames))
+                with ThreadPoolExecutor(max_workers=min(32, len(pairs))) as pool:
+                    list(pool.map(rename, pairs))
         except Exception:
-            # best-effort: drop the just-added sidecar entries for files
-            # whose rename never landed, so failed commits don't accrete
-            # orphan entries (entries are harmless for pruning but would
-            # otherwise grow without bound; compact() sweeps stragglers)
             try:
-                listed = {p.rsplit("/", 1)[-1] for p, _ in self.fs.list_files(self.uri)}
-                missing = [name for name in maxts_add if name not in listed]
-                if missing:
-                    self._update_max_ts(remove=missing)
+                self._update_max_ts(
+                    remove=[
+                        dst.rsplit("/", 1)[-1]
+                        for _, dst in pairs
+                        if dst not in landed
+                    ]
+                )
             except Exception:
                 pass
             raise
-        if converged_orphans:
-            # sidecar entries were pre-added under the fresh names; the
-            # converged twins keep their own entries, so drop the orphans
-            self._update_max_ts(remove=converged_orphans)
-        self.fs.delete(tmp_uri, recursive=True)
-        return final_paths
+
+    def _retire(self, paths: list[str], quarantine: bool = False) -> list[str]:
+        """Take data files out of the topic: the one exit path.
+
+        Deletes each path (or, with ``quarantine``, renames it into the
+        topic's ``quarantine/`` folder, invisible to the non-recursive
+        data listing), THEN drops the sidecar entries in one update — an
+        entry without a file is harmless, a listed file without its entry
+        is not.  Deletes are idempotent, so every named entry goes; a
+        quarantine move that fails keeps its file and entry.  Returns the
+        retired filenames.
+        """
+        names = [p.rsplit("/", 1)[-1] for p in paths]
+        if quarantine:
+            self.fs.mkdirs(f"{self.uri}/quarantine")
+            names = [
+                name
+                for path, name in zip(paths, names)
+                if self.fs.rename(path, f"{self.uri}/quarantine/{name}")
+            ]
+        else:
+            for path in paths:
+                self.fs.delete(path)
+        if names:
+            self._update_max_ts(remove=names)
+        return names
 
     def rollback_files(self, names: list[str]) -> None:
         """Remove files (and their sidecar entries) from a failed commit.
@@ -563,10 +602,7 @@ class Topic:
         remains of a crashed micro-batch before rewriting it.  Idempotent:
         missing files and absent sidecar entries are fine.
         """
-        for name in names:
-            self.fs.delete(f"{self.uri}/{name}")
-        if names:
-            self._update_max_ts(remove=list(names))
+        self._retire([f"{self.uri}/{name}" for name in names])
 
     def write_dataframe(
         self,
@@ -756,18 +792,13 @@ class Topic:
             range_partition=True,
             max_records_per_file=target_records_per_file,
         )
-        for path in paths:
-            self.fs.delete(path)
-        # sweep sidecar entries for the deleted inputs plus any orphans
-        # left by crashed commits (files that never landed in a listing)
+        self._retire(paths)
+        # sweep sidecar entries left by crashed commits (files that never
+        # landed in a listing)
         listed = {p.rsplit("/", 1)[-1] for p, _ in self.fs.list_files(self.uri)}
-        deleted = [p.rsplit("/", 1)[-1] for p in paths]
-        orphans = [
-            name
-            for name in self.load_max_ts()
-            if name not in listed and name not in deleted
-        ]
-        self._update_max_ts(remove=deleted + orphans)
+        orphans = [name for name in self.load_max_ts() if name not in listed]
+        if orphans:
+            self._update_max_ts(remove=orphans)
         return new_files, paths
 
     @_with_maintenance_lock
@@ -813,7 +844,7 @@ class Topic:
         next_ref_from: dict[int, int] = {}
         for pos, i in enumerate(no_sidecar[:-1]):
             next_ref_from[i] = manifest[no_sidecar[pos + 1]][1].from_ts_ms
-        deletable: list[tuple[str, str]] = []
+        deletable: list[str] = []
         for i, (path, entry) in enumerate(manifest):
             hi = max_ts.get(entry.filename)
             if hi is None:
@@ -825,12 +856,9 @@ class Topic:
                 # rotation can split mid-millisecond (ULIDs order sub-ms),
                 # and an exclusive bound would over-delete boundary events
             if hi < ts_ms:
-                deletable.append((path, entry.filename))
-        for path, _ in deletable:
-            self.fs.delete(path)
-        if deletable:
-            self._update_max_ts(remove=[name for _, name in deletable])
-        return [path for path, _ in deletable]
+                deletable.append(path)
+        self._retire(deletable)
+        return deletable
 
     def _probe_magic_distributed(self, paths: list[str]) -> dict[str, bool]:
         """{filename: magic-ok} from a distributed byte probe.
@@ -947,15 +975,7 @@ class Topic:
                 bad.append(path)
         if not bad:
             return []
-        self.fs.mkdirs(f"{self.uri}/quarantine")
-        moved = []
-        for path in bad:
-            name = path.rsplit("/", 1)[-1]
-            if self.fs.rename(path, f"{self.uri}/quarantine/{name}"):
-                moved.append(name)
-        if moved:
-            self._update_max_ts(remove=moved)
-        return moved
+        return self._retire(bad, quarantine=True)
 
     def fsck(self) -> DataFrame:
         """Audit manifest facts against file contents, distributed.
@@ -971,42 +991,24 @@ class Topic:
 
         Returns ``(filename, expected_count, actual_count, expected_from_ts_ms,
         actual_from_ts_ms, ok)`` — one scan over the topic, grouped by
-        ``input_file_name`` for parquet and probed per file for the
-        pure-Python Avro path (rotation-window sized by construction).
+        file (:meth:`per_file_agg`), whatever the files' formats.
         """
         manifest = self.list_manifest()
         expected = {
             p.rsplit("/", 1)[-1]: (e.count, e.from_ts_ms) for p, e in manifest
         }
-        rows: list[tuple[str, int, int]] = []
-        pq = [p for p, e in manifest if e.ext == "parquet"]
-        av = [p for p, e in manifest if e.ext != "parquet"]
-        if pq:
-            got = (
-                # a corrupt file must show up as a failed row, not kill
-                # the audit that exists to find it (actual_count 0 +
-                # quarantine_corrupt is the repair path)
-                self.spark.read.schema(MESSAGE_SCHEMA)
-                .option("ignoreCorruptFiles", "true")
-                .parquet(*pq)
-                .groupBy(F.input_file_name().alias("f"))
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min("ulid_ts_ms").alias("t0"),
-                )
-                .collect()
-            )
-            rows += [
-                (r["f"].rsplit("/", 1)[-1], r["n"], r["t0"]) for r in got
-            ]
-        for p in av:
-            # tolerant per-file read: a corrupt container must land as a
-            # flagged row (actual 0), not abort the audit
-            r = self._read_avro([p], ignore_corrupt=True).agg(
-                F.count(F.lit(1)).alias("n"), F.min("ulid_ts_ms").alias("t0")
-            ).first()
-            rows.append((p.rsplit("/", 1)[-1], r["n"], r["t0"]))
-        actual = {name: (n, t0) for name, n, t0 in rows}
+        # a corrupt file must show up as a failed row, not kill the audit
+        # that exists to find it (actual_count 0 + quarantine_corrupt is
+        # the repair path)
+        actual = {}
+        if manifest:
+            got = self.per_file_agg(
+                [(p, e.ext) for p, e in manifest],
+                F.count(F.lit(1)).alias("n"),
+                F.min("ulid_ts_ms").alias("t0"),
+                ignore_corrupt=True,
+            ).collect()
+            actual = {r["file"].rsplit("/", 1)[-1]: (r["n"], r["t0"]) for r in got}
         out = []
         for name, (exp_n, exp_t0) in expected.items():
             act_n, act_t0 = actual.get(name, (0, None))
@@ -1117,26 +1119,6 @@ class Topic:
         report["describe"] = self.describe()
         return report
 
-    def write_single_file(self, df: DataFrame, ext: str = "parquet") -> list[str]:
-        """Producer-flush path: one buffered window → one topic file.
-
-        A flush window is driver-buffered and size-bounded by contract, so
-        the rows are collected and written driver-side via
-        :meth:`write_single_rows` — no Spark job for data that never left
-        the driver.  Use :meth:`write_dataframe` for distributed data.
-        """
-        rows = [
-            (
-                bytes(r["ulid"]),
-                r["ordering_group"],
-                r["sequence_number"],
-                r["position"],
-                {k: bytes(v) for k, v in (r["data"] or {}).items()},
-            )
-            for r in df.collect()
-        ]
-        return self.write_single_rows(rows, ext=ext)
-
     def write_single_rows(
         self,
         rows: list[tuple[bytes, str | None, int, str, dict[str, bytes]]],
@@ -1175,7 +1157,5 @@ class Topic:
         tmp = f"{self.uri}/.tmp-{uuid.uuid4().hex}.{ext}"
         self.fs.write_bytes(tmp, blob)
         dst = f"{self.uri}/{filename}"
-        if not self.fs.rename(tmp, dst):
-            raise IOError(f"rename failed: {tmp} -> {dst}")
-        self._update_max_ts(add={filename: ts_of(rows[-1][0])})
+        self._land([(tmp, dst)], {filename: ts_of(rows[-1][0])})
         return [dst]

@@ -57,40 +57,17 @@ def _store_sketches(topic, table: dict) -> None:
 
 
 def _sketch_files(topic, paths: list[str], exts: dict, column: str, lg_k: int):
-    """Per-file sketches for ``paths`` — one distributed aggregate per
-    format, grouped by ``input_file_name`` so each file yields one row."""
-    out: dict[str, str] = {}
-    pq = [p for p in paths if exts[p] == "parquet"]
-    av = [p for p in paths if exts[p] != "parquet"]
-    if pq:
-        from ..datamodel import MESSAGE_SCHEMA
-
-        rows = (
-            topic.spark.read.schema(MESSAGE_SCHEMA)
-            .parquet(*pq)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(F.expr(f"hll_sketch_agg({column}, {lg_k})").alias("sk"))
-            .collect()
-        )
-        for r in rows:
-            if r["sk"] is None:  # column all-NULL in this file
-                continue
-            name = r["file"].rsplit("/", 1)[-1]
-            out[name] = base64.b64encode(bytes(r["sk"])).decode()
-    # the pure-Python avro fallback synthesizes rows in mapInPandas, so
-    # input_file_name() is empty there — sketch file-at-a-time instead
-    # (files are rotation-window sized by construction, S1)
-    for p in av:
-        row = (
-            topic._read_avro([p])
-            .agg(F.expr(f"hll_sketch_agg({column}, {lg_k})").alias("sk"))
-            .first()
-        )
-        if row["sk"] is not None:
-            out[p.rsplit("/", 1)[-1]] = base64.b64encode(
-                bytes(row["sk"])
-            ).decode()
-    return out
+    """Per-file sketches for ``paths`` — one distributed aggregate over
+    every format, grouped by file so each file yields one row."""
+    rows = topic.per_file_agg(
+        [(p, exts[p]) for p in paths],
+        F.expr(f"hll_sketch_agg({column}, {lg_k})").alias("sk"),
+    ).collect()
+    return {
+        r["file"].rsplit("/", 1)[-1]: base64.b64encode(bytes(r["sk"])).decode()
+        for r in rows
+        if r["sk"] is not None  # column all-NULL in this file
+    }
 
 
 def refresh_sketches(

@@ -4,10 +4,11 @@ Completes the streaming story's write side.  The reference producer
 appends to a topic continuously (AvroRawdataProducer.java:148-152 rotates
 and uploads on its window triggers); the Spark-native equivalent is a
 ``writeStream`` whose micro-batches land through the topic's existing
-commit protocol (temp dir → manifest-named rename,
-``sources/topic.py:_commit_part_files``), so every file a streaming sink
-produces is indistinguishable from a batch-written one: manifest-named,
-time-disjoint when range-partitioned, prunable, tailable.
+commit protocol (``Topic.write_dataframe``: part files in a temp dir, then
+``Topic._land`` adds their max-ts sidecar entries and renames each to its
+manifest name — the same landing path as a producer flush), so every file
+a streaming sink produces is indistinguishable from a batch-written one:
+manifest-named, time-disjoint when range-partitioned, prunable, tailable.
 
 Exactly-once: Spark replays the in-flight micro-batch after a failure
 (same ``batch_id``), so the sink records its progress in the topic's

@@ -92,16 +92,7 @@ def _stream_avro(
             .option("recursiveFileLookup", "false")
         )
         raw = _with_trigger_cap(reader, max_files_per_trigger).load(topic_uri)
-        return raw.select(
-            F.col("id").cast("binary").alias("ulid"),
-            F.conv(F.hex(F.substring(F.col("id").cast("binary"), 1, 6)), 16, 10)
-            .cast("long")
-            .alias("ulid_ts_ms"),
-            F.col("orderingGroup").alias("ordering_group"),
-            F.col("sequenceNumber").alias("sequence_number"),
-            F.col("position"),
-            F.col("data"),
-        )
+        return avro_codec.envelope_to_messages(raw)
     reader = (
         spark.readStream.schema(_BINARY_FILE_SCHEMA)
         .format("binaryFile")

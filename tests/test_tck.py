@@ -720,3 +720,71 @@ def test_tail_poll_after_head_and_tail(client):
     got = [consumer.receive(10.0).ulid for _ in range(3)]
     assert got == [r[0] for r in later]
     assert consumer.receive(0) is None
+
+
+# -- one landing path for every write, one per-file scan for every audit ------
+
+
+def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
+    """A flush adds the window's max-ts sidecar entry before its data file
+    is renamed into the listing, so no reader lists the window without
+    its entry; a failed rename leaves neither a file nor an entry."""
+    from rawdata_client_provider_gcs_spark.sources.filenames import is_topic_data_file
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+
+    t0 = 1_700_000_000_000
+    topic = client.topic("land")
+    real_rename = HadoopFs.rename
+    entry_at_rename = []
+
+    def recording_rename(self, src, dst):
+        if is_topic_data_file(dst):
+            entry_at_rename.append(topic.load_max_ts().get(dst.rsplit("/", 1)[-1]))
+        return real_rename(self, src, dst)
+
+    monkeypatch.setattr(HadoopFs, "rename", recording_rename)
+    rows = [(ulid_mod.encode(t0 + i, i), None, 0, f"p-{i}", {}) for i in range(5)]
+    (landed,) = topic.write_single_rows(rows)
+    assert entry_at_rename == [t0 + 4]
+
+    def failing_rename(self, src, dst):
+        if is_topic_data_file(dst):
+            raise IOError("injected rename failure")
+        return real_rename(self, src, dst)
+
+    monkeypatch.setattr(HadoopFs, "rename", failing_rename)
+    with pytest.raises(IOError):
+        topic.write_single_rows([(ulid_mod.encode(t0 + 1_000, 100), None, 0, "q-0", {})])
+    name = landed.rsplit("/", 1)[-1]
+    assert [e.filename for _, e in topic.list_manifest()] == [name]
+    assert set(topic.load_max_ts()) == {name}
+
+
+def test_avro_fsck_and_sketch_job_counts_do_not_grow_with_files(
+    client, spark, monkeypatch
+):
+    """Without spark-avro, fsck() and refresh_sketches() still run one
+    aggregate over all of an Avro topic's files, not a job per file."""
+    from rawdata_client_provider_gcs_spark.sources import avro_codec, topic_stats
+
+    monkeypatch.setattr(avro_codec, "avro_datasource_available", lambda _spark: False)
+    t0 = 1_700_000_000_000
+    jobs = {}
+    for n_files in (3, 9):
+        topic = client.topic(f"avjobs{n_files}")
+        for w in range(n_files):
+            topic.write_single_rows(
+                [
+                    (ulid_mod.encode(t0 + w * 1_000 + i, w * 100 + i), None, 0, f"w{w}-{i}", {})
+                    for i in range(4)
+                ],
+                ext="avro",
+            )
+        audit, fsck_jobs, _ = _spark_work(spark, lambda: topic.fsck().collect())
+        assert len(audit) == n_files and all(r["ok"] for r in audit)
+        sketches, sketch_jobs, _ = _spark_work(
+            spark, lambda: topic_stats.refresh_sketches(topic)
+        )
+        assert len(sketches) == n_files and all(sketches.values())
+        jobs[n_files] = (fsck_jobs, sketch_jobs)
+    assert jobs[9] == jobs[3], jobs
