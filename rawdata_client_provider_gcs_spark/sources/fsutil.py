@@ -7,27 +7,100 @@ storage backends (cloudstorage/GCSRawdataUtils.java,
 filesystem/FilesystemRawdataUtils.java) with the connector layer Spark
 already ships — chunked uploads, seekable reads and credentials are
 connector configuration, not engine code (SURVEY.md §2A S3/S17/S18).
+
+Every call here is a py4j round trip, and the log's read contract (seek,
+cursorOf, lastMessage) is little more than a listing and a sidecar read,
+so the number and speed of those round trips set its latency:
+
+- **One reply per listing.**  Reading each ``FileStatus`` of a listing
+  costs a round trip per getter (six per file), so a 200-file topic cost
+  ~1,200 round trips per listing.  Instead the status array is joined JVM
+  side into one string — Scala's ``ArraySeq.unsafeWrapArray(arr)
+  .mkString("\n")``, since py4j will not pass a ``FileStatus[]`` where
+  Java's ``Object[]`` joiners expect one — and each
+  ``<Class>{path=<p>; isDirectory=<b>; length=<n>; …}`` record is parsed
+  here.  When the record count differs from the array length (a newline
+  in a name), or a record does not match or names no child of the listed
+  folder (a FileSystem with its own ``toString``, or viewfs, whose
+  statuses print ``path=null``), that listing is read status by status
+  instead.
+- **Nagle off on every py4j connection.**  py4j's JVM side writes a reply
+  through an 8,192-character buffer, so a longer reply (a base64 sidecar,
+  a large listing) leaves in two writes; with Nagle's algorithm on, the
+  second waits for the Python side's delayed ACK — ~40 ms per reply.
+  :func:`_set_tcp_nodelay` turns ``TCP_NODELAY`` on for the JVM socket of
+  the calling thread's connection, once per thread (in pinned-thread mode
+  each Python thread has its own connection).  If the JVM refuses the
+  reflection, replies stay correct, only slower.
 """
 
 from __future__ import annotations
 
+import re
+import threading
+
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import SparkSession
+
+#: One ``FileStatus.toString()`` record.  ``path`` is greedy, so a name
+#: holding ``; isDirectory=`` still resolves to the real field after it;
+#: ``length`` is absent for directories.
+_STATUS_RECORD = re.compile(
+    r"[\w$]+\{path=(.+); isDirectory=(true|false)(?:; length=(\d+))?; "
+    r".*?\bisSymlink=(true|false)\b"
+)
+
+#: Threads whose py4j connection already had Nagle turned off (or refused).
+_nodelay = threading.local()
+
+
+def _set_tcp_nodelay(jvm) -> None:
+    """Turn Nagle off on the JVM socket of this thread's py4j connection.
+
+    The JVM thread serving a py4j connection runs it as its ``Runnable``,
+    so ``Thread.target`` of the thread executing this call is the
+    ``py4j.ClientServerConnection``, whose ``getSocket()`` is public.
+    Reading the private field needs ``--add-opens java.base/java.lang``,
+    which Spark's launcher passes.  A Python callback (``foreachBatch``)
+    calls back over the connection of the JVM thread that invoked it,
+    whose ``target`` is not a py4j connection; there, as on any other
+    failure, the connection is left as it was.  Runs once per Python
+    thread.
+    """
+    if getattr(_nodelay, "done", False):
+        return
+    _nodelay.done = True
+    try:
+        thread_class = jvm.java.lang.Thread
+        target = thread_class._java_lang_class.getDeclaredField("target")
+        target.setAccessible(True)
+        connection = target.get(thread_class.currentThread())
+        if connection is not None:
+            connection.getSocket().setTcpNoDelay(True)
+    except Py4JError:
+        pass
 
 
 class HadoopFs:
     """Minimal wrapper over org.apache.hadoop.fs.FileSystem via py4j."""
 
     def __init__(self, spark: SparkSession, uri: str):
-        jvm = spark._jvm
+        jvm = self._jvm = spark._jvm
         # resolved once: each ``jvm.a.b.C`` lookup walks the package tree
         # with one py4j round trip per segment
         self._path_class = jvm.org.apache.hadoop.fs.Path
         self._io_utils = jvm.org.apache.commons.io.IOUtils
+        self._array_seq = jvm.scala.collection.immutable.ArraySeq
+        self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
         self._root = self._path_class(uri)
         self._fs = self._root.getFileSystem(self._conf)
 
     def path(self, uri: str):
+        # every method starts here, so each thread's first call (the
+        # rename pool's too) sets up its connection
+        _set_tcp_nodelay(self._jvm)
         return self._path_class(uri)
 
     def exists(self, uri: str) -> bool:
@@ -42,26 +115,58 @@ class HadoopFs:
     def rename(self, src: str, dst: str) -> bool:
         return self._fs.rename(self.path(src), self.path(dst))
 
+    def _list(self, uri: str) -> list[tuple[str, bool, bool, int]]:
+        """Non-recursive listing → [(path, is_dir, is_file, length)]; a
+        missing folder lists as ``[]``.  Eight round trips whatever the
+        file count, unless a record forces the per-status reading."""
+        p = self.path(uri)
+        try:
+            arr = self._fs.listStatus(p)
+        except Py4JJavaError as exc:
+            # the FileSystem contract's answer for a missing path
+            if is_instance_of(
+                self._gateway, exc.java_exception, "java.io.FileNotFoundException"
+            ):
+                return []
+            raise
+        text = self._array_seq.unsafeWrapArray(arr).mkString("\n")
+        records = text.split("\n") if text else []
+        out = []
+        if len(records) == len(arr):
+            # a status whose getters delegate elsewhere (viewfs) prints
+            # its own unset fields, such as ``path=null``: every parsed
+            # path must name a child of the listed folder
+            folder = self._fs.makeQualified(p).toString().rstrip("/")
+            for record in records:
+                m = _STATUS_RECORD.match(record)
+                if m is None:
+                    break
+                path, dir_flag, length, symlink_flag = m.groups()
+                is_dir = dir_flag == "true"
+                if is_dir != (length is None) or path.rsplit("/", 1)[0] != folder:
+                    break
+                is_file = not is_dir and symlink_flag == "false"
+                out.append((path, is_dir, is_file, int(length or 0)))
+            else:
+                return out
+        return [
+            (
+                status.getPath().toString(),
+                status.isDirectory(),
+                status.isFile(),
+                status.getLen(),
+            )
+            for status in arr
+        ]
+
     def list_files(self, uri: str) -> list[tuple[str, int]]:
         """Non-recursive listing → [(path, size)], files only."""
-        p = self.path(uri)
-        if not self._fs.exists(p):
-            return []
-        out = []
-        for status in self._fs.listStatus(p):
-            if status.isFile():
-                out.append((status.getPath().toString(), status.getLen()))
-        return out
+        return [(path, size) for path, _, is_file, size in self._list(uri) if is_file]
 
     def list_dirs(self, uri: str) -> list[str]:
         """Non-recursive listing → directory names (not paths), sorted."""
-        p = self.path(uri)
-        if not self._fs.exists(p):
-            return []
         return sorted(
-            status.getPath().getName()
-            for status in self._fs.listStatus(p)
-            if status.isDirectory()
+            path.rsplit("/", 1)[-1] for path, is_dir, _, _ in self._list(uri) if is_dir
         )
 
     def write_bytes(self, uri: str, payload: bytes) -> None:

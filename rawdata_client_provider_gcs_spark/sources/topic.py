@@ -1155,7 +1155,16 @@ class Topic:
             ext=ext,
         )
         tmp = f"{self.uri}/.tmp-{uuid.uuid4().hex}.{ext}"
-        self.fs.write_bytes(tmp, blob)
         dst = f"{self.uri}/{filename}"
-        self._land([(tmp, dst)], {filename: ts_of(rows[-1][0])})
+        try:
+            self.fs.write_bytes(tmp, blob)
+            self._land([(tmp, dst)], {filename: ts_of(rows[-1][0])})
+        except Exception:
+            # nothing sweeps temp objects and listings hide them, so a
+            # failed flush must not leave one behind (best effort)
+            try:
+                self.fs.delete(tmp)
+            except Exception:
+                pass
+            raise
         return [dst]

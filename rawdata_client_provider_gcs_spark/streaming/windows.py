@@ -19,6 +19,7 @@ import shutil
 import tempfile
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
@@ -214,11 +215,17 @@ def scratch_dir() -> str | None:
     call ``writeStream`` with their own durable ``checkpointLocation``
     and never pass through here.  ``SPARK_GRAFT_STREAM_SCRATCH``
     overrides (any path, or empty for the system default); otherwise
-    ``/dev/shm`` is used when present and writable.
+    ``/dev/shm`` is used when present and writable and the active
+    session's master is local — on a cluster, executors on other hosts
+    could not see the driver's memory-backed folder.
     """
     env = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
     if env is not None:
         return env or None
+    sc = SparkContext._active_spark_context
+    master = sc.master if sc is not None else ""
+    if master != "local" and not master.startswith("local["):
+        return None
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
         return shm

@@ -84,6 +84,30 @@ def test_gcs_provider_bulk_publish_distributed(spark, gs_mount):
     client.close()
 
 
+def test_gcs_listing_matches_per_status_reading(spark, gs_mount):
+    """HadoopFs's one-reply listing on the viewfs mount equals reading
+    each status: viewfs statuses do not print their real path, so the
+    listing must notice and read them one by one."""
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+
+    (gs_mount / "d" / "sub").mkdir(parents=True)
+    (gs_mount / "d" / "f, 1; x=y").write_bytes(b"abc")
+    (gs_mount / "d" / "zero").write_bytes(b"")
+    uri = "gs://fake-bucket/d"
+    fs = HadoopFs(spark, uri)
+    jfs = fs.path(uri).getFileSystem(spark._jsc.hadoopConfiguration())
+    statuses = list(jfs.listStatus(fs.path(uri)))
+    assert sorted(fs.list_files(uri)) == sorted(
+        (s.getPath().toString(), s.getLen()) for s in statuses if s.isFile()
+    )
+    assert sorted(fs.list_files(uri)) == [
+        ("gs://fake-bucket/d/f, 1; x=y", 3),
+        ("gs://fake-bucket/d/zero", 0),
+    ]
+    assert fs.list_dirs(uri) == ["sub"]
+    assert fs.list_files("gs://fake-bucket/missing") == []
+
+
 def test_gcs_connector_conf_scoping():
     """Credential scoping parity with GCSRawdataClientInitializer.java:43-82."""
     rw = gcs_connector_conf(keyfile="/secrets/sa.json", upload_chunk_mb=8)

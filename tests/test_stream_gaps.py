@@ -193,23 +193,28 @@ def test_auto_engine_selects_by_runtime(monkeypatch):
     assert calls == ["groupstate", "tws"]
 
 
-def test_scratch_dir_env_contract(monkeypatch):
+def test_scratch_dir_env_contract(spark, monkeypatch):
     """scratch_dir honors SPARK_GRAFT_STREAM_SCRATCH: a set path wins
     verbatim, empty string forces the system default (None), and with
-    the variable unset the default is /dev/shm when usable else None —
-    so bounded-drain scratch placement is always operator-controllable."""
+    the variable unset the default is /dev/shm when usable on a local
+    master, else None — a cluster's executors cannot see the driver's
+    /dev/shm — so bounded-drain scratch placement is always
+    operator-controllable."""
     from rawdata_client_provider_gcs_spark.streaming import windows as W
 
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", "/somewhere/else")
+    assert W.scratch_dir() == "/somewhere/else"
+    monkeypatch.setattr(spark.sparkContext, "master", "yarn")
     assert W.scratch_dir() == "/somewhere/else"
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", "")
     assert W.scratch_dir() is None
     monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH")
     import os as _os
 
-    expected = (
-        "/dev/shm"
-        if _os.path.isdir("/dev/shm") and _os.access("/dev/shm", _os.W_OK)
-        else None
-    )
-    assert W.scratch_dir() == expected
+    shm_usable = _os.path.isdir("/dev/shm") and _os.access("/dev/shm", _os.W_OK)
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443", "localhost"):
+        monkeypatch.setattr(spark.sparkContext, "master", master)
+        assert W.scratch_dir() is None, master
+    for master in ("local", "local[4]", "local[*]", "local[2,3]"):
+        monkeypatch.setattr(spark.sparkContext, "master", master)
+        assert W.scratch_dir() == ("/dev/shm" if shm_usable else None), master

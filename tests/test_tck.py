@@ -760,6 +760,30 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
     assert set(topic.load_max_ts()) == {name}
 
 
+def test_failed_flush_removes_its_temp_object(client, monkeypatch):
+    """A flush whose data-file rename fails removes its ``.tmp-`` object
+    and leaves no sidecar entry for the window."""
+    from rawdata_client_provider_gcs_spark.sources.filenames import is_topic_data_file
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+
+    topic = client.topic("tmpleak")
+    real_rename = HadoopFs.rename
+    monkeypatch.setattr(
+        HadoopFs,
+        "rename",
+        lambda self, src, dst: False
+        if is_topic_data_file(dst)
+        else real_rename(self, src, dst),
+    )
+    with pytest.raises(IOError):
+        topic.write_single_rows(
+            [(ulid_mod.encode(1_700_000_000_000, 1), None, 0, "p-0", {})]
+        )
+    listed = [p.rsplit("/", 1)[-1] for p, _ in topic.fs.list_files(topic.uri)]
+    assert not [name for name in listed if name.startswith(".tmp-")], listed
+    assert topic.load_max_ts() == {}
+
+
 def test_avro_fsck_and_sketch_job_counts_do_not_grow_with_files(
     client, spark, monkeypatch
 ):
