@@ -18,6 +18,8 @@ from __future__ import annotations
 import json
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,6 +30,14 @@ from .metadata import RawdataMetadataClient
 from .sources.fsutil import HadoopFs
 from .sources.topic import Topic, overlap_groups
 from .ulid import MonotonicUlidGenerator, UlidCursor
+
+
+def _messages(table: pa.Table):
+    """The rows of a driver-read message table as messages, in order."""
+    for batch in table.to_batches():
+        for row in batch.to_pylist():
+            row["data"] = dict(row["data"])
+            yield RawdataMessage.from_row(row)
 
 
 def _normalize_root(root: str, provider: str) -> str:
@@ -107,31 +117,44 @@ class RawdataClient:
         approx_timestamp_ms: int,
         tolerance_ms: int,
     ) -> UlidCursor:
-        """As-of position lookup within ``[approx−tol, approx+tol)``.
+        """As-of position lookup within ``[approx−tol, approx+tol]``.
 
         Mirrors AvroRawdataClient.java:84-115: scan the window in ULID
         order, first equal position wins; overrun or end-of-stream raises
-        ``RawdataNoSuchPositionException``.  DataFrame form: filter + top-1
-        instead of a sequential scan.
+        ``RawdataNoSuchPositionException``.  Here: filter + smallest ULID
+        over the files that can overlap the window
+        (:meth:`~.sources.topic.Topic.manifest_between`), read on the
+        driver while their bytes fit one scan task's share, else as a
+        Spark top-1 over ``Topic.dataframe(lo, hi)``.
         """
         lo_ms = approx_timestamp_ms - tolerance_ms
         hi_ms = approx_timestamp_ms + tolerance_ms
         # reference overruns only when msg ts strictly exceeds the upper
         # bound's millisecond, so the window is inclusive of hi_ms itself;
         # both bounds prune files and filter rows
-        df = self.topic(topic).dataframe(from_ts_ms=lo_ms, to_ts_ms=hi_ms)
-        rows = (
-            df.filter(F.col("position") == F.lit(position))
-            .orderBy("ulid")
-            .limit(1)
-            .collect()
-        )
-        if not rows:
+        t = self.topic(topic)
+        files = t.manifest_between(lo_ms, hi_ms)
+        if t.fits_driver_read(files):
+            table = t.read_local(files)
+            ts = table["ulid_ts_ms"]
+            in_window = pc.and_(pc.greater_equal(ts, lo_ms), pc.less_equal(ts, hi_ms))
+            match = table.filter(pc.and_(in_window, pc.equal(table["position"], position)))
+            found = min(match["ulid"].to_pylist(), default=None)
+        else:
+            rows = (
+                t.dataframe(from_ts_ms=lo_ms, to_ts_ms=hi_ms)
+                .filter(F.col("position") == F.lit(position))
+                .orderBy("ulid")
+                .limit(1)
+                .collect()
+            )
+            found = bytes(rows[0]["ulid"]) if rows else None
+        if found is None:
             raise RawdataNoSuchPositionException(
                 f"Unable to find position in time-range "
-                f"[{lo_ms},{hi_ms}) position={position}"
+                f"[{lo_ms},{hi_ms}] position={position}"
             )
-        return UlidCursor(ulid=bytes(rows[0]["ulid"]), inclusive=inclusive)
+        return UlidCursor(ulid=found, inclusive=inclusive)
 
     # -- consumer-group cursors (engine extension) --------------------------
     #
@@ -176,8 +199,21 @@ class RawdataClient:
     # -- point reads --------------------------------------------------------
 
     def last_message(self, topic: str) -> RawdataMessage | None:
+        """The newest message by ULID, or None on an empty topic (S10).
+
+        Reads only the files that can hold it
+        (:meth:`~.sources.topic.Topic.last_message_files`): on the driver
+        while their bytes fit one scan task's share, else as a Spark top-1
+        (``Topic.last_message_df``).
+        """
         self._check_open()
-        rows = self.topic(topic).last_message_df().collect()
+        t = self.topic(topic)
+        files = t.last_message_files()
+        if t.fits_driver_read(files):
+            table = t.read_local(files)
+            newest = table.sort_by([("ulid", "descending")]).slice(0, 1)
+            return next(_messages(newest), None)
+        rows = t.last_message_df().collect()
         return RawdataMessage.from_row(rows[0]) if rows else None
 
     # -- lifecycle ----------------------------------------------------------
@@ -357,20 +393,23 @@ class RawdataConsumer:
     :func:`~.sources.topic.overlap_groups`): every message of a group
     precedes every message of the next one.  Delivery then comes from
 
-    - the **head** — the cursor's group plus its successor — read as one
-      scan filtered on the cursor, ``coalesce(1)`` and sorted within that
-      one partition: one Spark job, no sampling, no shuffle, a bounded
-      number of files whatever the topic's size.  This is the reference's
+    - the **head** — the cursor's group plus its successor — read on the
+      driver (:meth:`~.sources.topic.Topic.read_local`: the files are
+      copied to a driver temp folder and decoded by pyarrow), filtered on
+      the cursor and sorted by ULID: no Spark job, and a bounded number of
+      files whatever the topic's size.  This is the reference's
       floorEntry/higherEntry walk (AvroRawdataConsumer.java:143-179) at
-      group granularity;
+      group granularity, read in-process as the reference reads it;
     - the **tail** — every later file — read only once the head is
-      exhausted, as one range-sorted scan (``orderBy("ulid")``), so a full
-      drain runs a number of jobs that does not grow with the file count.
+      exhausted, as one range-sorted Spark scan (``orderBy("ulid")``), so
+      a full drain runs a number of jobs that does not grow with the file
+      count.
 
-    The head is read in one task only while its manifest byte size is at
-    most ``spark.sql.files.maxPartitionBytes``, the amount Spark already
-    gives one scan task; a larger head goes straight to the range-sorted
-    scan.
+    The head is read on the driver only while its manifest byte size is
+    at most ``spark.sql.files.maxPartitionBytes``, the amount Spark
+    already gives one scan task; a larger head goes straight to the
+    range-sorted scan.  ``seek`` and ``close`` close a tail scan that is
+    still open.
 
     On exhaustion ``receive(timeout)`` re-lists the topic (throttled by
     ``listing_min_interval_seconds``, TopicAvroFileCache.java:23-30) every
@@ -411,7 +450,14 @@ class RawdataConsumer:
         """Restart delivery at the first message with event time >= ts."""
         self._after_ulid = ulid_mod.beginning_of(max(timestamp_ms, 0))
         self._include_exact = True
-        self._iter = None
+        self._close_iter()
+
+    def _close_iter(self) -> None:
+        # an abandoned toLocalIterator makes its JVM serving task abort
+        # with an error; closing the generator ends the scan cleanly
+        if self._iter is not None:
+            self._iter.close()
+            self._iter = None
 
     def _scan(self, manifest) -> DataFrame:
         """Unordered scan of ``manifest`` filtered on the current cursor."""
@@ -423,28 +469,36 @@ class RawdataConsumer:
             .filter(F.expr(f"ulid {op} x'{after.hex()}'"))
         )
 
+    def _after_cursor(self, table: pa.Table) -> pa.Table:
+        """``table``'s rows after the current cursor: :meth:`_scan`'s
+        filter, on a driver-read table."""
+        after = self._after_ulid
+        beyond = pc.greater_equal if self._include_exact else pc.greater
+        return table.filter(
+            pc.and_(
+                pc.greater_equal(table["ulid_ts_ms"], ulid_mod.timestamp_ms(after)),
+                beyond(table["ulid"], pa.scalar(after, pa.binary())),
+            )
+        )
+
     def _rows(self, manifest):
-        """Rows after the cursor in ULID order: the head group pair in one
-        task, then the rest range-sorted (see the class docstring)."""
+        """Messages after the cursor in ULID order: the head group pair
+        read on the driver, then the rest range-sorted (see the class
+        docstring)."""
         max_ts = self._topic.load_max_ts()
         manifest = self._topic.prune_from_timestamp(
             manifest, ulid_mod.timestamp_ms(self._after_ulid), max_ts
         )
         groups = overlap_groups(manifest, max_ts)
         head = [pe for group in groups[:2] for pe in group]
-        sql_conf = self._client.spark._jsparkSession.sessionState().conf()
-        task_bytes = sql_conf.filesMaxPartitionBytes()
-        if head and sum(e.last_block_offset for _, e in head) <= task_bytes:
-            yield from (
-                self._scan(head)
-                .coalesce(1)
-                .sortWithinPartitions("ulid")
-                .toLocalIterator()
-            )
+        if head and self._topic.fits_driver_read(head):
+            table = self._after_cursor(self._topic.read_local(head))
+            yield from _messages(table.sort_by("ulid"))
             manifest = [pe for group in groups[2:] for pe in group]
         if manifest:
             # the cursor has moved past every head row by now
-            yield from self._scan(manifest).orderBy("ulid").toLocalIterator()
+            for row in self._scan(manifest).orderBy("ulid").toLocalIterator():
+                yield RawdataMessage.from_row(row)
 
     def _rebuild_iter(self, manifest=None) -> None:
         if manifest is None:
@@ -456,10 +510,9 @@ class RawdataConsumer:
         if self._iter is None:
             self._rebuild_iter()
         try:
-            row = next(self._iter)
+            msg = next(self._iter)
         except StopIteration:
             return None
-        msg = RawdataMessage.from_row(row)
         self._after_ulid = msg.ulid
         self._include_exact = False
         return msg
@@ -500,6 +553,7 @@ class RawdataConsumer:
 
     def close(self):
         self._closed = True
+        self._close_iter()
 
     def __enter__(self):
         return self

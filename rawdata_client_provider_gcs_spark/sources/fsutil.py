@@ -32,6 +32,11 @@ so the number and speed of those round trips set its latency:
   the calling thread's connection, once per thread (in pinned-thread mode
   each Python thread has its own connection).  If the JVM refuses the
   reflection, replies stay correct, only slower.
+- **Data files reach the driver by copy, not by reply.**
+  :meth:`HadoopFs.copy_to_local` is one ``copyToLocalFile`` round trip
+  whatever the file's size, while a ``byte[]`` reply travels base64
+  encoded through the py4j socket; :meth:`HadoopFs.read_bytes` is for
+  small objects such as sidecars.
 """
 
 from __future__ import annotations
@@ -159,15 +164,24 @@ class HadoopFs:
             for status in arr
         ]
 
+    def list_children(self, uri: str) -> tuple[list[tuple[str, int]], list[str]]:
+        """One non-recursive listing → ([(path, size)] of the files,
+        sorted directory names (not paths))."""
+        files, dirs = [], []
+        for path, is_dir, is_file, size in self._list(uri):
+            if is_file:
+                files.append((path, size))
+            elif is_dir:
+                dirs.append(path.rsplit("/", 1)[-1])
+        return files, sorted(dirs)
+
     def list_files(self, uri: str) -> list[tuple[str, int]]:
         """Non-recursive listing → [(path, size)], files only."""
-        return [(path, size) for path, _, is_file, size in self._list(uri) if is_file]
+        return self.list_children(uri)[0]
 
     def list_dirs(self, uri: str) -> list[str]:
         """Non-recursive listing → directory names (not paths), sorted."""
-        return sorted(
-            path.rsplit("/", 1)[-1] for path, is_dir, _, _ in self._list(uri) if is_dir
-        )
+        return self.list_children(uri)[1]
 
     def write_bytes(self, uri: str, payload: bytes) -> None:
         stream = self._fs.create(self.path(uri), True)
@@ -227,6 +241,12 @@ class HadoopFs:
             return bytes(data)
         finally:
             stream.close()
+
+    def copy_to_local(self, uri: str, local_path: str) -> None:
+        """Copy the object at ``uri`` to the driver's ``local_path`` in one
+        round trip; the bytes move JVM side, not through py4j.  The raw
+        local FileSystem is the target, so no ``.crc`` file is written."""
+        self._fs.copyToLocalFile(False, self.path(uri), self.path(local_path), True)
 
     def read_bytes(self, uri: str) -> bytes:
         # py4j passes arrays by value, so readFully into a bytearray would

@@ -7,11 +7,18 @@ kept so nothing needs to open a file to prune it.
 
 Spark-first mapping (SURVEY.md §3.4/§4):
 
-- **Read** = one ``spark.read.parquet(paths…)`` over the pruned file list;
-  event-time pruning happens against the manifest (driver-side, from the
-  listing — the analog of the reference's ``NavigableMap.floorEntry``,
-  AvroRawdataConsumer.java:153-157) and row-level predicates push down to
-  the columnar scan.
+- **Read** = event-time pruning against the manifest (driver-side, from
+  the listing — the analog of the reference's ``NavigableMap.floorEntry``,
+  AvroRawdataConsumer.java:153-157), then one of two reads of the pruned
+  file list.  Bulk reads are one distributed scan
+  (:meth:`Topic.read_files`: ``spark.read.parquet(paths…)`` plus Avro),
+  with row-level predicates pushed down to it.  Point reads — the
+  consumer's head, lastMessage, cursorOf — touch a handful of files, so
+  while those files' bytes fit one scan task's share
+  (:meth:`Topic.fits_driver_read`) they are read on the driver with
+  pyarrow (:meth:`Topic.read_local`), as the reference reads them
+  in-process (AvroRawdataConsumer.java:143-179): no Spark job, whose fixed
+  cost would otherwise be most of the read.
 - **Write** = a window encoded on the driver (producer flush,
   :meth:`Topic.write_single_rows`) or task files written by executors via
   the commit protocol (:meth:`Topic.write_dataframe`; this replaces the
@@ -26,12 +33,17 @@ Spark-first mapping (SURVEY.md §3.4/§4):
 
 from __future__ import annotations
 
+import io
 import json
+import os
+import tempfile
 import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,32 +60,28 @@ from .filenames import (
 from .fsutil import HadoopFs
 
 
-def _encode_parquet_rows(
+#: MESSAGE_SCHEMA in Arrow, field for field (map logical type for
+#: ``data``).  The flush writes it, and every file read on the driver is
+#: cast to it: Spark's parquet writer marks every field nullable, so
+#: tables from the two kinds of file only concatenate once cast.
+ARROW_MESSAGE_SCHEMA = pa.schema(
+    [
+        pa.field("ulid", pa.binary(), nullable=False),
+        pa.field("ulid_ts_ms", pa.int64(), nullable=False),
+        pa.field("ordering_group", pa.string()),
+        pa.field("sequence_number", pa.int64(), nullable=False),
+        pa.field("position", pa.string(), nullable=False),
+        pa.field("data", pa.map_(pa.string(), pa.binary()), nullable=False),
+    ]
+)
+
+
+def _rows_table(
     rows: list[tuple[bytes, str | None, int, str, dict[str, bytes]]],
-) -> bytes:
-    """Encode one window of message tuples as parquet bytes (driver-side).
-
-    The arrow schema mirrors MESSAGE_SCHEMA field-for-field (map logical
-    type for ``data``), with snappy compression matching Spark's writer
-    default, so files from this path and from ``write_dataframe`` are
-    interchangeable to every reader.
-    """
-    import io
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pa.schema(
-        [
-            pa.field("ulid", pa.binary(), nullable=False),
-            pa.field("ulid_ts_ms", pa.int64(), nullable=False),
-            pa.field("ordering_group", pa.string()),
-            pa.field("sequence_number", pa.int64(), nullable=False),
-            pa.field("position", pa.string(), nullable=False),
-            pa.field("data", pa.map_(pa.string(), pa.binary()), nullable=False),
-        ]
-    )
-    table = pa.table(
+) -> pa.Table:
+    """Message tuples ``(ulid, ordering_group, sequence_number, position,
+    data)`` → one table in :data:`ARROW_MESSAGE_SCHEMA`."""
+    return pa.table(
         {
             "ulid": pa.array([r[0] for r in rows], pa.binary()),
             "ulid_ts_ms": pa.array(
@@ -87,10 +95,18 @@ def _encode_parquet_rows(
                 pa.map_(pa.string(), pa.binary()),
             ),
         },
-        schema=schema,
+        schema=ARROW_MESSAGE_SCHEMA,
     )
+
+
+def _encode_parquet_rows(
+    rows: list[tuple[bytes, str | None, int, str, dict[str, bytes]]],
+) -> bytes:
+    """Encode one window of message tuples as parquet bytes (driver-side),
+    snappy-compressed like Spark's writer, so files from this path and
+    from ``write_dataframe`` are interchangeable to every reader."""
     buf = io.BytesIO()
-    pq.write_table(table, buf, compression="snappy")
+    pq.write_table(_rows_table(rows), buf, compression="snappy")
     return buf.getvalue()
 
 
@@ -170,8 +186,15 @@ class Topic:
         matching the manifest pattern — the reference's listing filter chain
         (GCSRawdataUtils.java:99-104, FilesystemRawdataUtils.java:79-94).
         """
+        return self._manifest_of(self.fs.list_files(self.uri))
+
+    @staticmethod
+    def _manifest_of(
+        files: list[tuple[str, int]],
+    ) -> list[tuple[str, FileManifestEntry]]:
+        """:meth:`list_manifest` over an existing ``[(path, size)]`` listing."""
         out = []
-        for path, size in self.fs.list_files(self.uri):
+        for path, size in files:
             if size == 0 or not is_topic_data_file(path):
                 continue
             entry = decode_filename(path.rsplit("/", 1)[-1])
@@ -300,17 +323,60 @@ class Topic:
         failing it (rows they held are silently absent — run
         :meth:`quarantine_corrupt` to repair the topic properly).
         """
-        manifest = self.list_manifest()
-        if from_ts_ms is not None:
-            manifest = self.prune_from_timestamp(manifest, from_ts_ms)
-        if to_ts_ms is not None:
-            manifest = [pe for pe in manifest if pe[1].from_ts_ms <= to_ts_ms]
+        manifest = self.manifest_between(from_ts_ms, to_ts_ms)
         df = self.read_files(manifest, ignore_corrupt=ignore_corrupt)
         if from_ts_ms is not None:
             df = df.filter(F.col("ulid_ts_ms") >= F.lit(from_ts_ms))
         if to_ts_ms is not None:
             df = df.filter(F.col("ulid_ts_ms") <= F.lit(to_ts_ms))
         return df
+
+    def manifest_between(
+        self, from_ts_ms: int | None = None, to_ts_ms: int | None = None
+    ) -> list[tuple[str, FileManifestEntry]]:
+        """The listed files that can hold events in ``[from_ts_ms,
+        to_ts_ms]`` (either bound optional): :meth:`prune_from_timestamp`
+        below, and no file whose first event is after ``to_ts_ms``.  The
+        pruning of :meth:`dataframe` and of the client's position lookup."""
+        manifest = self.list_manifest()
+        if from_ts_ms is not None:
+            manifest = self.prune_from_timestamp(manifest, from_ts_ms)
+        if to_ts_ms is not None:
+            manifest = [pe for pe in manifest if pe[1].from_ts_ms <= to_ts_ms]
+        return manifest
+
+    def fits_driver_read(self, manifest: list[tuple[str, FileManifestEntry]]) -> bool:
+        """True when ``manifest``'s bytes are at most
+        ``spark.sql.files.maxPartitionBytes``, the share Spark gives one
+        scan task: few enough to read on the driver (:meth:`read_local`)."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        total = sum(e.last_block_offset for _, e in manifest)
+        return total <= conf.filesMaxPartitionBytes()
+
+    def read_local(self, manifest: list[tuple[str, FileManifestEntry]]) -> pa.Table:
+        """The listed files read on the driver, unordered, as one table in
+        :data:`ARROW_MESSAGE_SCHEMA`; no Spark job.
+
+        Each file is copied into a driver temp folder
+        (:meth:`HadoopFs.copy_to_local`) and decoded there: parquet by
+        pyarrow, Avro by the envelope codec.  The folder is removed on the
+        way out, failures included.  Callers bound the bytes first
+        (:meth:`fits_driver_read`).
+        """
+        tables = []
+        with tempfile.TemporaryDirectory(prefix="rawdata-read-") as staging:
+            for i, (path, entry) in enumerate(manifest):
+                local = os.path.join(staging, f"{i}.{entry.ext}")
+                self.fs.copy_to_local(path, local)
+                if entry.ext == "parquet":
+                    table = pq.read_table(local, columns=ARROW_MESSAGE_SCHEMA.names)
+                else:
+                    with open(local, "rb") as fh:
+                        table = _rows_table(avro_codec.decode_container(fh.read()))
+                tables.append(table.cast(ARROW_MESSAGE_SCHEMA))
+        if not tables:
+            return ARROW_MESSAGE_SCHEMA.empty_table()
+        return pa.concat_tables(tables)
 
     def read_files(
         self,
@@ -401,29 +467,35 @@ class Topic:
         (timestamp, randomness) under Spark's unsigned byte comparison)."""
         return self.dataframe(from_ts_ms, to_ts_ms).orderBy("ulid")
 
-    def last_message_df(self) -> DataFrame:
-        """Tail read: top-1 by ULID over the files that can hold the
-        newest message.
+    def last_message_files(self) -> list[tuple[str, FileManifestEntry]]:
+        """The files that can hold the newest message.
 
         Those are the file with the largest from-ts plus every file whose
         sidecar max-ts reaches that from-ts: a compacted or event-time
         file can start earlier yet end later.  Files without a sidecar
         entry count their from-ts as their max (the reference's
         disjointness assumption, as in :meth:`prune_from_timestamp`).  On
-        a topic of time-disjoint files that is one file, read with
-        ``TakeOrderedAndProject`` — the manifest-pruned analog of the
-        reference's last-block-offset seek (AvroRawdataClient.java:123-144).
+        a topic of time-disjoint files that is one file — the
+        manifest-pruned analog of the reference's last-block-offset seek
+        (AvroRawdataClient.java:123-144).
         """
         manifest = self.list_manifest()
         if not manifest:
-            return self.spark.createDataFrame([], MESSAGE_SCHEMA)
+            return []
         last_from = manifest[-1][1].from_ts_ms
         max_ts = self.load_max_ts()
-        candidates = [
+        return [
             pe
             for pe in manifest
             if max_ts.get(pe[1].filename, pe[1].from_ts_ms) >= last_from
         ]
+
+    def last_message_df(self) -> DataFrame:
+        """Tail read: top-1 by ULID over :meth:`last_message_files`, read
+        with ``TakeOrderedAndProject``."""
+        candidates = self.last_message_files()
+        if not candidates:
+            return self.spark.createDataFrame([], MESSAGE_SCHEMA)
         return (
             self.read_files(candidates).orderBy(F.col("ulid").desc()).limit(1)
         )
@@ -1036,22 +1108,19 @@ class Topic:
         deciding on compaction/retention (file count and small-file
         share are the triggers).
         """
-        manifest = self.list_manifest()
-        sizes = {p.rsplit("/", 1)[-1]: None for p, _ in manifest}
-        for path, size in self.fs.list_files(self.uri):
-            name = path.rsplit("/", 1)[-1]
-            if name in sizes:
-                sizes[name] = size
+        files, folders = self.fs.list_children(self.uri)
+        manifest = self._manifest_of(files)
+        sizes = dict(files)
         max_ts = self.load_max_ts()
-        quarantined = len(
-            [1 for _ in self.fs.list_files(f"{self.uri}/quarantine")]
-        )
+        quarantined = 0
+        if "quarantine" in folders:
+            quarantined = len(self.fs.list_files(f"{self.uri}/quarantine"))
         entries = [e for _, e in manifest]
         return {
             "topic": self.name,
             "n_files": len(entries),
             "n_messages": sum(e.count for e in entries),
-            "n_bytes": sum(s or 0 for s in sizes.values()),
+            "n_bytes": sum(sizes[p] for p, _ in manifest),
             "formats": sorted({e.ext for e in entries}),
             "first_ts_ms": min((e.from_ts_ms for e in entries), default=None),
             "last_ts_ms": max(

@@ -501,11 +501,9 @@ def test_last_message_across_compacted_overlap(client):
 
 
 def test_position_cursor_prunes_upper_bound(client, monkeypatch):
-    """cursor_of_position scans only files that can overlap its window
+    """cursor_of_position reads only files that can overlap its window
     ``[approx - tol, approx + tol]``: the floor file (and overlaps), never
     the files after the upper bound."""
-    from rawdata_client_provider_gcs_spark.sources.topic import Topic
-
     t0 = 1_700_000_000_000
     topic = client.topic("pcu")
     for f in range(6):
@@ -515,22 +513,13 @@ def test_position_cursor_prunes_upper_bound(client, monkeypatch):
                 for i in range(10)
             ]
         )
-    scans = []
-    real = Topic.dataframe
-
-    def recording(self, *args, **kwargs):
-        df = real(self, *args, **kwargs)
-        scans.append(df)
-        return df
-
-    monkeypatch.setattr(Topic, "dataframe", recording)
+    copied = _record_copies(monkeypatch)
     target_ts = t0 + 20_000 + 300  # p-2-3
     cur = client.cursor_of_position(
         "pcu", "p-2-3", inclusive=True, approx_timestamp_ms=target_ts, tolerance_ms=500
     )
     assert cur.ulid == ulid_mod.encode(target_ts, 2)
-    (scan,) = scans
-    names = sorted(p.rsplit("/", 1)[-1] for p in scan.inputFiles())
+    names = [src.rsplit("/", 1)[-1] for src, _ in copied]
     assert len(names) == 1 and names[0].endswith("_p-2-0.parquet")
     # the window is inclusive of its upper millisecond (reference overrun
     # rule): a message exactly at approx + tol is found
@@ -547,6 +536,21 @@ def test_position_cursor_prunes_upper_bound(client, monkeypatch):
 
 
 # -- the consumer's read path: head group pair, then a range-sorted tail -----
+
+
+def _record_copies(monkeypatch):
+    """Record every ``(uri, local_path)`` the driver copies to read it."""
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+
+    copied = []
+    real = HadoopFs.copy_to_local
+
+    def recording(self, uri, local_path):
+        copied.append((uri, local_path))
+        return real(self, uri, local_path)
+
+    monkeypatch.setattr(HadoopFs, "copy_to_local", recording)
+    return copied
 
 
 def _spark_work(spark, fn):
@@ -669,12 +673,15 @@ def test_consumer_ordered_across_event_time_publish_overlap(client, spark):
     )
 
 
-def test_seek_read_of_part_of_a_file_runs_no_shuffle(client, spark):
-    """Seeking and reading fewer messages than one file holds is one
-    scan of the cursor's group pair: no sampling job, no shuffle."""
+def test_seek_read_of_part_of_a_file_runs_no_shuffle(client, spark, monkeypatch):
+    """Seeking and reading fewer messages than one file holds reads the
+    cursor's group pair on the driver: no Spark job, no shuffle, and only
+    those two files."""
     t0 = 1_700_000_000_000
     topic = client.topic("ns")
     truth = _write_windows(topic, [(i * 1_000, 20, 10) for i in range(12)], t0)
+    manifest = topic.list_manifest()
+    copied = _record_copies(monkeypatch)
 
     def seek_and_read():
         consumer = client.consumer("ns", seek_to_ts_ms=t0 + 5_050)
@@ -683,13 +690,14 @@ def test_seek_read_of_part_of_a_file_runs_no_shuffle(client, spark):
     got, jobs, shuffle = _spark_work(spark, seek_and_read)
     start = truth.index(ulid_mod.encode(t0 + 5_050, 5 * 1000 + 5))
     assert got == truth[start : start + 5]
-    assert jobs == 1
+    assert jobs == 0
     assert shuffle == 0
+    assert [src for src, _ in copied] == [manifest[5][0], manifest[6][0]]
 
 
 def test_full_drain_job_count_does_not_grow_with_files(client, spark):
     """A full drain runs a fixed number of Spark jobs however many files
-    the topic holds: the head is one job, the tail one range-sorted scan."""
+    the topic holds: the head runs none, the tail one range-sorted scan."""
     t0 = 1_700_000_000_000
     counts = {}
     for n_files in (6, 24):
@@ -720,6 +728,232 @@ def test_tail_poll_after_head_and_tail(client):
     got = [consumer.receive(10.0).ulid for _ in range(3)]
     assert got == [r[0] for r in later]
     assert consumer.receive(0) is None
+
+
+# -- point reads on the driver within one scan task's bytes ------------------
+
+
+def _point_reads(client, name, seek_ts, target):
+    """Seek + 12 receives, last_message and cursor_of_position on one
+    topic; ``target`` is the ``(position, ts_ms)`` looked up."""
+    drained = drain(client.consumer(name, seek_to_ts_ms=seek_ts), 12)
+    last = client.last_message(name)
+    position, ts_ms = target
+    cursor = client.cursor_of_position(name, position, True, ts_ms, 50)
+    return drained, last, cursor.ulid
+
+
+def test_point_reads_cost_the_same_at_20_and_200_files(client, spark, monkeypatch):
+    """Seek plus 50 receives, last_message and cursor_of_position each run
+    no Spark job, and copy the same number of data files and send the same
+    number of py4j commands on a 20-file topic as on a 200-file one."""
+    from tests.test_fsutil import _count_py4j_commands
+
+    t0 = 1_700_000_000_000
+    topics = {}
+    for n_files in (20, 200):
+        name = f"bound{n_files}"
+        _write_windows(
+            client.topic(name), [(i * 1_000, 30, 10) for i in range(n_files)], t0
+        )
+        topics[n_files] = name
+        client.last_message(name)  # this thread's connection is set up
+    copied = _record_copies(monkeypatch)
+    counter = _count_py4j_commands(monkeypatch)
+
+    def measured(fn):
+        def counted():
+            sent, copies = counter["n"], len(copied)
+            out = fn()
+            return out, counter["n"] - sent, len(copied) - copies
+
+        (out, sent, copies), jobs, _ = _spark_work(spark, counted)
+        return out, {"jobs": jobs, "py4j": sent, "copies": copies}
+
+    costs = {}
+    for n_files, name in topics.items():
+        mid = (n_files // 2) * 1_000
+        seek_ts = t0 + mid
+
+        def seek_and_read():
+            consumer = client.consumer(name, seek_to_ts_ms=seek_ts)
+            return [consumer.receive(0) for _ in range(50)]
+
+        batch, seek = measured(seek_and_read)
+        assert [m.position for m in batch] == [
+            f"w{n_files // 2 + i // 30}-{i % 30}" for i in range(50)
+        ]
+        last, last_cost = measured(lambda: client.last_message(name))
+        assert last.position == f"w{n_files - 1}-29"
+        found, cursor_cost = measured(
+            lambda: client.cursor_of_position(name, "w3-7", True, t0 + 3_070, 25)
+        )
+        assert found.ulid == ulid_mod.encode(t0 + 3_070, 3 * 1000 + 7)
+        costs[n_files] = {"seek": seek, "last": last_cost, "cursor": cursor_cost}
+    for read in ("seek", "last", "cursor"):
+        assert costs[20][read]["jobs"] == costs[200][read]["jobs"] == 0, costs
+        assert costs[20][read] == costs[200][read], costs
+
+
+def test_closed_consumer_ends_its_tail_scan(client):
+    """close() and seek() close a consumer's open tail scan (a generator
+    mid-drain); a new consumer on the same session still drains it all."""
+    import inspect
+
+    t0 = 1_700_000_000_000
+    truth = _write_windows(
+        client.topic("ct"), [(i * 1_000, 10, 10) for i in range(6)], t0
+    )
+    consumer = client.consumer("ct")
+    assert [m.ulid for m in drain(consumer, 25)] == truth[:25]  # head is 20
+    scan = consumer._iter
+    assert inspect.getgeneratorstate(scan) == inspect.GEN_SUSPENDED
+    consumer.close()
+    assert inspect.getgeneratorstate(scan) == inspect.GEN_CLOSED
+    assert _drain_all(client.consumer("ct")) == truth
+
+    seeking = client.consumer("ct")
+    assert [m.ulid for m in drain(seeking, 25)] == truth[:25]
+    scan = seeking._iter
+    seeking.seek(t0 + 1_000)
+    assert inspect.getgeneratorstate(scan) == inspect.GEN_CLOSED
+    assert _drain_all(seeking) == truth[10:]
+
+
+def test_describe_lists_the_topic_once(client, monkeypatch):
+    """describe() takes sizes and subfolders from one listing of the topic
+    folder and lists ``quarantine/`` only when that folder exists."""
+    import os
+
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+
+    t0 = 1_700_000_000_000
+    topic = client.topic("desc")
+    truth = _write_windows(topic, [(i * 1_000, 5, 10) for i in range(4)], t0)
+    manifest = topic.list_manifest()
+    n_bytes = sum(os.path.getsize(p[len("file:") :]) for p, _ in manifest)
+    listed = []
+    real = HadoopFs._list
+
+    def recording(self, uri):
+        listed.append(uri)
+        return real(self, uri)
+
+    monkeypatch.setattr(HadoopFs, "_list", recording)
+    assert topic.describe() == {
+        "topic": "desc",
+        "n_files": 4,
+        "n_messages": 20,
+        "n_bytes": n_bytes,
+        "formats": ["parquet"],
+        "first_ts_ms": t0,
+        "last_ts_ms": ulid_mod.timestamp_ms(truth[-1]),
+        "n_quarantined": 0,
+    }
+    assert listed == [topic.uri]
+
+
+@pytest.fixture()
+def task_bytes(spark):
+    """Sets ``spark.sql.files.maxPartitionBytes`` inside one test."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    yield lambda value: spark.conf.set(key, value)
+    if old is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, old)
+
+
+def _driver_vs_spark(client, spark, monkeypatch, task_bytes, name, t0):
+    """The three point reads on the driver, then with every file over the
+    per-task bytes: returns both results and what the second run did."""
+    args = (client, name, t0 + 1_050, ("w2-4", t0 + 2_040))
+    copied = _record_copies(monkeypatch)
+    on_driver, jobs, _ = _spark_work(spark, lambda: _point_reads(*args))
+    assert jobs == 0 and copied
+    copied.clear()
+    task_bytes("64")
+    on_spark, jobs, _ = _spark_work(spark, lambda: _point_reads(*args))
+    assert jobs >= 3 and not copied
+    return on_driver, on_spark
+
+
+def test_point_reads_above_the_bound_take_the_spark_path(
+    client, spark, monkeypatch, task_bytes
+):
+    """With ``spark.sql.files.maxPartitionBytes`` below one file, seek,
+    last_message and cursor_of_position read through Spark and return the
+    same messages as the driver-side read."""
+    t0 = 1_700_000_000_000
+    truth = _write_windows(
+        client.topic("big"), [(i * 1_000, 10, 10) for i in range(5)], t0
+    )
+    on_driver, on_spark = _driver_vs_spark(
+        client, spark, monkeypatch, task_bytes, "big", t0
+    )
+    assert on_spark == on_driver
+    drained, last, cursor = on_driver
+    assert [m.ulid for m in drained] == truth[15:27]
+    assert last.ulid == truth[-1]
+    assert cursor == truth[24]
+
+
+def test_avro_topic_point_reads_match_the_spark_path(
+    spark, tmp_path, monkeypatch, task_bytes
+):
+    """An Avro-format topic read on the driver returns byte-identical
+    messages to the Spark path: ULIDs, positions, groups, sequence
+    numbers and payload maps."""
+    client = RawdataClient(spark, str(tmp_path), file_format="avro")
+    t0 = 1_700_000_000_000
+    topic = client.topic("av")
+    for w in range(5):
+        rows = [
+            (
+                ulid_mod.encode(t0 + w * 1_000 + i * 10, w * 1000 + i),
+                None if i % 3 else f"og-{i}",
+                i * 7,
+                f"w{w}-{i}",
+                {"a": bytes([w, i]) * i, "empty": b""},
+            )
+            for i in range(10)
+        ]
+        topic.write_single_rows(rows, ext="avro")
+    assert {e.ext for _, e in topic.list_manifest()} == {"avro"}
+    on_driver, on_spark = _driver_vs_spark(
+        client, spark, monkeypatch, task_bytes, "av", t0
+    )
+    assert on_spark == on_driver
+    drained = on_driver[0]
+    assert [m.position for m in drained[:2]] == ["w1-5", "w1-6"]
+    assert [m.ordering_group for m in drained[:2]] == [None, "og-6"]
+    assert drained[1].sequence_number == 42
+    assert drained[4].data == {"a": bytes([1, 9]) * 9, "empty": b""}
+    client.close()
+
+
+def test_driver_read_of_a_corrupt_file_raises_and_leaves_no_staged_file(
+    client, monkeypatch
+):
+    """A driver-side read that hits an undecodable file raises, and the
+    temp folder it staged files in is gone afterwards."""
+    import os
+
+    t0 = 1_700_000_000_000
+    topic = client.topic("bad")
+    _write_windows(topic, [(i * 1_000, 10, 10) for i in range(3)], t0)
+    last_path = topic.list_manifest()[-1][0]
+    with open(last_path[len("file:") :], "wb") as fh:
+        fh.write(b"not a parquet file" * 10)
+    copied = _record_copies(monkeypatch)
+    with pytest.raises(Exception):
+        client.last_message("bad")
+    with pytest.raises(Exception):
+        client.consumer("bad", seek_to_ts_ms=t0 + 1_500).receive(0)
+    staged = {os.path.dirname(local) for _, local in copied}
+    assert len(staged) == 2
+    assert not any(os.path.exists(folder) for folder in staged)
 
 
 # -- one landing path for every write, one per-file scan for every audit ------
