@@ -27,7 +27,6 @@ from . import ulid as ulid_mod
 from .datamodel import MESSAGE_SCHEMA, RawdataMessage, RawdataMessageBuilder
 from .errors import RawdataClosedException, RawdataNoSuchPositionException
 from .metadata import RawdataMetadataClient
-from .sources.fsutil import HadoopFs
 from .sources.topic import Topic, overlap_groups
 from .ulid import MonotonicUlidGenerator, UlidCursor
 
@@ -75,12 +74,23 @@ class RawdataClient:
         self.file_format = file_format
         self.listing_min_interval_seconds = listing_min_interval_seconds
         self._children: list = []
+        self._topics: dict[str, Topic] = {}
         self._closed = False
 
     # -- factories ----------------------------------------------------------
 
     def topic(self, name: str) -> Topic:
-        return Topic(self.spark, self.root_uri, name)
+        """The client's one handle for topic ``name`` (compared after
+        ``strip("/")``): every call returns the same :class:`Topic`, and
+        its producers, consumers, point reads and :meth:`metadata` all go
+        through it.  So the handle's ``HadoopFs`` is built once, and its
+        last good max-ts sidecar bridges a torn sidecar read from one
+        call to the next."""
+        key = name.strip("/")
+        topic = self._topics.get(key)
+        if topic is None:
+            topic = self._topics.setdefault(key, Topic(self.spark, self.root_uri, key))
+        return topic
 
     def producer(self, topic: str) -> "RawdataProducer":
         self._check_open()
@@ -101,8 +111,8 @@ class RawdataClient:
 
     def metadata(self, topic: str) -> RawdataMetadataClient:
         self._check_open()
-        fs = HadoopFs(self.spark, self.root_uri)
-        return RawdataMetadataClient(fs, f"{self.root_uri}/{topic.strip('/')}", topic)
+        handle = self.topic(topic)
+        return RawdataMetadataClient(handle.fs, handle.uri, topic)
 
     # -- cursors ------------------------------------------------------------
 
@@ -178,7 +188,9 @@ class RawdataClient:
         ).encode("utf-8")
         # atomic: a torn cursor would raise on every later resume and
         # wedge the group permanently — exactly the marker class the
-        # metadata KV's temp+rename path exists for
+        # metadata KV's temp+rename path exists for.  On a scheme that
+        # refuses rename-over-existing (``file://``) the old cursor
+        # is deleted first, so it is briefly absent
         self.metadata(topic).put(
             self._group_cursor_key(group), payload, atomic=True
         )
@@ -225,10 +237,15 @@ class RawdataClient:
     def is_closed(self) -> bool:
         return self._closed
 
+    def _release(self, child) -> None:
+        """Forget a producer or consumer that has closed."""
+        if child in self._children:
+            self._children.remove(child)
+
     def close(self):
         if self._closed:
             return
-        for child in self._children:
+        for child in list(self._children):
             child.close()
         self._closed = True
 
@@ -376,6 +393,7 @@ class RawdataProducer:
             return
         self.flush()
         self._closed = True
+        self._client._release(self)
 
     def __enter__(self):
         return self
@@ -554,6 +572,7 @@ class RawdataConsumer:
     def close(self):
         self._closed = True
         self._close_iter()
+        self._client._release(self)
 
     def __enter__(self):
         return self

@@ -72,6 +72,10 @@ class RawdataMetadataClient:
         return self._topic
 
     def keys(self) -> list[str]:
+        # a new topic has no metadata/ folder; listing it would go
+        # through the missing-path exception, which costs ~80 py4j calls
+        if not self._fs.exists(self._dir):
+            return []
         return [
             unescape_key(path.rsplit("/", 1)[-1])
             for path, _ in self._fs.list_files(self._dir)
@@ -91,8 +95,12 @@ class RawdataMetadataClient:
         ``atomic=True`` commits through :meth:`HadoopFs.replace_object`
         (temp-object + rename) so a crash mid-write can never leave a torn
         value — required for markers whose parse failure would wedge a
-        consumer (the streaming sink's epoch marker).  The plain path matches the reference's
-        create/overwrite semantics (FilesystemRawdataMetadataClient.java:62-68).
+        consumer (the streaming sink's epoch marker).  It is not an atomic
+        replace on ``file://``, whose FileSystem refuses a rename onto an
+        existing key, so the old value is deleted first and :meth:`get`
+        returns None until the rename lands.  The plain path matches the
+        reference's create/overwrite semantics
+        (FilesystemRawdataMetadataClient.java:62-68).
         """
         self._fs.mkdirs(self._dir)
         final = f"{self._dir}/{escape_key(key)}"

@@ -33,10 +33,20 @@ so the number and speed of those round trips set its latency:
   each Python thread has its own connection).  If the JVM refuses the
   reflection, replies stay correct, only slower.
 - **Data files reach the driver by copy, not by reply.**
-  :meth:`HadoopFs.copy_to_local` is one ``copyToLocalFile`` round trip
-  whatever the file's size, while a ``byte[]`` reply travels base64
-  encoded through the py4j socket; :meth:`HadoopFs.read_bytes` is for
-  small objects such as sidecars.
+  :meth:`HadoopFs.copy_to_local` streams the object JVM side into a plain
+  driver file in one round trip whatever the file's size, while a
+  ``byte[]`` reply travels base64 encoded through the py4j socket;
+  :meth:`HadoopFs.read_bytes` is for small objects such as sidecars.  It
+  does not use ``copyToLocalFile``: that creates its target through
+  Hadoop's local FileSystem, which without the native-hadoop library
+  sets the new file's permission by running ``chmod`` in a child process
+  (two processes and ~7 ms per copy).
+
+A ``file://`` rename is not an atomic replace: with pip pyspark's
+classpath ``file://`` resolves to Hive's ``ProxyLocalFileSystem``, whose
+rename onto an existing name returns False, so
+:meth:`HadoopFs.replace_object` replaces by delete + rename, and the
+object is briefly absent in between.
 """
 
 from __future__ import annotations
@@ -96,6 +106,8 @@ class HadoopFs:
         # with one py4j round trip per segment
         self._path_class = jvm.org.apache.hadoop.fs.Path
         self._io_utils = jvm.org.apache.commons.io.IOUtils
+        self._file_utils = jvm.org.apache.commons.io.FileUtils
+        self._java_file = jvm.java.io.File
         self._array_seq = jvm.scala.collection.immutable.ArraySeq
         self._gateway = spark.sparkContext._gateway
         self._conf = spark._jsc.hadoopConfiguration()
@@ -194,11 +206,13 @@ class HadoopFs:
         """Commit ``payload`` at ``uri`` via temp-object + rename.
 
         The sidecar commit primitive (max-ts table, sketch table, epoch
-        markers): never a truncate-then-write of the live object, so
-        readers on rename-atomic schemes can't observe a torn file.  If
-        the scheme refuses rename-over-existing, falls back to
-        delete+rename — a sub-millisecond absence window callers bridge
-        with last-known-good caching where it matters.
+        markers): never a truncate-then-write of the live object, so no
+        reader sees a torn file.  The replace is atomic only where the
+        scheme renames onto an existing name (HDFS); where it refuses
+        that, as ``file://`` does (see the module docstring), the
+        existing object is deleted first and the object is absent until
+        the rename lands.  Callers bridge that gap with last-known-good
+        caching where it matters.
         """
         import uuid as _uuid
 
@@ -244,9 +258,16 @@ class HadoopFs:
 
     def copy_to_local(self, uri: str, local_path: str) -> None:
         """Copy the object at ``uri`` to the driver's ``local_path`` in one
-        round trip; the bytes move JVM side, not through py4j.  The raw
-        local FileSystem is the target, so no ``.crc`` file is written."""
-        self._fs.copyToLocalFile(False, self.path(uri), self.path(local_path), True)
+        round trip; the bytes move JVM side, not through py4j.
+
+        The object is opened through its FileSystem, which verifies its
+        ``.crc`` where it has one, and commons-io writes a plain
+        ``java.io.File`` (no ``.crc``) and closes the stream.  Not
+        ``copyToLocalFile``: its local target would spawn a ``chmod``
+        per copy (see the module docstring)."""
+        self._file_utils.copyInputStreamToFile(
+            self._fs.open(self.path(uri)), self._java_file(local_path)
+        )
 
     def read_bytes(self, uri: str) -> bytes:
         # py4j passes arrays by value, so readFully into a bytearray would

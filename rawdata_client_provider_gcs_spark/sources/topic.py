@@ -255,10 +255,13 @@ class Topic:
         """filename -> max event-time ms for engine-written files.
 
         A torn or momentarily absent sidecar (a concurrent writer mid
-        replace on a scheme without atomic rename-over) falls back to the
-        last successfully parsed table rather than ``{}`` — returning
-        empty would make :meth:`prune_from_timestamp` assume time
-        disjointness and over-prune.
+        replace on a scheme without atomic rename-over, ``file://``
+        included) falls back to the last successfully parsed table rather
+        than ``{}`` — returning empty would make
+        :meth:`prune_from_timestamp` assume time disjointness and
+        over-prune.  A client keeps one handle per topic
+        (``RawdataClient.topic``), so that table carries from one of its
+        calls to the next.
         """
         uri = self._maxts_uri()
         if not self.fs.exists(uri):
@@ -283,11 +286,12 @@ class Topic:
 
         The write is temp-object + rename — rename is already this
         module's commit primitive — never a truncate-then-write of the
-        live object, so readers on rename-atomic schemes (HDFS, local)
-        can't observe a torn sidecar; object stores overwrite atomically
-        anyway.  If the destination scheme refuses rename-over-existing,
-        the fallback delete+rename leaves a sub-millisecond absence
-        window, which :meth:`load_max_ts` bridges with last-known-good.
+        live object, so no reader sees a torn sidecar.  Only a scheme that
+        renames onto an existing name (HDFS) replaces it atomically.
+        ``file://`` refuses that, so every update goes through
+        :meth:`HadoopFs.replace_object`'s delete + rename, and the sidecar
+        is absent in between; :meth:`load_max_ts` bridges that gap with
+        last-known-good.
         """
         table = self.load_max_ts()
         for name in remove or []:

@@ -175,3 +175,39 @@ def test_read_bytes_round_trips_large_objects(spark, tmp_path, size):
     assert fs.read_bytes(uri) == payload
     lo, n = size // 4, size // 2
     assert fs.read_range(uri, lo, n) == payload[lo : lo + n]
+
+
+def test_copy_to_local_is_the_source_bytes_without_a_crc(spark, tmp_path):
+    """The driver copy holds the source's bytes, and no ``.crc`` is
+    written next to it (the source has one)."""
+    payload = os.urandom(300_001)
+    source, target = tmp_path / "source", tmp_path / "target"
+    target.mkdir()
+    fs = HadoopFs(spark, f"file://{tmp_path}")
+    fs.write_bytes(f"file://{source}/obj", payload)
+    assert (source / ".obj.crc").exists()
+    fs.copy_to_local(f"file://{source}/obj", str(target / "copy"))
+    assert (target / "copy").read_bytes() == payload
+    assert os.listdir(target) == ["copy"]
+
+
+def test_replace_object_over_an_existing_object(spark, tmp_path, monkeypatch):
+    """replace_object over an existing object: Hadoop reads back the new
+    bytes (so the ``.crc`` was replaced too), and no temp object or stale
+    ``.crc`` is left.  ``file://`` refuses a rename onto an existing name,
+    so the replace deletes the old object first: not atomic on ``file://``."""
+    fs = HadoopFs(spark, f"file://{tmp_path}")
+    uri = f"file://{tmp_path}/obj"
+    fs.write_bytes(uri, b"old" * 1_000)
+    deleted = []
+    real_delete = HadoopFs.delete
+
+    def recording_delete(self, target, recursive=False):
+        deleted.append(target)
+        return real_delete(self, target, recursive)
+
+    monkeypatch.setattr(HadoopFs, "delete", recording_delete)
+    fs.replace_object(uri, b"new!" * 10)
+    assert fs.read_bytes(uri) == b"new!" * 10
+    assert sorted(os.listdir(tmp_path)) == [".obj.crc", "obj"]
+    assert deleted == [uri]

@@ -12,6 +12,7 @@ import pytest
 
 from rawdata_client_provider_gcs_spark import (
     RawdataClient,
+    RawdataClosedException,
     RawdataMessage,
     RawdataNoSuchPositionException,
     UlidCursor,
@@ -745,8 +746,11 @@ def _point_reads(client, name, seek_ts, target):
 
 def test_point_reads_cost_the_same_at_20_and_200_files(client, spark, monkeypatch):
     """Seek plus 50 receives, last_message and cursor_of_position each run
-    no Spark job, and copy the same number of data files and send the same
-    number of py4j commands on a 20-file topic as on a 200-file one."""
+    no Spark job, build no topic handle, and copy the same number of data
+    files and send the same number of py4j commands on a 20-file topic as
+    on a 200-file one."""
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+    from rawdata_client_provider_gcs_spark.sources.topic import Topic
     from tests.test_fsutil import _count_py4j_commands
 
     t0 = 1_700_000_000_000
@@ -758,8 +762,19 @@ def test_point_reads_cost_the_same_at_20_and_200_files(client, spark, monkeypatc
         )
         topics[n_files] = name
         client.last_message(name)  # this thread's connection is set up
+        assert client.topic(name) is client.topic(f"/{name}/")
+        assert client.metadata(name)._fs is client.topic(name).fs
     copied = _record_copies(monkeypatch)
     counter = _count_py4j_commands(monkeypatch)
+    built = []
+    for cls in (Topic, HadoopFs):
+        real_init = cls.__init__
+
+        def recording_init(self, *args, _real=real_init, **kwargs):
+            built.append(type(self).__name__)
+            _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "__init__", recording_init)
 
     def measured(fn):
         def counted():
@@ -793,6 +808,46 @@ def test_point_reads_cost_the_same_at_20_and_200_files(client, spark, monkeypatc
     for read in ("seek", "last", "cursor"):
         assert costs[20][read]["jobs"] == costs[200][read]["jobs"] == 0, costs
         assert costs[20][read] == costs[200][read], costs
+    assert built == []
+
+
+def test_closed_children_leave_the_client(client):
+    """Closing a producer or consumer removes it from the client, and the
+    client's close() still closes (and flushes) the ones left open."""
+    for _ in range(16):
+        client.consumer("kids").close()
+    with client.producer("kids") as producer:
+        producer.publish(msg("p-0"))
+    assert client._children == []
+
+    producer = client.producer("kids")
+    producer.publish(msg("p-1"))
+    consumer = client.consumer("kids")
+    assert client._children == [producer, consumer]
+    client.close()
+    assert client._children == []
+    with pytest.raises(RawdataClosedException):
+        producer.publish(msg("p-2"))
+    with pytest.raises(RawdataClosedException):
+        consumer.receive(0)
+    reopened = RawdataClient(client.spark, client.root_uri)
+    assert [m.position for m in drain(reopened.consumer("kids"), 10)] == ["p-0", "p-1"]
+    reopened.close()
+
+
+def test_metadata_keys_of_a_new_topic_skip_the_missing_folder_listing(
+    client, monkeypatch
+):
+    """keys() on a topic without a ``metadata/`` folder is ``[]`` and asks
+    whether the folder exists instead of listing it (a missing-path
+    listing goes through pyspark's exception conversion)."""
+    from tests.test_fsutil import _count_py4j_commands
+
+    md = client.metadata("no-md")
+    md.keys()  # this thread's connection is set up
+    counter = _count_py4j_commands(monkeypatch)
+    assert md.keys() == []
+    assert counter["n"] < 10, counter
 
 
 def test_closed_consumer_ends_its_tail_scan(client):
@@ -936,8 +991,9 @@ def test_avro_topic_point_reads_match_the_spark_path(
 def test_driver_read_of_a_corrupt_file_raises_and_leaves_no_staged_file(
     client, monkeypatch
 ):
-    """A driver-side read that hits an undecodable file raises, and the
-    temp folder it staged files in is gone afterwards."""
+    """A driver-side read that hits an undecodable file, or a file whose
+    ``.crc`` checksum fails, raises, and the temp folder it staged files
+    in is gone afterwards."""
     import os
 
     t0 = 1_700_000_000_000
@@ -946,13 +1002,25 @@ def test_driver_read_of_a_corrupt_file_raises_and_leaves_no_staged_file(
     last_path = topic.list_manifest()[-1][0]
     with open(last_path[len("file:") :], "wb") as fh:
         fh.write(b"not a parquet file" * 10)
+    # a file written through HadoopFs.write_bytes (the flush's write) has
+    # a .crc; one flipped byte fails its checksum before any decode
+    flipped = client.topic("flip")
+    _write_windows(flipped, [(i * 1_000, 10, 10) for i in range(2)], t0)
+    local_path = flipped.list_manifest()[-1][0][len("file:") :]
+    with open(local_path, "r+b") as fh:
+        fh.seek(os.path.getsize(local_path) // 2)
+        byte = fh.read(1)
+        fh.seek(-1, os.SEEK_CUR)
+        fh.write(bytes([byte[0] ^ 0xFF]))
     copied = _record_copies(monkeypatch)
     with pytest.raises(Exception):
         client.last_message("bad")
     with pytest.raises(Exception):
         client.consumer("bad", seek_to_ts_ms=t0 + 1_500).receive(0)
+    with pytest.raises(Exception, match="ChecksumException"):
+        client.last_message("flip")
     staged = {os.path.dirname(local) for _, local in copied}
-    assert len(staged) == 2
+    assert len(staged) == 3
     assert not any(os.path.exists(folder) for folder in staged)
 
 
