@@ -83,9 +83,10 @@ class RawdataClient:
         """The client's one handle for topic ``name`` (compared after
         ``strip("/")``): every call returns the same :class:`Topic`, and
         its producers, consumers, point reads and :meth:`metadata` all go
-        through it.  So the handle's ``HadoopFs`` is built once, and its
-        last good max-ts sidecar bridges a torn sidecar read from one
-        call to the next."""
+        through it.  So the handle's ``HadoopFs`` is built once, its last
+        good max-ts sidecar bridges a torn sidecar read from one call to
+        the next, and it knows the topic's newest event for every
+        producer's flush."""
         key = name.strip("/")
         topic = self._topics.get(key)
         if topic is None:
@@ -188,9 +189,10 @@ class RawdataClient:
         ).encode("utf-8")
         # atomic: a torn cursor would raise on every later resume and
         # wedge the group permanently — exactly the marker class the
-        # metadata KV's temp+rename path exists for.  On a scheme that
-        # refuses rename-over-existing (``file://``) the old cursor
-        # is deleted first, so it is briefly absent
+        # metadata KV's temp+rename path exists for.  On ``file://`` the
+        # rename replaces the old cursor in one step; on a scheme that
+        # refuses rename-over-existing the old cursor is deleted first,
+        # so it is briefly absent
         self.metadata(topic).put(
             self._group_cursor_key(group), payload, atomic=True
         )
@@ -260,9 +262,20 @@ class RawdataProducer:
     """Buffered producer with time/size file windows (S1).
 
     Messages accumulate driver-side; a window rotation flushes one topic
-    file (via Spark write + manifest rename — the commit protocol replaces
-    the reference's upload thread, AvroRawdataProducer.java:101-133).  For
-    bulk data, use ``publish_dataframe`` which is the distributed path.
+    file, encoded on the driver and renamed to its manifest name (the
+    commit protocol replaces the reference's upload thread,
+    AvroRawdataProducer.java:101-133).  For bulk data, use
+    ``publish_dataframe`` which is the distributed path.
+
+    Single writer per topic, as in the reference, whose producers of a
+    topic exclude each other with an in-process lock
+    (AvroRawdataProducer.java:206-216).  Here every producer of a client
+    writes through the client's one handle for the topic
+    (:meth:`RawdataClient.topic`), which serializes their flushes and
+    knows the topic's newest event, so a window that starts at or after
+    it lands as one object with no sidecar update.  Producers in two
+    processes (or two clients) writing one topic are outside the
+    contract, as the max-ts sidecar's read-modify-write already is.
     """
 
     def __init__(self, client: RawdataClient, topic: str):
@@ -411,7 +424,8 @@ class RawdataConsumer:
     :func:`~.sources.topic.overlap_groups`): every message of a group
     precedes every message of the next one.  Delivery then comes from
 
-    - the **head** — the cursor's group plus its successor — read on the
+    - the **head** — the cursor's group plus its successor, and any file
+      before them that may end in the cursor's millisecond — read on the
       driver (:meth:`~.sources.topic.Topic.read_local`: the files are
       copied to a driver temp folder and decoded by pyarrow), filtered on
       the cursor and sorted by ULID: no Spark job, and a bounded number of
@@ -503,16 +517,21 @@ class RawdataConsumer:
         """Messages after the cursor in ULID order: the head group pair
         read on the driver, then the rest range-sorted (see the class
         docstring)."""
+        ts_ms = ulid_mod.timestamp_ms(self._after_ulid)
         max_ts = self._topic.load_max_ts()
-        manifest = self._topic.prune_from_timestamp(
-            manifest, ulid_mod.timestamp_ms(self._after_ulid), max_ts
-        )
+        manifest = self._topic.prune_from_timestamp(manifest, ts_ms, max_ts)
         groups = overlap_groups(manifest, max_ts)
-        head = [pe for group in groups[:2] for pe in group]
+        # the cursor's group is the last one to start at or before the
+        # cursor; any before it were kept only because they may end in
+        # the cursor's millisecond (a window split inside it)
+        lead = 0
+        while lead + 1 < len(groups) and groups[lead + 1][0][1].from_ts_ms <= ts_ms:
+            lead += 1
+        head = [pe for group in groups[: lead + 2] for pe in group]
         if head and self._topic.fits_driver_read(head):
             table = self._after_cursor(self._topic.read_local(head))
             yield from _messages(table.sort_by("ulid"))
-            manifest = [pe for group in groups[2:] for pe in group]
+            manifest = [pe for group in groups[lead + 2 :] for pe in group]
         if manifest:
             # the cursor has moved past every head row by now
             for row in self._scan(manifest).orderBy("ulid").toLocalIterator():

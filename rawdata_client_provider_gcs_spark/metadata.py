@@ -95,11 +95,12 @@ class RawdataMetadataClient:
         ``atomic=True`` commits through :meth:`HadoopFs.replace_object`
         (temp-object + rename) so a crash mid-write can never leave a torn
         value — required for markers whose parse failure would wedge a
-        consumer (the streaming sink's epoch marker).  It is not an atomic
-        replace on ``file://``, whose FileSystem refuses a rename onto an
-        existing key, so the old value is deleted first and :meth:`get`
-        returns None until the rename lands.  The plain path matches the
-        reference's create/overwrite semantics
+        consumer (the streaming sink's epoch marker, group cursors).  On
+        ``file://`` the rename replaces the old value in one step, so
+        :meth:`get` always finds the old value or the new one; on a scheme
+        that refuses a rename onto an existing key the old value is
+        deleted first and :meth:`get` returns None until the rename lands.
+        The plain path matches the reference's create/overwrite semantics
         (FilesystemRawdataMetadataClient.java:62-68).
         """
         self._fs.mkdirs(self._dir)

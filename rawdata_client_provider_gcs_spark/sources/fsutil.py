@@ -42,11 +42,21 @@ so the number and speed of those round trips set its latency:
   sets the new file's permission by running ``chmod`` in a child process
   (two processes and ~7 ms per copy).
 
-A ``file://`` rename is not an atomic replace: with pip pyspark's
-classpath ``file://`` resolves to Hive's ``ProxyLocalFileSystem``, whose
-rename onto an existing name returns False, so
-:meth:`HadoopFs.replace_object` replaces by delete + rename, and the
-object is briefly absent in between.
+- **Objects that are replaced are replaced with no gap.**  With pip
+  pyspark's classpath ``file://`` resolves to Hive's
+  ``ProxyLocalFileSystem``, a checksummed local FileSystem whose rename
+  onto an existing name returns False.  Its raw FileSystem
+  (``RawLocalFileSystem``) renames with POSIX ``rename(2)``, which
+  replaces the old object in one step.  So :meth:`HadoopFs.replace_object`
+  writes the objects it replaces (the max-ts sidecar, group cursors,
+  ``put(atomic=True)`` values) through the raw FileSystem, with no
+  ``.crc``, and renames them over the old object there; the checksummed
+  FileSystem reads an object without a ``.crc`` unverified.  A stale
+  ``.crc`` left by a checksummed write is deleted once, before the
+  object's first raw replace.  A raw create also starts one ``chmod``
+  process instead of two.  Schemes without such a raw FileSystem
+  (``gs://``, HDFS, viewfs) keep delete + rename, and the object is
+  briefly absent in between.
 """
 
 from __future__ import annotations
@@ -97,6 +107,14 @@ def _set_tcp_nodelay(jvm) -> None:
         pass
 
 
+def _write_all(stream, payload: bytes) -> None:
+    """Write ``payload`` to a JVM output stream and close it."""
+    try:
+        stream.write(bytearray(payload))
+    finally:
+        stream.close()
+
+
 class HadoopFs:
     """Minimal wrapper over org.apache.hadoop.fs.FileSystem via py4j."""
 
@@ -113,6 +131,12 @@ class HadoopFs:
         self._conf = spark._jsc.hadoopConfiguration()
         self._root = self._path_class(uri)
         self._fs = self._root.getFileSystem(self._conf)
+        #: the raw local FileSystem under ``_fs``, resolved on the first
+        #: replace (``False`` where there is none); see replace_object
+        self._raw = None
+        #: objects whose ``.crc`` is known absent: replaced raw since this
+        #: handle last wrote them through the checksummed FileSystem
+        self._crc_free: set[str] = set()
 
     def path(self, uri: str):
         # every method starts here, so each thread's first call (the
@@ -196,27 +220,57 @@ class HadoopFs:
         return self.list_children(uri)[1]
 
     def write_bytes(self, uri: str, payload: bytes) -> None:
-        stream = self._fs.create(self.path(uri), True)
-        try:
-            stream.write(bytearray(payload))
-        finally:
-            stream.close()
+        """Create (or overwrite) the object at ``uri``; the checksummed
+        create also makes its parent folders."""
+        self._crc_free.discard(uri)
+        _write_all(self._fs.create(self.path(uri), True), payload)
+
+    def _raw_fs(self):
+        """The raw local FileSystem under a checksummed ``_fs``, else
+        ``False``: the one FileSystem here whose rename replaces an
+        existing object."""
+        if self._raw is None:
+            self._raw = False
+            if is_instance_of(
+                self._gateway, self._fs, "org.apache.hadoop.fs.ChecksumFileSystem"
+            ):
+                raw = self._fs.getRawFileSystem()
+                if is_instance_of(
+                    self._gateway, raw, "org.apache.hadoop.fs.RawLocalFileSystem"
+                ):
+                    self._raw = raw
+        return self._raw
 
     def replace_object(self, uri: str, payload: bytes) -> None:
         """Commit ``payload`` at ``uri`` via temp-object + rename.
 
-        The sidecar commit primitive (max-ts table, sketch table, epoch
-        markers): never a truncate-then-write of the live object, so no
-        reader sees a torn file.  The replace is atomic only where the
-        scheme renames onto an existing name (HDFS); where it refuses
-        that, as ``file://`` does (see the module docstring), the
-        existing object is deleted first and the object is absent until
-        the rename lands.  Callers bridge that gap with last-known-good
-        caching where it matters.
+        The commit primitive of every object that is rewritten in place
+        (max-ts sidecar, sketch table, group cursors, epoch markers):
+        never a truncate-then-write of the live object, so no reader sees
+        a torn file.  On a checksummed local FileSystem (``file://``) the
+        temp object is written through the raw FileSystem and renamed
+        over the old one there, so a reader always finds the old object
+        or the new one (see the module docstring); the object's stale
+        ``.crc``, if any, is deleted first, once per handle.  Elsewhere
+        the rename is tried, and where the scheme refuses a rename onto an
+        existing name the old object is deleted first: it is absent until
+        the rename lands.
         """
         import uuid as _uuid
 
         tmp = f"{uri}.tmp-{_uuid.uuid4().hex}"
+        raw = self._raw_fs()
+        if raw:
+            path = self.path(uri)
+            if uri not in self._crc_free:
+                raw.delete(self._fs.getChecksumFile(path), False)
+                self._crc_free.add(uri)
+            tmp_path = self.path(tmp)
+            _write_all(raw.create(tmp_path, True), payload)
+            if not raw.rename(tmp_path, path):
+                raw.delete(tmp_path, False)
+                raise IOError(f"object replace failed: {uri}")
+            return
         self.write_bytes(tmp, payload)
         if not self.rename(tmp, uri):
             self.delete(uri)
@@ -236,10 +290,7 @@ class HadoopFs:
             stream = self._fs.create(self.path(uri), False)
         except Exception:
             return False
-        try:
-            stream.write(bytearray(payload))
-        finally:
-            stream.close()
+        _write_all(stream, payload)
         return True
 
     def size(self, uri: str) -> int:

@@ -24,15 +24,34 @@ Spark-first mapping (SURVEY.md §3.4/§4):
   the commit protocol (:meth:`Topic.write_dataframe`; this replaces the
   reference's upload thread + pre-upload verification,
   AvroRawdataProducer.java:101-133,192-198).  Both land through one path,
-  :meth:`Topic._land`: the files' max-ts sidecar entries first, then each
-  rename to its manifest name, so no reader lists a file without its
-  entry.  ``repartitionByRange(ulid)`` before ordered bulk writes keeps
-  per-file min-ulid manifests truthful.  Files leave through one path too,
-  :meth:`Topic._retire` (delete or quarantine, then one sidecar removal).
+  :meth:`Topic._land`: the sidecar entries the files need first, then each
+  rename to its manifest name.  ``repartitionByRange(ulid)`` before
+  ordered bulk writes keeps per-file min-ulid manifests truthful.  Files
+  leave through one path too, :meth:`Topic._retire` (delete or
+  quarantine, then one sidecar removal).
+
+The max-ts sidecar (``metadata/engine-file-maxts.json``) maps a filename
+to its newest event time.  Every reader that prunes by time
+(:meth:`Topic.prune_from_timestamp`, :func:`overlap_groups`,
+:meth:`Topic.last_message_files`, :meth:`Topic.expire_before`) relies on
+one invariant, which every writer keeps:
+
+    **(I)** A listed data file with no sidecar entry holds no event later
+    than the from-ts of the file listed right after it.
+
+The two files may share the boundary millisecond: rotation splits windows
+inside a millisecond, and ULIDs order the events within it.  A producer
+window that starts at or after the topic's newest event and sorts last
+keeps (I) with no entry, so a flush is one create plus one rename, as the
+reference's is (AvroRawdataProducer.java:162-190).  A write that may start
+inside an entry-less file's span gives that file its entry first
+(:meth:`Topic._bridge_entries`).  Reference-written topics have no
+sidecar and keep (I) by their producer's window rotation.
 """
 
 from __future__ import annotations
 
+import bisect
 import io
 import json
 import os
@@ -41,8 +60,10 @@ import threading
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import unquote
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,8 +139,10 @@ def overlap_groups(
     A group closes when the next file starts after the group's running
     max event time, so every message of a group precedes (by ULID) every
     message of the next one.  A file without a sidecar entry counts its
-    from-ts as its max: the reference's disjointness assumption, as in
-    :meth:`Topic.prune_from_timestamp`.
+    from-ts as its max: by (I) (module docstring) it ends by the next
+    file's from-ts.  It may share that millisecond with the next file, and
+    the split stays correct: a window rotation split inside a millisecond
+    leaves the earlier file's ULIDs below the later file's.
     """
     groups: list[list[tuple[str, FileManifestEntry]]] = []
     group_max = None
@@ -167,6 +190,20 @@ class Topic:
         #: last successfully parsed sidecar — served when a concurrent
         #: writer leaves the sidecar momentarily torn or absent
         self._maxts_last_good: dict[str, int] | None = None
+        #: set once a listing found the topic folder; until then a listing
+        #: asks whether it exists, which a missing folder answers far more
+        #: cheaply than the listing's exception path
+        self._folder_seen = False
+        #: the topic's newest event time and the (from-ts, filename) sort
+        #: key of its last listed file, as far as this handle knows: upper
+        #: bounds, learned by the first flush and advanced by every write
+        #: this handle lands; None until learned.  All producers of a
+        #: client share this handle (single writer per topic).
+        self._newest_ts_ms: int | None = None
+        self._last_key: tuple[int, str] = (-1, "")
+        #: one write at a time through this handle: the tail bounds above
+        #: and the sidecar's read-modify-write are not thread-safe
+        self._write_lock = threading.RLock()
         #: owner state while THIS handle holds the maintenance lock —
         #: lets maintain() hold one lock across its whole sweep while
         #: the sub-operations it calls re-enter instead of re-acquiring.
@@ -185,7 +222,12 @@ class Topic:
         Drops directories, zero-byte files, metadata objects, and files not
         matching the manifest pattern — the reference's listing filter chain
         (GCSRawdataUtils.java:99-104, FilesystemRawdataUtils.java:79-94).
+        A topic not created yet lists as ``[]``.
         """
+        if not self._folder_seen:
+            if not self.fs.exists(self.uri):
+                return []
+            self._folder_seen = True
         return self._manifest_of(self.fs.list_files(self.uri))
 
     @staticmethod
@@ -217,14 +259,16 @@ class Topic:
         Overlap safety: floor pruning assumes files are time-disjoint,
         which the reference producer guarantees but ``compact()`` (union of
         non-adjacent small files) and repeated event-time bulk publishes do
-        not.  Every engine-written file records its max event time in the
-        sidecar manifest (see :meth:`load_max_ts`); any file *before* the
-        floor whose ``[from_ts, max_ts]`` still reaches ``ts`` is retained
-        too, and the floor file itself is dropped when its max_ts ends
-        before ``ts`` (a seek into the gap after it).  Files without a
-        sidecar entry (reference-written) keep the reference's
-        disjointness assumption.  Pass ``max_ts`` when the caller already
-        holds the sidecar table; otherwise it is read here when needed.
+        not.  A file whose span may overlap a later one has a sidecar entry
+        (see :meth:`load_max_ts`); any file *before* the floor whose
+        ``[from_ts, max_ts]`` still reaches ``ts`` is retained too, and the
+        floor file itself is dropped when its max_ts ends before ``ts`` (a
+        seek into the gap after it).  A file before the floor without an
+        entry ends by the next file's from-ts (invariant (I), module
+        docstring), so it is retained exactly when that next file starts at
+        ``ts``: a window rotation split inside the seek's millisecond.
+        Pass ``max_ts`` when the caller already holds the sidecar table;
+        otherwise it is read here when needed.
         """
         start = 0
         for i, (_, entry) in enumerate(manifest):
@@ -238,7 +282,7 @@ class Topic:
         def may_reach(i: int, entry: FileManifestEntry) -> bool:
             hi = max_ts.get(entry.filename)
             if hi is None:
-                return i >= start
+                return i >= start or manifest[i + 1][1].from_ts_ms >= ts_ms
             return hi >= ts_ms
 
         return [pe for i, pe in enumerate(manifest) if may_reach(i, pe[1])]
@@ -252,13 +296,14 @@ class Topic:
         return f"{self.uri}/metadata/engine-file-maxts.json"
 
     def load_max_ts(self) -> dict[str, int]:
-        """filename -> max event-time ms for engine-written files.
+        """filename -> max event-time ms of the files that have an entry.
 
-        A torn or momentarily absent sidecar (a concurrent writer mid
-        replace on a scheme without atomic rename-over, ``file://``
-        included) falls back to the last successfully parsed table rather
-        than ``{}`` — returning empty would make
-        :meth:`prune_from_timestamp` assume time disjointness and
+        A file without one keeps invariant (I) (module docstring).  A
+        torn or momentarily absent sidecar (a concurrent writer mid
+        replace on a scheme without atomic rename-over; ``file://``
+        replaces with no gap) falls back to the last successfully parsed
+        table rather than ``{}`` — returning empty would make
+        :meth:`prune_from_timestamp` treat every file as entry-less and
         over-prune.  A client keeps one handle per topic
         (``RawdataClient.topic``), so that table carries from one of its
         calls to the next.
@@ -282,22 +327,22 @@ class Topic:
     ) -> None:
         """Merge-update the sidecar.  Single-writer per topic by contract
         (same exclusivity the reference's producer lock provides,
-        AvroRawdataProducer.java:206-216).
+        AvroRawdataProducer.java:206-216).  Removing an entry never breaks
+        invariant (I) for the files left; adding one is how a writer keeps
+        it (:meth:`_bridge_entries`).
 
-        The write is temp-object + rename — rename is already this
-        module's commit primitive — never a truncate-then-write of the
-        live object, so no reader sees a torn sidecar.  Only a scheme that
-        renames onto an existing name (HDFS) replaces it atomically.
-        ``file://`` refuses that, so every update goes through
-        :meth:`HadoopFs.replace_object`'s delete + rename, and the sidecar
-        is absent in between; :meth:`load_max_ts` bridges that gap with
-        last-known-good.
+        The write is :meth:`HadoopFs.replace_object` — temp object +
+        rename, never a truncate-then-write of the live object, so no
+        reader sees a torn sidecar.  On ``file://`` the rename replaces the
+        old sidecar in one step; on a scheme that refuses a rename onto an
+        existing name the old one is deleted first and the sidecar is
+        absent in between, which :meth:`load_max_ts` bridges with
+        last-known-good.  The create makes the ``metadata/`` folder.
         """
         table = self.load_max_ts()
         for name in remove or []:
             table.pop(name, None)
         table.update(add or {})
-        self.fs.mkdirs(f"{self.uri}/metadata")
         payload = json.dumps(table, sort_keys=True).encode("utf-8")
         self.fs.replace_object(self._maxts_uri(), payload)
         self._maxts_last_good = dict(table)
@@ -477,8 +522,8 @@ class Topic:
         Those are the file with the largest from-ts plus every file whose
         sidecar max-ts reaches that from-ts: a compacted or event-time
         file can start earlier yet end later.  Files without a sidecar
-        entry count their from-ts as their max (the reference's
-        disjointness assumption, as in :meth:`prune_from_timestamp`).  On
+        entry count their from-ts as their max: by invariant (I) (module
+        docstring) each ends by the next file's from-ts.  On
         a topic of time-disjoint files that is one file — the
         manifest-pruned analog of the reference's last-block-offset seek
         (AvroRawdataClient.java:123-144).
@@ -516,7 +561,9 @@ class Topic:
 
         One lightweight aggregate over the just-written files computes each
         file's manifest facts (min ulid ts, count, first position); sizes
-        come from the listing.  Returns the final file URIs.
+        come from the listing.  Every new file gets its sidecar entry, and
+        an entry-less file a new one may start inside gets its own
+        (:meth:`_bridge_entries`).  Returns the final file URIs.
 
         ``pre_commit``, when given, is called with the list of planned
         final filenames after the facts are computed but BEFORE anything
@@ -566,7 +613,8 @@ class Topic:
         # range partitioning mean the same row set; converge on the
         # already-committed twin instead of duplicating it.
         twin_by_facts: dict[tuple, str] = {}
-        for path, _size in self.fs.list_files(self.uri):
+        listing = self.fs.list_files(self.uri)
+        for path, _size in listing:
             try:
                 have = decode_filename(path.rsplit("/", 1)[-1])
             except Exception:
@@ -592,31 +640,127 @@ class Topic:
                 self.fs.delete(src)
                 del max_ts_of[name]
                 final_paths.append(twin)
-        self._land(to_land, max_ts_of)
+        with self._write_lock:
+            entries = self._bridge_entries(
+                self._manifest_of(listing),
+                self.load_max_ts(),
+                [decode_filename(name) for name in max_ts_of],
+            )
+            entries.update(max_ts_of)
+            self._land(to_land, max_ts_of, entries)
         self.fs.delete(tmp_uri, recursive=True)
         return final_paths
 
-    def _land(self, pairs: list[tuple[str, str]], max_ts: dict[str, int]) -> None:
+    def _file_max_ts(
+        self, manifest: list[tuple[str, FileManifestEntry]]
+    ) -> dict[str, int]:
+        """filename -> newest event time of each listed file, read on the
+        driver while the files fit one scan task's share, else as one
+        per-file aggregate."""
+        if self.fits_driver_read(manifest):
+            return {
+                e.filename: pc.max(self.read_local([(p, e)])["ulid_ts_ms"]).as_py()
+                for p, e in manifest
+            }
+        rows = self.per_file_agg(
+            [(p, e.ext) for p, e in manifest], F.max("ulid_ts_ms").alias("hi")
+        ).collect()
+        # the scan's file column is a percent-encoded URI
+        return {unquote(r["file"].rsplit("/", 1)[-1]): r["hi"] for r in rows}
+
+    def _tail(self) -> tuple[int, tuple[int, str]]:
+        """The topic's newest event time and its last listed file's sort
+        key, as upper bounds; ``(-1, (-1, ""))`` for an empty topic.
+
+        Learned on the first call from one listing and one sidecar read;
+        by (I) only the last listed file can hold events past every other
+        file's bound, so it is read when it has no entry.  :meth:`_land`
+        advances both afterwards, and files leaving only lower the true
+        values, so the bounds stay bounds.
+        """
+        if self._newest_ts_ms is None:
+            manifest = self.list_manifest()
+            newest, last_key = -1, (-1, "")
+            if manifest:
+                newest = self._newest_event(manifest, self.load_max_ts())
+                last = manifest[-1][1]
+                last_key = (last.from_ts_ms, last.filename)
+            self._newest_ts_ms, self._last_key = newest, last_key
+        return self._newest_ts_ms, self._last_key
+
+    def _newest_event(
+        self, manifest: list[tuple[str, FileManifestEntry]], max_ts: dict[str, int]
+    ) -> int:
+        """The newest event time of a non-empty listed topic.  By (I) an
+        entry-less file ends by the next file's start, so only the last
+        listed file is read, and only when it has no entry."""
+        last = manifest[-1][1]
+        newest = max(
+            [last.from_ts_ms]
+            + [max_ts[e.filename] for _, e in manifest if e.filename in max_ts]
+        )
+        if last.filename not in max_ts:
+            newest = max(newest, self._file_max_ts(manifest[-1:])[last.filename])
+        return newest
+
+    def _bridge_entries(
+        self,
+        manifest: list[tuple[str, FileManifestEntry]],
+        max_ts: dict[str, int],
+        new: list[FileManifestEntry],
+    ) -> dict[str, int]:
+        """The sidecar entries that keep (I) once the ``new`` files are
+        listed among ``manifest``'s.
+
+        Landing a file changes the successor of one file only: the one
+        listed right before it.  If that file has no entry and the new
+        file may start inside its span — before the start of the file
+        that used to follow it, or, for the last file, before the
+        newest event this handle knows of — the file's max-ts is read
+        (:meth:`_file_max_ts`) and returned as its entry.
+        """
+        keys = [(e.from_ts_ms, e.filename) for _, e in manifest]
+        spans = {}
+        for entry in new:
+            pos = bisect.bisect_left(keys, (entry.from_ts_ms, entry.filename))
+            if pos == 0 or manifest[pos - 1][1].filename in max_ts:
+                continue
+            bound = keys[pos][0] if pos < len(keys) else self._newest_ts_ms
+            if bound is None or entry.from_ts_ms < bound:
+                spans[manifest[pos - 1][0]] = manifest[pos - 1][1]
+        return self._file_max_ts(list(spans.items())) if spans else {}
+
+    def _land(
+        self,
+        pairs: list[tuple[str, str]],
+        max_ts: dict[str, int],
+        entries: dict[str, int],
+    ) -> None:
         """Make written files visible: the one commit path of every write.
 
         ``pairs`` are ``(src, dst)`` renames from invisible temp names to
         manifest names; ``max_ts`` maps each dst filename to its max
-        event time.  The sidecar entries land BEFORE the renames: a
+        event time.  ``entries`` are the sidecar entries the landing
+        needs to keep invariant (I) (module docstring): those of new
+        files that may overlap a later one, and those that
+        :meth:`_bridge_entries` found.  They land BEFORE the renames: a
         reader that lists the topic between a rename and a later sidecar
-        write would see no max-ts entry for the new (possibly
-        time-overlapping) file, and :meth:`prune_from_timestamp` would
-        fall back to the disjointness assumption and over-prune; entries
-        for files not yet visible are harmless.  More than two renames
-        run on a thread pool; sources stay invisible until each rename
-        lands, so a crash mid-way leaves a valid (shorter) topic, never a
-        torn file.  On failure the entries of exactly the renames that
+        write would see an entry-less file break (I), and
+        :meth:`prune_from_timestamp` would over-prune; entries for files
+        not yet visible are harmless.  With no entries the sidecar is
+        not touched.  More than two renames run on a thread pool;
+        sources stay invisible until each rename lands, so a crash
+        mid-way leaves a valid (shorter) topic, never a torn file.  On
+        success the handle's tail bounds (:meth:`_tail`) advance over the
+        landed files.  On failure the entries of exactly the renames that
         did not land are dropped (best effort, so failed commits don't
-        accrete orphans; ``compact`` sweeps stragglers) and the error is
-        raised.
+        accrete orphans; ``compact`` sweeps stragglers), the tail bounds
+        are forgotten, and the error is raised.
         """
         if not pairs:
             return
-        self._update_max_ts(add=max_ts)
+        if entries:
+            self._update_max_ts(add=entries)
         landed: set[str] = set()
 
         def rename(pair: tuple[str, str]) -> None:
@@ -633,17 +777,21 @@ class Topic:
                 with ThreadPoolExecutor(max_workers=min(32, len(pairs))) as pool:
                     list(pool.map(rename, pairs))
         except Exception:
+            # some renames may have landed: learn the tail afresh
+            self._newest_ts_ms = None
+            names = [dst.rsplit("/", 1)[-1] for _, dst in pairs if dst not in landed]
+            unlanded = [name for name in names if name in entries]
             try:
-                self._update_max_ts(
-                    remove=[
-                        dst.rsplit("/", 1)[-1]
-                        for _, dst in pairs
-                        if dst not in landed
-                    ]
-                )
+                if unlanded:
+                    self._update_max_ts(remove=unlanded)
             except Exception:
                 pass
             raise
+        if self._newest_ts_ms is not None:
+            self._newest_ts_ms = max(self._newest_ts_ms, *max_ts.values())
+            self._last_key = max(
+                self._last_key, *((decode_filename(n).from_ts_ms, n) for n in max_ts)
+            )
 
     def _retire(self, paths: list[str], quarantine: bool = False) -> list[str]:
         """Take data files out of the topic: the one exit path.
@@ -888,19 +1036,22 @@ class Topic:
         expiry); doing it engine-side keeps the manifest, sidecar, and
         data consistent in one sweep and works on any scheme.
 
-        Deletability is a manifest-only decision — no data IO:
+        Deletability is decided from the manifest and the sidecar, plus
+        at most one file read:
 
-        - engine-written files carry their max event time in the sidecar:
-          deletable iff ``max_ts < ts_ms``;
-        - files without a sidecar entry (reference-written) are
-          time-disjoint and ordered by the producer contract
-          (AvroRawdataProducer.java window rotation) — but only among
-          THEMSELVES: engine-written files (compact() unions, event-time
-          bulk publishes) interleave in ``from_ts`` order without being
-          time-disjoint with the reference sequence.  So the upper bound
-          for a sidecar-less file is the next sidecar-LESS entry's
-          ``from_ts``, skipping any engine entries in between; the LAST
-          such file is unbounded and never expires on that basis.
+        - a file with a sidecar entry is deletable iff ``max_ts < ts_ms``;
+        - files without one (producer windows, reference-written files)
+          are time-disjoint and ordered by the producer contract
+          (AvroRawdataProducer.java window rotation; invariant (I), module
+          docstring) — but only among THEMSELVES: engine-written files
+          (compact() unions, event-time bulk publishes) interleave in
+          ``from_ts`` order without being time-disjoint with the
+          reference sequence.  So the upper bound for a sidecar-less file
+          is the next sidecar-LESS entry's ``from_ts``, skipping any
+          engine entries in between; the LAST such file is unbounded and
+          never expires on that basis.  The one sidecar-less file that
+          starts before ``ts_ms`` while its bound does not is read, and
+          goes when its newest event predates ``ts_ms``.
 
         Returns deleted paths.  Single maintenance owner per topic, like
         :meth:`compact`; readers started before the sweep may observe
@@ -921,6 +1072,7 @@ class Topic:
         for pos, i in enumerate(no_sidecar[:-1]):
             next_ref_from[i] = manifest[no_sidecar[pos + 1]][1].from_ts_ms
         deletable: list[str] = []
+        straddling = []
         for i, (path, entry) in enumerate(manifest):
             hi = max_ts.get(entry.filename)
             if hi is None:
@@ -931,8 +1083,13 @@ class Topic:
                 # start; bound INCLUSIVE of the boundary millisecond —
                 # rotation can split mid-millisecond (ULIDs order sub-ms),
                 # and an exclusive bound would over-delete boundary events
+                if entry.from_ts_ms < ts_ms <= hi:
+                    straddling.append((path, entry))
             if hi < ts_ms:
                 deletable.append(path)
+        if straddling:
+            newest = self._file_max_ts(straddling)
+            deletable += [p for p, e in straddling if newest[e.filename] < ts_ms]
         self._retire(deletable)
         return deletable
 
@@ -1105,12 +1262,14 @@ class Topic:
         )
 
     def describe(self) -> dict:
-        """Manifest-only topic summary — zero data IO.
+        """Manifest-only topic summary.
 
         Counts, bytes, event-time span, and format mix straight from the
         filename facts plus the max-ts sidecar; the ops one-liner before
         deciding on compaction/retention (file count and small-file
-        share are the triggers).
+        share are the triggers).  The only data read is the last file's,
+        when it has no sidecar entry: nothing else bounds the newest
+        event (invariant (I), module docstring).
         """
         files, folders = self.fs.list_children(self.uri)
         manifest = self._manifest_of(files)
@@ -1127,13 +1286,7 @@ class Topic:
             "n_bytes": sum(sizes[p] for p, _ in manifest),
             "formats": sorted({e.ext for e in entries}),
             "first_ts_ms": min((e.from_ts_ms for e in entries), default=None),
-            "last_ts_ms": max(
-                (
-                    max_ts.get(e.filename, e.from_ts_ms)
-                    for e in entries
-                ),
-                default=None,
-            ),
+            "last_ts_ms": self._newest_event(manifest, max_ts) if manifest else None,
             "n_quarantined": quarantined,
         }
 
@@ -1208,20 +1361,25 @@ class Topic:
         codec (byte-compatible with the reference producer's output,
         AvroRawdataProducer.java:148-152); ``ext="parquet"`` writes one
         arrow-encoded file with exactly MESSAGE_SCHEMA's layout.
+
+        A window that starts at or after the topic's newest event and
+        sorts after its last file (:meth:`_tail`) keeps invariant (I)
+        with no sidecar entry: it lands as one create plus one rename.
+        Any other window lists the topic and lands with its own entry and
+        the one :meth:`_bridge_entries` finds.
         """
         if ext not in ("parquet", "avro"):
             raise ValueError(f"unsupported topic format: {ext}")
         rows = sorted(rows, key=lambda t: t[0])
         if not rows:
             return []
-        self.fs.mkdirs(self.uri)
         if ext == "avro":
             blob = avro_codec.encode_container(rows)
         else:
             blob = _encode_parquet_rows(rows)
-        ts_of = lambda u: int.from_bytes(u[:6], "big")  # noqa: E731
+        from_ts, max_ts = (int.from_bytes(r[0][:6], "big") for r in (rows[0], rows[-1]))
         filename = encode_filename(
-            from_ts_ms=ts_of(rows[0][0]),
+            from_ts_ms=from_ts,
             count=len(rows),
             last_block_offset=len(blob),
             first_position=rows[0][3],
@@ -1229,15 +1387,23 @@ class Topic:
         )
         tmp = f"{self.uri}/.tmp-{uuid.uuid4().hex}.{ext}"
         dst = f"{self.uri}/{filename}"
-        try:
-            self.fs.write_bytes(tmp, blob)
-            self._land([(tmp, dst)], {filename: ts_of(rows[-1][0])})
-        except Exception:
-            # nothing sweeps temp objects and listings hide them, so a
-            # failed flush must not leave one behind (best effort)
+        with self._write_lock:
+            newest, last_key = self._tail()
+            entries = {}
+            if from_ts < newest or (from_ts, filename) < last_key:
+                entries = self._bridge_entries(
+                    self.list_manifest(), self.load_max_ts(), [decode_filename(filename)]
+                )
+                entries[filename] = max_ts
             try:
-                self.fs.delete(tmp)
+                self.fs.write_bytes(tmp, blob)
+                self._land([(tmp, dst)], {filename: max_ts}, entries)
             except Exception:
-                pass
-            raise
+                # nothing sweeps temp objects and listings hide them, so a
+                # failed flush must not leave one behind (best effort)
+                try:
+                    self.fs.delete(tmp)
+                except Exception:
+                    pass
+                raise
         return [dst]

@@ -192,13 +192,16 @@ def test_copy_to_local_is_the_source_bytes_without_a_crc(spark, tmp_path):
 
 
 def test_replace_object_over_an_existing_object(spark, tmp_path, monkeypatch):
-    """replace_object over an existing object: Hadoop reads back the new
-    bytes (so the ``.crc`` was replaced too), and no temp object or stale
-    ``.crc`` is left.  ``file://`` refuses a rename onto an existing name,
-    so the replace deletes the old object first: not atomic on ``file://``."""
+    """On ``file://`` replace_object renames the new object over the old
+    one in one step: the old object is never deleted, so it is never
+    absent.  The old ``.crc`` goes before the first replace, Hadoop reads
+    back the new bytes, and no temp object or ``.crc`` is left; a later
+    checksummed write of the object does not break the next replace.  A
+    FileSystem without a raw local one keeps delete + rename."""
     fs = HadoopFs(spark, f"file://{tmp_path}")
     uri = f"file://{tmp_path}/obj"
     fs.write_bytes(uri, b"old" * 1_000)
+    assert sorted(os.listdir(tmp_path)) == [".obj.crc", "obj"]
     deleted = []
     real_delete = HadoopFs.delete
 
@@ -207,7 +210,18 @@ def test_replace_object_over_an_existing_object(spark, tmp_path, monkeypatch):
         return real_delete(self, target, recursive)
 
     monkeypatch.setattr(HadoopFs, "delete", recording_delete)
-    fs.replace_object(uri, b"new!" * 10)
-    assert fs.read_bytes(uri) == b"new!" * 10
+    for payload in (b"new!" * 10, b"newer" * 3):
+        fs.replace_object(uri, payload)
+        assert fs.read_bytes(uri) == payload
+        assert os.listdir(tmp_path) == ["obj"]
+    fs.write_bytes(uri, b"checksummed")
     assert sorted(os.listdir(tmp_path)) == [".obj.crc", "obj"]
+    fs.replace_object(uri, b"after")
+    assert fs.read_bytes(uri) == b"after"
+    assert os.listdir(tmp_path) == ["obj"]
+    assert deleted == []
+
+    fs._raw = False  # as on a scheme with no raw local FileSystem
+    fs.replace_object(uri, b"fallback")
+    assert fs.read_bytes(uri) == b"fallback"
     assert deleted == [uri]

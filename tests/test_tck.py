@@ -354,14 +354,15 @@ def test_expire_before_retention(spark, tmp_path):
     topic = client.topic("r")
     manifest = topic.list_manifest()
     assert len(manifest) > 4
-    sidecar = topic.load_max_ts()
+    newest = {
+        e.filename: max(topic.read_local([(p, e)])["ulid_ts_ms"].to_pylist())
+        for p, e in manifest
+    }
 
-    # cutoff strictly between two files: everything in the first two
-    # files ages out, the rest survives
+    # cutoff at the third file's start: the files whose messages all
+    # predate it age out, the rest survive
     cutoff = manifest[2][1].from_ts_ms
-    expect_gone = [
-        e.filename for _, e in manifest if sidecar[e.filename] < cutoff
-    ]
+    expect_gone = [e.filename for _, e in manifest if newest[e.filename] < cutoff]
     assert expect_gone
 
     deleted = topic.expire_before(cutoff)
@@ -504,7 +505,9 @@ def test_last_message_across_compacted_overlap(client):
 def test_position_cursor_prunes_upper_bound(client, monkeypatch):
     """cursor_of_position reads only files that can overlap its window
     ``[approx - tol, approx + tol]``: the floor file (and overlaps), never
-    the files after the upper bound."""
+    the files after the upper bound.  The window starts in the gap after
+    an entry-less window, which is the floor: it can only be bounded by
+    the next file's start."""
     t0 = 1_700_000_000_000
     topic = client.topic("pcu")
     for f in range(6):
@@ -521,7 +524,8 @@ def test_position_cursor_prunes_upper_bound(client, monkeypatch):
     )
     assert cur.ulid == ulid_mod.encode(target_ts, 2)
     names = [src.rsplit("/", 1)[-1] for src, _ in copied]
-    assert len(names) == 1 and names[0].endswith("_p-2-0.parquet")
+    assert len(names) == 2, names
+    assert names[0].endswith("_p-1-0.parquet") and names[1].endswith("_p-2-0.parquet")
     # the window is inclusive of its upper millisecond (reference overrun
     # rule): a message exactly at approx + tol is found
     edge = client.cursor_of_position(
@@ -1028,26 +1032,37 @@ def test_driver_read_of_a_corrupt_file_raises_and_leaves_no_staged_file(
 
 
 def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
-    """A flush adds the window's max-ts sidecar entry before its data file
-    is renamed into the listing, so no reader lists the window without
-    its entry; a failed rename leaves neither a file nor an entry."""
+    """A flush that starts inside an earlier window adds its sidecar
+    entries (its own, and the one of the entry-less window it starts
+    inside) before its data file is renamed into the listing; a flush
+    past the topic's newest event writes none; a failed rename leaves
+    neither a file nor its entry."""
     from rawdata_client_provider_gcs_spark.sources.filenames import is_topic_data_file
     from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
 
     t0 = 1_700_000_000_000
     topic = client.topic("land")
     real_rename = HadoopFs.rename
-    entry_at_rename = []
+    sidecar_at_rename = []
 
     def recording_rename(self, src, dst):
         if is_topic_data_file(dst):
-            entry_at_rename.append(topic.load_max_ts().get(dst.rsplit("/", 1)[-1]))
+            sidecar_at_rename.append(topic.load_max_ts())
         return real_rename(self, src, dst)
 
+    def rows(stamps, rand0):
+        return [
+            (ulid_mod.encode(t0 + ts, rand0 + i), None, 0, f"p-{rand0 + i}", {})
+            for i, ts in enumerate(stamps)
+        ]
+
     monkeypatch.setattr(HadoopFs, "rename", recording_rename)
-    rows = [(ulid_mod.encode(t0 + i, i), None, 0, f"p-{i}", {}) for i in range(5)]
-    (landed,) = topic.write_single_rows(rows)
-    assert entry_at_rename == [t0 + 4]
+    (first,) = topic.write_single_rows(rows(range(5), 0))
+    topic.write_single_rows(rows(range(10, 15), 10))
+    assert sidecar_at_rename == [{}, {}]
+    (late,) = topic.write_single_rows(rows([2, 3, 12], 20))
+    first_name, late_name = (p.rsplit("/", 1)[-1] for p in (first, late))
+    assert sidecar_at_rename[2] == {first_name: t0 + 4, late_name: t0 + 12}
 
     def failing_rename(self, src, dst):
         if is_topic_data_file(dst):
@@ -1056,10 +1071,9 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
 
     monkeypatch.setattr(HadoopFs, "rename", failing_rename)
     with pytest.raises(IOError):
-        topic.write_single_rows([(ulid_mod.encode(t0 + 1_000, 100), None, 0, "q-0", {})])
-    name = landed.rsplit("/", 1)[-1]
-    assert [e.filename for _, e in topic.list_manifest()] == [name]
-    assert set(topic.load_max_ts()) == {name}
+        topic.write_single_rows(rows([1], 100))
+    assert len(topic.list_manifest()) == 3
+    assert topic.load_max_ts() == {first_name: t0 + 4, late_name: t0 + 12}
 
 
 def test_failed_flush_removes_its_temp_object(client, monkeypatch):
