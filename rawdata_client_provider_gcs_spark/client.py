@@ -273,9 +273,17 @@ class RawdataProducer:
     writes through the client's one handle for the topic
     (:meth:`RawdataClient.topic`), which serializes their flushes and
     knows the topic's newest event, so a window that starts at or after
-    it lands as one object with no sidecar update.  Producers in two
-    processes (or two clients) writing one topic are outside the
-    contract, as the max-ts sidecar's read-modify-write already is.
+    it lands as one object with no sidecar update.  The handle keeps
+    those windows' max-ts sidecar entries in memory for its own reads and
+    saves them with its next sidecar write or when a producer closes.
+    Every writer of a topic in one process, ``publish_dataframe`` and
+    :func:`~.streaming.sink.stream_to_topic` included, must write through
+    that handle (``client.topic(name)``): another handle's writes leave
+    this one's view of the topic's newest event stale, and a later window
+    may then land without the entry that keeps the topic's reads
+    correct.  Producers in two processes (or two clients) writing one
+    topic are outside the contract, as the max-ts sidecar's
+    read-modify-write already is.
     """
 
     def __init__(self, client: RawdataClient, topic: str):
@@ -407,6 +415,7 @@ class RawdataProducer:
         self.flush()
         self._closed = True
         self._client._release(self)
+        self._topic.save_max_ts()
 
     def __enter__(self):
         return self
@@ -424,8 +433,10 @@ class RawdataConsumer:
     :func:`~.sources.topic.overlap_groups`): every message of a group
     precedes every message of the next one.  Delivery then comes from
 
-    - the **head** — the cursor's group plus its successor, and any file
-      before them that may end in the cursor's millisecond — read on the
+    - the **head** — the cursor's group plus its successor (plus one more
+      group when the cursor's group has a file with no max-ts entry,
+      which may end before the cursor), and any file before them that
+      may end in the cursor's millisecond — read on the
       driver (:meth:`~.sources.topic.Topic.read_local`: the files are
       copied to a driver temp folder and decoded by pyarrow), filtered on
       the cursor and sorted by ULID: no Spark job, and a bounded number of
@@ -527,11 +538,22 @@ class RawdataConsumer:
         lead = 0
         while lead + 1 < len(groups) and groups[lead + 1][0][1].from_ts_ms <= ts_ms:
             lead += 1
-        head = [pe for group in groups[: lead + 2] for pe in group]
-        if head and self._topic.fits_driver_read(head):
+        end = lead + 2
+        # a cursor group with an entry-less file may end before the cursor
+        # (a seek into the gap after a producer window): take one more
+        end += end < len(groups) and any(
+            e.filename not in max_ts for _, e in groups[lead]
+        )
+        head = [pe for group in groups[:end] for pe in group]
+        fits = bool(head) and self._topic.fits_driver_read(head)
+        if not fits and end > lead + 2:
+            end -= 1
+            head = head[: -len(groups[end])]
+            fits = self._topic.fits_driver_read(head)
+        if fits:
             table = self._after_cursor(self._topic.read_local(head))
             yield from _messages(table.sort_by("ulid"))
-            manifest = [pe for group in groups[lead + 2 :] for pe in group]
+            manifest = [pe for group in groups[end:] for pe in group]
         if manifest:
             # the cursor has moved past every head row by now
             for row in self._scan(manifest).orderBy("ulid").toLocalIterator():

@@ -943,6 +943,10 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                         np.clip(sm, 0.0, 255.0) * sk,
                         np.clip(sy, 0.0, 255.0) * sk], axis=2) / 255.0
         return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
+    if len(planes) != 3:
+        # a scan naming 0 or 2 of the frame's components (fuzz-found:
+        # IndexError must not escape the Arrow kernel)
+        raise ValueError(f"JPEG scan carries {len(planes)} components")
     if adobe_transform == 0:
         # Adobe transform 0 with three components: plain RGB planes
         rgb = np.stack(planes, axis=2)

@@ -52,8 +52,8 @@ so the number and speed of those round trips set its latency:
   ``put(atomic=True)`` values) through the raw FileSystem, with no
   ``.crc``, and renames them over the old object there; the checksummed
   FileSystem reads an object without a ``.crc`` unverified.  A stale
-  ``.crc`` left by a checksummed write is deleted once, before the
-  object's first raw replace.  A raw create also starts one ``chmod``
+  ``.crc`` left by a checksummed write is deleted before every raw
+  replace (one py4j call, no process).  A raw create also starts one ``chmod``
   process instead of two.  Schemes without such a raw FileSystem
   (``gs://``, HDFS, viewfs) keep delete + rename, and the object is
   briefly absent in between.
@@ -134,9 +134,6 @@ class HadoopFs:
         #: the raw local FileSystem under ``_fs``, resolved on the first
         #: replace (``False`` where there is none); see replace_object
         self._raw = None
-        #: objects whose ``.crc`` is known absent: replaced raw since this
-        #: handle last wrote them through the checksummed FileSystem
-        self._crc_free: set[str] = set()
 
     def path(self, uri: str):
         # every method starts here, so each thread's first call (the
@@ -222,7 +219,6 @@ class HadoopFs:
     def write_bytes(self, uri: str, payload: bytes) -> None:
         """Create (or overwrite) the object at ``uri``; the checksummed
         create also makes its parent folders."""
-        self._crc_free.discard(uri)
         _write_all(self._fs.create(self.path(uri), True), payload)
 
     def _raw_fs(self):
@@ -251,7 +247,7 @@ class HadoopFs:
         temp object is written through the raw FileSystem and renamed
         over the old one there, so a reader always finds the old object
         or the new one (see the module docstring); the object's stale
-        ``.crc``, if any, is deleted first, once per handle.  Elsewhere
+        ``.crc``, if any, is deleted first.  Elsewhere
         the rename is tried, and where the scheme refuses a rename onto an
         existing name the old object is deleted first: it is absent until
         the rename lands.
@@ -262,9 +258,9 @@ class HadoopFs:
         raw = self._raw_fs()
         if raw:
             path = self.path(uri)
-            if uri not in self._crc_free:
-                raw.delete(self._fs.getChecksumFile(path), False)
-                self._crc_free.add(uri)
+            # a checksummed write of this object (by any handle) leaves a
+            # .crc the new bytes would fail against
+            raw.delete(self._fs.getChecksumFile(path), False)
             tmp_path = self.path(tmp)
             _write_all(raw.create(tmp_path, True), payload)
             if not raw.rename(tmp_path, path):

@@ -47,6 +47,13 @@ reference's is (AvroRawdataProducer.java:162-190).  A write that may start
 inside an entry-less file's span gives that file its entry first
 (:meth:`Topic._bridge_entries`).  Reference-written topics have no
 sidecar and keep (I) by their producer's window rotation.
+
+An entry is also what lets a point read skip a file whose events end
+before the read's start.  So the handle keeps the entries of the
+windows it landed without one in memory, where its own reads use them,
+and saves them with its next sidecar write: an overlapping landing, a
+retirement, every :data:`SAVE_EVERY` such windows, or a producer's
+close (:meth:`Topic.save_max_ts`).
 """
 
 from __future__ import annotations
@@ -80,6 +87,10 @@ from .filenames import (
 )
 from .fsutil import HadoopFs
 
+#: entry-less windows a handle lands before it saves their entries to the
+#: sidecar (module docstring): bounds the handle's memory and what other
+#: processes' reads miss, at one sidecar rewrite per that many flushes
+SAVE_EVERY = 1024
 
 #: MESSAGE_SCHEMA in Arrow, field for field (map logical type for
 #: ``data``).  The flush writes it, and every file read on the driver is
@@ -201,8 +212,13 @@ class Topic:
         #: client share this handle (single writer per topic).
         self._newest_ts_ms: int | None = None
         self._last_key: tuple[int, str] = (-1, "")
-        #: one write at a time through this handle: the tail bounds above
-        #: and the sidecar's read-modify-write are not thread-safe
+        #: filename -> newest event time of the windows this handle landed
+        #: with no sidecar entry, not saved yet (module docstring);
+        #: :meth:`load_max_ts` serves them with the sidecar's entries
+        self._unsaved: dict[str, int] = {}
+        #: one write at a time through this handle: the tail bounds and
+        #: entries above and the sidecar's read-modify-write are not
+        #: thread-safe
         self._write_lock = threading.RLock()
         #: owner state while THIS handle holds the maintenance lock —
         #: lets maintain() hold one lock across its whole sweep while
@@ -296,7 +312,9 @@ class Topic:
         return f"{self.uri}/metadata/engine-file-maxts.json"
 
     def load_max_ts(self) -> dict[str, int]:
-        """filename -> max event-time ms of the files that have an entry.
+        """filename -> max event-time ms of the files that have an entry:
+        the sidecar's, plus those this handle holds unsaved (module
+        docstring).
 
         A file without one keeps invariant (I) (module docstring).  A
         torn or momentarily absent sidecar (a concurrent writer mid
@@ -308,28 +326,31 @@ class Topic:
         (``RawdataClient.topic``), so that table carries from one of its
         calls to the next.
         """
+        unsaved = self._unsaved
         uri = self._maxts_uri()
         if not self.fs.exists(uri):
-            if self._maxts_last_good is not None:
-                return dict(self._maxts_last_good)
-            return {}
+            return {**(self._maxts_last_good or {}), **unsaved}
         try:
             table = json.loads(self.fs.read_bytes(uri).decode("utf-8"))
         except (ValueError, UnicodeDecodeError):
-            if self._maxts_last_good is not None:
-                return dict(self._maxts_last_good)
-            return {}
+            return {**(self._maxts_last_good or {}), **unsaved}
         self._maxts_last_good = dict(table)
-        return table
+        return {**table, **unsaved}
 
     def _update_max_ts(
-        self, add: dict[str, int] | None = None, remove: list[str] | None = None
+        self,
+        add: dict[str, int] | None = None,
+        remove: list[str] | None = None,
+        table: dict[str, int] | None = None,
     ) -> None:
-        """Merge-update the sidecar.  Single-writer per topic by contract
-        (same exclusivity the reference's producer lock provides,
-        AvroRawdataProducer.java:206-216).  Removing an entry never breaks
-        invariant (I) for the files left; adding one is how a writer keeps
-        it (:meth:`_bridge_entries`).
+        """Merge-update the sidecar, saving this handle's unsaved entries
+        with it.  Single-writer per topic by contract (same exclusivity
+        the reference's producer lock provides,
+        AvroRawdataProducer.java:206-216); within a handle, under its
+        write lock.  Removing an entry never breaks invariant (I) for the
+        files left; adding one is how a writer keeps it
+        (:meth:`_bridge_entries`).  ``table`` is :meth:`load_max_ts`'s
+        result when the caller read it under the write lock.
 
         The write is :meth:`HadoopFs.replace_object` — temp object +
         rename, never a truncate-then-write of the live object, so no
@@ -339,13 +360,23 @@ class Topic:
         absent in between, which :meth:`load_max_ts` bridges with
         last-known-good.  The create makes the ``metadata/`` folder.
         """
-        table = self.load_max_ts()
-        for name in remove or []:
-            table.pop(name, None)
-        table.update(add or {})
-        payload = json.dumps(table, sort_keys=True).encode("utf-8")
-        self.fs.replace_object(self._maxts_uri(), payload)
-        self._maxts_last_good = dict(table)
+        with self._write_lock:
+            table = dict(self.load_max_ts() if table is None else table)
+            for name in remove or []:
+                table.pop(name, None)
+            table.update(add or {})
+            payload = json.dumps(table, sort_keys=True).encode("utf-8")
+            self.fs.replace_object(self._maxts_uri(), payload)
+            self._maxts_last_good = dict(table)
+            self._unsaved = {}
+
+    def save_max_ts(self) -> None:
+        """Save the entries this handle holds unsaved (module docstring)
+        to the sidecar; nothing to do when it holds none.  A producer
+        calls it on close."""
+        with self._write_lock:
+            if self._unsaved:
+                self._update_max_ts()
 
     # -- read ---------------------------------------------------------------
 
@@ -569,7 +600,10 @@ class Topic:
         final filenames after the facts are computed but BEFORE anything
         becomes visible (sidecar add, renames).  The streaming sink uses
         it to durably record a commit *intent* so a crash mid-commit can
-        be rolled back on replay (:mod:`..streaming.sink`).
+        be rolled back on replay (:mod:`..streaming.sink`).  The listing
+        that the twin check and the bridge entries use is taken after it,
+        under the handle's write lock, so no flush lands between that
+        listing and the renames.
         """
         parts = [
             (path, size)
@@ -602,6 +636,18 @@ class Topic:
             )
             renames.append((src, f"{self.uri}/{filename}"))
             max_ts_of[filename] = row["max_ts_ms"]
+        if pre_commit is not None:
+            pre_commit([dst.rsplit("/", 1)[-1] for _, dst in renames])
+        with self._write_lock:
+            final_paths = self._land_parts(renames, max_ts_of)
+        self.fs.delete(tmp_uri, recursive=True)
+        return final_paths
+
+    def _land_parts(
+        self, renames: list[tuple[str, str]], max_ts_of: dict[str, int]
+    ) -> list[str]:
+        """:meth:`_commit_part_files` under the write lock: land the part
+        files that have no logical twin; returns the final file URIs."""
         # logical-twin scan BEFORE anything lands: a replayed commit (the
         # streaming sink's write-then-epoch crash window, or an idempotent
         # re-append of the same rows) re-produces the same logical windows,
@@ -622,8 +668,6 @@ class Topic:
             twin_by_facts[
                 (have.from_ts_ms, have.count, have.first_position, have.ext)
             ] = path
-        if pre_commit is not None:
-            pre_commit([dst.rsplit("/", 1)[-1] for _, dst in renames])
         final_paths = []
         to_land = []
         for src, dst in renames:
@@ -640,15 +684,14 @@ class Topic:
                 self.fs.delete(src)
                 del max_ts_of[name]
                 final_paths.append(twin)
-        with self._write_lock:
-            entries = self._bridge_entries(
-                self._manifest_of(listing),
-                self.load_max_ts(),
-                [decode_filename(name) for name in max_ts_of],
-            )
-            entries.update(max_ts_of)
-            self._land(to_land, max_ts_of, entries)
-        self.fs.delete(tmp_uri, recursive=True)
+        table = self.load_max_ts()
+        entries = self._bridge_entries(
+            self._manifest_of(listing),
+            table,
+            [decode_filename(name) for name in max_ts_of],
+        )
+        entries.update(max_ts_of)
+        self._land(to_land, max_ts_of, entries, table)
         return final_paths
 
     def _file_max_ts(
@@ -735,6 +778,7 @@ class Topic:
         pairs: list[tuple[str, str]],
         max_ts: dict[str, int],
         entries: dict[str, int],
+        table: dict[str, int] | None = None,
     ) -> None:
         """Make written files visible: the one commit path of every write.
 
@@ -748,9 +792,12 @@ class Topic:
         write would see an entry-less file break (I), and
         :meth:`prune_from_timestamp` would over-prune; entries for files
         not yet visible are harmless.  With no entries the sidecar is
-        not touched.  More than two renames run on a thread pool;
-        sources stay invisible until each rename lands, so a crash
-        mid-way leaves a valid (shorter) topic, never a torn file.  On
+        not touched, and the landed files' max-ts join the handle's
+        unsaved entries, saved once there are :data:`SAVE_EVERY` of them
+        (module docstring); ``table`` is the caller's :meth:`load_max_ts`
+        result, read under the write lock.  More than two renames run on
+        a thread pool; sources stay invisible until each rename lands, so
+        a crash mid-way leaves a valid (shorter) topic, never a torn file.  On
         success the handle's tail bounds (:meth:`_tail`) advance over the
         landed files.  On failure the entries of exactly the renames that
         did not land are dropped (best effort, so failed commits don't
@@ -760,7 +807,7 @@ class Topic:
         if not pairs:
             return
         if entries:
-            self._update_max_ts(add=entries)
+            self._update_max_ts(add=entries, table=table)
         landed: set[str] = set()
 
         def rename(pair: tuple[str, str]) -> None:
@@ -792,6 +839,14 @@ class Topic:
             self._last_key = max(
                 self._last_key, *((decode_filename(n).from_ts_ms, n) for n in max_ts)
             )
+        unsaved = {n: ts for n, ts in max_ts.items() if n not in entries}
+        if unsaved:
+            self._unsaved = {**self._unsaved, **unsaved}
+            if len(self._unsaved) >= SAVE_EVERY:
+                try:
+                    self._update_max_ts()
+                except Exception:
+                    pass  # the files have landed; the entries wait for the next write
 
     def _retire(self, paths: list[str], quarantine: bool = False) -> list[str]:
         """Take data files out of the topic: the one exit path.
@@ -1390,14 +1445,16 @@ class Topic:
         with self._write_lock:
             newest, last_key = self._tail()
             entries = {}
+            table = None
             if from_ts < newest or (from_ts, filename) < last_key:
+                table = self.load_max_ts()
                 entries = self._bridge_entries(
-                    self.list_manifest(), self.load_max_ts(), [decode_filename(filename)]
+                    self.list_manifest(), table, [decode_filename(filename)]
                 )
                 entries[filename] = max_ts
             try:
                 self.fs.write_bytes(tmp, blob)
-                self._land([(tmp, dst)], {filename: max_ts}, entries)
+                self._land([(tmp, dst)], {filename: max_ts}, entries, table)
             except Exception:
                 # nothing sweeps temp objects and listings hide them, so a
                 # failed flush must not leave one behind (best effort)

@@ -109,6 +109,12 @@ def stream_to_topic(
     ``max_records_per_file`` — so file count and time-disjointness are
     controlled per batch and manifest pruning stays truthful for
     readers tailing concurrently.
+
+    Pass the client's handle, ``client.topic(name)``, when producers of
+    that client write the same topic: the handle serializes the sink's
+    landings with their flushes and keeps the topic's newest event they
+    rely on (``RawdataProducer``).  A second handle's writes leave that
+    view stale.
     """
     meta = RawdataMetadataClient(topic.fs, topic.uri, topic.name)
     key = _epoch_key(sink_id)

@@ -194,10 +194,11 @@ def test_copy_to_local_is_the_source_bytes_without_a_crc(spark, tmp_path):
 def test_replace_object_over_an_existing_object(spark, tmp_path, monkeypatch):
     """On ``file://`` replace_object renames the new object over the old
     one in one step: the old object is never deleted, so it is never
-    absent.  The old ``.crc`` goes before the first replace, Hadoop reads
+    absent.  The old ``.crc`` goes before the replace, Hadoop reads
     back the new bytes, and no temp object or ``.crc`` is left; a later
-    checksummed write of the object does not break the next replace.  A
-    FileSystem without a raw local one keeps delete + rename."""
+    checksummed write of the object, through this handle or another,
+    does not break the next replace.  A FileSystem without a raw local
+    one keeps delete + rename."""
     fs = HadoopFs(spark, f"file://{tmp_path}")
     uri = f"file://{tmp_path}/obj"
     fs.write_bytes(uri, b"old" * 1_000)
@@ -214,11 +215,12 @@ def test_replace_object_over_an_existing_object(spark, tmp_path, monkeypatch):
         fs.replace_object(uri, payload)
         assert fs.read_bytes(uri) == payload
         assert os.listdir(tmp_path) == ["obj"]
-    fs.write_bytes(uri, b"checksummed")
-    assert sorted(os.listdir(tmp_path)) == [".obj.crc", "obj"]
-    fs.replace_object(uri, b"after")
-    assert fs.read_bytes(uri) == b"after"
-    assert os.listdir(tmp_path) == ["obj"]
+    for writer in (fs, HadoopFs(spark, f"file://{tmp_path}")):
+        writer.write_bytes(uri, b"checksummed")
+        assert sorted(os.listdir(tmp_path)) == [".obj.crc", "obj"]
+        fs.replace_object(uri, b"after")
+        assert fs.read_bytes(uri) == b"after"
+        assert os.listdir(tmp_path) == ["obj"]
     assert deleted == []
 
     fs._raw = False  # as on a scheme with no raw local FileSystem

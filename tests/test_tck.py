@@ -505,9 +505,7 @@ def test_last_message_across_compacted_overlap(client):
 def test_position_cursor_prunes_upper_bound(client, monkeypatch):
     """cursor_of_position reads only files that can overlap its window
     ``[approx - tol, approx + tol]``: the floor file (and overlaps), never
-    the files after the upper bound.  The window starts in the gap after
-    an entry-less window, which is the floor: it can only be bounded by
-    the next file's start."""
+    the files after the upper bound."""
     t0 = 1_700_000_000_000
     topic = client.topic("pcu")
     for f in range(6):
@@ -524,8 +522,7 @@ def test_position_cursor_prunes_upper_bound(client, monkeypatch):
     )
     assert cur.ulid == ulid_mod.encode(target_ts, 2)
     names = [src.rsplit("/", 1)[-1] for src, _ in copied]
-    assert len(names) == 2, names
-    assert names[0].endswith("_p-1-0.parquet") and names[1].endswith("_p-2-0.parquet")
+    assert len(names) == 1 and names[0].endswith("_p-2-0.parquet")
     # the window is inclusive of its upper millisecond (reference overrun
     # rule): a message exactly at approx + tol is found
     edge = client.cursor_of_position(
@@ -1039,15 +1036,17 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
     neither a file nor its entry."""
     from rawdata_client_provider_gcs_spark.sources.filenames import is_topic_data_file
     from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+    from rawdata_client_provider_gcs_spark.sources.topic import Topic
 
     t0 = 1_700_000_000_000
     topic = client.topic("land")
+    stored = Topic(client.spark, client.root_uri, "land")  # no unsaved entries
     real_rename = HadoopFs.rename
     sidecar_at_rename = []
 
     def recording_rename(self, src, dst):
         if is_topic_data_file(dst):
-            sidecar_at_rename.append(topic.load_max_ts())
+            sidecar_at_rename.append(stored.load_max_ts())
         return real_rename(self, src, dst)
 
     def rows(stamps, rand0):
@@ -1058,11 +1057,16 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
 
     monkeypatch.setattr(HadoopFs, "rename", recording_rename)
     (first,) = topic.write_single_rows(rows(range(5), 0))
-    topic.write_single_rows(rows(range(10, 15), 10))
+    (second,) = topic.write_single_rows(rows(range(10, 15), 10))
     assert sidecar_at_rename == [{}, {}]
     (late,) = topic.write_single_rows(rows([2, 3, 12], 20))
-    first_name, late_name = (p.rsplit("/", 1)[-1] for p in (first, late))
-    assert sidecar_at_rename[2] == {first_name: t0 + 4, late_name: t0 + 12}
+    first_name, second_name, late_name = (
+        p.rsplit("/", 1)[-1] for p in (first, second, late)
+    )
+    # the first window's entry keeps (I); the handle saves the second's
+    # with it
+    landed = {first_name: t0 + 4, second_name: t0 + 14, late_name: t0 + 12}
+    assert sidecar_at_rename[2] == landed
 
     def failing_rename(self, src, dst):
         if is_topic_data_file(dst):
@@ -1073,7 +1077,7 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
     with pytest.raises(IOError):
         topic.write_single_rows(rows([1], 100))
     assert len(topic.list_manifest()) == 3
-    assert topic.load_max_ts() == {first_name: t0 + 4, late_name: t0 + 12}
+    assert topic.load_max_ts() == landed
 
 
 def test_failed_flush_removes_its_temp_object(client, monkeypatch):

@@ -18,6 +18,8 @@ import pytest
 
 from rawdata_client_provider_gcs_spark import RawdataClient, RawdataMessage
 from rawdata_client_provider_gcs_spark import ulid as ulid_mod
+from rawdata_client_provider_gcs_spark.sources import topic as topic_mod
+from rawdata_client_provider_gcs_spark.sources.topic import Topic
 from rawdata_client_provider_gcs_spark.ulid import UlidCursor
 from tests.test_fsutil import _count_py4j_commands
 
@@ -102,10 +104,17 @@ def drain_all(consumer):
         out.append(m)
 
 
+def disk_max_ts(topic):
+    """The sidecar's entries as stored, without those the handle holds
+    unsaved."""
+    return Topic(topic.spark, topic.root_uri, topic.name).load_max_ts()
+
+
 def assert_invariant(topic):
-    """(I) on the listed files, from the files' own messages."""
+    """(I) on the listed files, from the stored sidecar and the files' own
+    messages."""
     manifest = topic.list_manifest()
-    max_ts = topic.load_max_ts()
+    max_ts = disk_max_ts(topic)
     for (path, entry), (_, after) in zip(manifest, manifest[1:]):
         if entry.filename in max_ts:
             continue
@@ -157,7 +166,7 @@ def test_disjoint_flush_is_one_create_and_one_rename_at_20_and_200_files(
         tmp = calls[0][1][0]
         assert os.path.basename(tmp).startswith(".tmp-")
         assert calls[1][1] == (tmp, dst)
-        assert topic.load_max_ts() == {}
+        assert disk_max_ts(topic) == {}
         assert_invariant(topic)
         seen[n_files] = sent
     assert seen[20] == seen[200], seen
@@ -207,11 +216,15 @@ def test_flush_of_older_explicit_ulids_bridges_the_window_it_starts_in(client):
         )
         truth += [r[0] for r in late]
     topic = client.topic(name)
-    manifest = topic.list_manifest()
-    entries = topic.load_max_ts()
-    late_name = [e.filename for _, e in manifest if "_late-0." in e.filename][0]
-    w1_name = [e.filename for _, e in manifest if "_w1-0." in e.filename][0]
-    assert entries == {late_name: T0 + 1_105, w1_name: T0 + 1_110}
+    by_tag = {e.filename.rsplit("_", 1)[-1]: e.filename for _, e in topic.list_manifest()}
+    # w1's entry is the one (I) needs; the late window's own, and w0's and
+    # w2's (held unsaved until then), land with it
+    assert disk_max_ts(topic) == {
+        by_tag["w0-0.parquet"]: T0 + 110,
+        by_tag["w1-0.parquet"]: T0 + 1_110,
+        by_tag["w2-0.parquet"]: T0 + 2_110,
+        by_tag["late-0.parquet"]: T0 + 1_105,
+    }
     assert_invariant(topic)
     assert_reads_match(client, name, sorted(truth))
 
@@ -296,7 +309,7 @@ def test_event_time_publish_inside_an_entry_less_window(client, spark):
     truth = []
     for w in range(3):
         truth += window(topic, [T0 + w * 1_000 + i * 10 for i in range(30)], f"w{w}-", w * 100)
-    assert topic.load_max_ts() == {}
+    assert disk_max_ts(topic) == {}
     late = spark.createDataFrame(
         [(f"late-{i}", T0 + 1_105 + i * 7) for i in range(20)],
         "position string, ts_ms long",
@@ -306,9 +319,62 @@ def test_event_time_publish_inside_an_entry_less_window(client, spark):
     rows = topic.dataframe().filter("position LIKE 'late-%'").collect()
     truth = sorted(truth + [bytes(r["ulid"]) for r in rows])
     w1 = [e.filename for _, e in topic.list_manifest() if "_w1-0." in e.filename][0]
-    assert topic.load_max_ts()[w1] == T0 + 1_290
+    assert disk_max_ts(topic)[w1] == T0 + 1_290
     assert_invariant(topic)
     assert_reads_match(client, name, truth)
+
+
+def test_flush_inside_pre_commit_lands_before_the_bulk_listing(client, spark):
+    """A producer of the same client flushes a window while a bulk write
+    runs its ``pre_commit`` (between the bulk write's facts and its
+    landing); the bulk write lists the topic after that flush, its file
+    that starts inside the window lands after it, and every read
+    matches."""
+    name = "mid"
+    topic = client.topic(name)
+    producer = client.producer(name)
+    truth = window(topic, [T0 + i * 10 for i in range(10)], "w0-")
+    flushed = rows_at([T0 + 1_000 + i * 10 for i in range(30)], "w1-", 100)
+    late = spark.createDataFrame(
+        [(f"late-{i}", T0 + 1_105 + i * 7) for i in range(20)],
+        "position string, ts_ms long",
+    )
+
+    def flush_during_commit(names):
+        producer.publish(
+            *[RawdataMessage(position=r[3], data=r[4], ulid=r[0]) for r in flushed]
+        )
+        producer.flush()
+
+    real = topic._commit_part_files
+
+    def commit(tmp_uri, ext, pre_commit=None):
+        return real(tmp_uri, ext, pre_commit=flush_during_commit)
+
+    topic._commit_part_files = commit
+    calls = instrument(topic.fs)
+    try:
+        producer.publish_dataframe(late, ts_ms_col="ts_ms")
+    finally:
+        uninstrument(topic.fs)
+        del topic._commit_part_files
+    producer.close()
+    renames = [i for i, (m, args) in enumerate(calls) if m == "rename"]
+    (flushed_at,) = [i for i in renames if "_w1-0." in calls[i][1][1]]
+    (landed_at,) = [i for i in renames if "_late-0." in calls[i][1][1]]
+    assert any(
+        calls[i] == ("list_children", (topic.uri,))
+        for i in range(flushed_at, landed_at)
+    ), calls
+    rows = topic.dataframe().filter("position LIKE 'late-%'").collect()
+    assert len(rows) == 20
+    truth = sorted(truth + [r[0] for r in flushed] + [bytes(r["ulid"]) for r in rows])
+    w1 = [e.filename for _, e in topic.list_manifest() if "_w1-0." in e.filename][0]
+    assert disk_max_ts(topic)[w1] == T0 + 1_290
+    assert_invariant(topic)
+    fresh = RawdataClient(spark, client.root_uri)
+    assert_reads_match(fresh, name, truth)
+    fresh.close()
 
 
 def test_compact_of_non_adjacent_entry_less_windows_keeps_the_invariant(client):
@@ -340,17 +406,110 @@ def test_bridge_above_the_driver_bound_reads_with_one_aggregate(client, spark):
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key, None)
     spark.conf.set(key, "64")
+    other = RawdataClient(spark, client.root_uri)
     try:
-        topic = client.topic("agg")
-        window(topic, [T0, T0 + 40, T0 + 80], "p %, ")
+        window(client.topic("agg"), [T0, T0 + 40, T0 + 80], "p %, ")
+        # another client's handle holds no entry for p, so it reads p
+        topic = other.topic("agg")
         window(topic, [T0 + 20, T0 + 30], "q", 10)
     finally:
+        other.close()
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
     (p_name,) = [e.filename for _, e in topic.list_manifest() if "_p %, 0." in e.filename]
-    assert topic.load_max_ts()[p_name] == T0 + 80
+    assert disk_max_ts(topic)[p_name] == T0 + 80
+    assert_invariant(topic)
+
+
+# -- entries an entry-less window's reads use --------------------------------
+
+
+def _gap_lookup_copies(client, name):
+    """Files copied by a ``cursor_of_position`` whose window starts in the
+    gap after window w1 and finds w2's third message."""
+    topic = client.topic(name)
+    calls = instrument(topic.fs)
+    found = client.cursor_of_position(name, "w2-2", True, T0 + 2_020, 300)
+    uninstrument(topic.fs)
+    assert found.ulid == ulid_mod.encode(T0 + 2_020, 202)
+    return [args[0].rsplit("/", 1)[-1] for m, args in calls if m == "copy_to_local"]
+
+
+def test_producer_windows_keep_their_entries_for_point_reads(client, spark):
+    """The handle serves the entries of the windows it landed without one,
+    so its point reads skip a window that ends before their start; a
+    producer's close saves them, and another client's reads skip it too.
+    Until then another client reads that window as well."""
+    name = "gap"
+    with client.producer(name) as producer:
+        for w in range(4):
+            producer.publish(
+                *[
+                    RawdataMessage(position=r[3], data=r[4], ulid=r[0])
+                    for r in rows_at([T0 + w * 1_000 + i * 10 for i in range(5)], f"w{w}-", w * 100)
+                ]
+            )
+            producer.flush()
+        assert disk_max_ts(client.topic(name)) == {}
+        copied = _gap_lookup_copies(client, name)
+        assert len(copied) == 1 and "_w2-0." in copied[0], copied
+        other = RawdataClient(spark, client.root_uri)
+        assert len(_gap_lookup_copies(other, name)) == 2
+        other.close()
+    assert len(disk_max_ts(client.topic(name))) == 4
+    fresh = RawdataClient(spark, client.root_uri)
+    copied = _gap_lookup_copies(fresh, name)
+    assert len(copied) == 1 and "_w2-0." in copied[0], copied
+    fresh.close()
+
+
+def test_seek_into_the_gap_after_an_entry_less_window_reads_on_the_driver(
+    client, spark
+):
+    """A consumer seeking into the gap after a window that has no entry
+    reads that window, and two after it, on the driver: reading on into
+    the second runs no Spark job."""
+    from tests.test_tck import _spark_work
+
+    name = "seekgap"
+    truth = []
+    with client.producer(name) as producer:
+        for w in range(4):
+            rows = rows_at([T0 + w * 1_000 + i * 10 for i in range(5)], f"w{w}-", w * 100)
+            producer.publish(
+                *[RawdataMessage(position=r[3], data=r[4], ulid=r[0]) for r in rows]
+            )
+            producer.flush()
+            truth += [r[0] for r in rows]
+        other = RawdataClient(spark, client.root_uri)
+        assert other.topic(name).load_max_ts() == {}
+
+        def seek_and_read():
+            consumer = other.consumer(name, seek_to_ts_ms=T0 + 1_500)
+            return [consumer.receive(0).ulid for _ in range(8)]
+
+        got, jobs, _ = _spark_work(spark, seek_and_read)
+        other.close()
+    assert got == truth[10:18]
+    assert jobs == 0
+
+
+def test_a_handle_saves_its_entries_every_save_every_windows(client, monkeypatch):
+    """Once a handle holds SAVE_EVERY unsaved entries, the flush that
+    reaches that count saves them after its rename."""
+    monkeypatch.setattr(topic_mod, "SAVE_EVERY", 3)
+    topic = client.topic("bound")
+    for w in range(7):
+        calls = instrument(topic.fs)
+        window(topic, [T0 + w * 100 + i for i in range(3)], f"w{w}-", w * 10)
+        uninstrument(topic.fs)
+        methods = [m for m, _ in calls]
+        assert methods[:2] == ["write_bytes", "rename"] or w == 0, methods
+        assert ("replace_object" in methods) == (w in (2, 5)), (w, methods)
+    assert len(disk_max_ts(topic)) == 6
+    assert len(topic.load_max_ts()) == 7
     assert_invariant(topic)
 
 
@@ -437,6 +596,21 @@ def test_every_crash_point_of_an_overlapping_flush(spark, tmp_path):
         return window(topic, [T0 + 15, T0 + 25, T0 + 150], "c", 200)
 
     assert _crash_every_call(spark, tmp_path, build, flush) > 2
+
+
+def test_an_overlapping_flush_reads_the_sidecar_once(client):
+    """An overlapping flush reads the stored sidecar once: the table it
+    bridges from is the one it rewrites."""
+    topic = client.topic("once")
+    window(topic, [T0 + i * 10 for i in range(5)], "a")
+    window(topic, [T0 + 100 + i * 10 for i in range(5)], "b", 100)
+    window(topic, [T0 + 15, T0 + 150], "c", 200)  # stores the sidecar
+    calls = instrument(topic.fs)
+    window(topic, [T0 + 35, T0 + 160], "d", 300)
+    uninstrument(topic.fs)
+    methods = [m for m, _ in calls]
+    assert methods.count("read_bytes") == 1 and "replace_object" in methods, methods
+    assert_invariant(topic)
 
 
 # -- replace with no gap; polling a topic that does not exist ----------------
