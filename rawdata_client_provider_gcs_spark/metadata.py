@@ -101,9 +101,9 @@ class RawdataMetadataClient:
         that refuses a rename onto an existing key the old value is
         deleted first and :meth:`get` returns None until the rename lands.
         The plain path matches the reference's create/overwrite semantics
-        (FilesystemRawdataMetadataClient.java:62-68).
+        (FilesystemRawdataMetadataClient.java:62-68).  Either write makes
+        the ``metadata/`` folder.
         """
-        self._fs.mkdirs(self._dir)
         final = f"{self._dir}/{escape_key(key)}"
         if atomic:
             self._fs.replace_object(final, value)

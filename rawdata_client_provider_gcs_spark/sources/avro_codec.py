@@ -280,9 +280,12 @@ def messages_from_binary_files(
     instead of failing the scan.
 
     ``with_file`` appends a ``file`` column carrying each row's
-    ``binaryFile`` path — the rows are synthesized here, so
+    ``binaryFile`` path, percent-encoded like the ``input_file_name()``
+    of the native readers — the rows are synthesized here, so
     ``input_file_name()`` is empty downstream of this decode.
     """
+    from urllib.parse import quote
+
     from pyspark.sql.types import StringType, StructField, StructType
 
     from ..datamodel import MESSAGE_SCHEMA
@@ -319,7 +322,7 @@ def messages_from_binary_files(
                     }
                 )
                 if with_file:
-                    out["file"] = path
+                    out["file"] = quote(path, safe="/:")
                 yield out
 
     return files_df.select("path", "content").mapInPandas(decode, schema)

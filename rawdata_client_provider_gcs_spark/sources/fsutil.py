@@ -42,27 +42,42 @@ so the number and speed of those round trips set its latency:
   sets the new file's permission by running ``chmod`` in a child process
   (two processes and ~7 ms per copy).
 
-- **Objects that are replaced are replaced with no gap.**  With pip
+- **``file://`` objects are written on the driver.**  With pip
   pyspark's classpath ``file://`` resolves to Hive's
-  ``ProxyLocalFileSystem``, a checksummed local FileSystem whose rename
-  onto an existing name returns False.  Its raw FileSystem
-  (``RawLocalFileSystem``) renames with POSIX ``rename(2)``, which
-  replaces the old object in one step.  So :meth:`HadoopFs.replace_object`
-  writes the objects it replaces (the max-ts sidecar, group cursors,
-  ``put(atomic=True)`` values) through the raw FileSystem, with no
-  ``.crc``, and renames them over the old object there; the checksummed
-  FileSystem reads an object without a ``.crc`` unverified.  A stale
-  ``.crc`` left by a checksummed write is deleted before every raw
-  replace (one py4j call, no process).  A raw create also starts one ``chmod``
-  process instead of two.  Schemes without such a raw FileSystem
-  (``gs://``, HDFS, viewfs) keep delete + rename, and the object is
-  briefly absent in between.
+  ``ProxyLocalFileSystem``, a checksummed FileSystem over Hadoop's raw
+  local one.  Without the native-hadoop library its create sets each new
+  file's permission by running ``chmod`` in a child process, once for the
+  file and once for its ``.crc``: four processes and ~10 ms per object.
+  So where ``_fs`` is such a FileSystem, :meth:`HadoopFs.write_bytes`,
+  :meth:`HadoopFs.create_exclusive` and :meth:`HadoopFs.replace_object`
+  write with plain file I/O instead, and start no process.  The new file
+  gets Hadoop's mode (``0o666`` less the configured umask) and a ``.crc``
+  byte-identical to Hadoop's (:func:`_crc_file`): ``crc`` and a zero
+  byte, the big-endian bytes-per-checksum, then one big-endian CRC-32 per
+  chunk of that many bytes, so
+  every read through Hadoop still verifies it.  Renames, reads, listings
+  and every other scheme stay on Hadoop.
+- **Objects that are replaced are replaced with no gap.**  The local
+  FileSystem's rename onto an existing name returns False, but POSIX
+  ``rename(2)`` replaces the old object in one step.  So on ``file://``
+  :meth:`HadoopFs.replace_object` (the max-ts sidecar, group cursors,
+  ``put(atomic=True)`` values) writes a temp object with no ``.crc``,
+  deletes the stale ``.crc`` of the old object, if any, and renames the
+  temp object over it with ``os.replace``; the checksummed FileSystem
+  reads an object without a ``.crc`` unverified.  Schemes without a raw
+  local FileSystem (``gs://``, HDFS, viewfs) keep delete + rename, and
+  the object is briefly absent in between.
 """
 
 from __future__ import annotations
 
+import contextlib
+import os
 import re
+import struct
 import threading
+import uuid
+import zlib
 
 from py4j.java_gateway import is_instance_of
 from py4j.protocol import Py4JError, Py4JJavaError
@@ -107,6 +122,34 @@ def _set_tcp_nodelay(jvm) -> None:
         pass
 
 
+def _crc_file(payload: bytes, bytes_per_sum: int) -> bytes:
+    """The ``.crc`` a Hadoop ChecksumFileSystem writes for ``payload``:
+    its version magic, the big-endian bytes-per-checksum, then one
+    big-endian CRC-32 per ``bytes_per_sum`` chunk."""
+    view = memoryview(payload)
+    sums = [
+        zlib.crc32(view[i : i + bytes_per_sum])
+        for i in range(0, len(view), bytes_per_sum)
+    ]
+    return b"crc\0" + struct.pack(f">i{len(sums)}I", bytes_per_sum, *sums)
+
+
+def _crc_path(path: str) -> str:
+    """Where Hadoop's ChecksumFileSystem keeps the ``.crc`` of ``path``."""
+    folder, name = os.path.split(path)
+    return os.path.join(folder, f".{name}.crc")
+
+
+def _write_file(path: str, payload: bytes, mode: int, flags: int) -> None:
+    """Write ``payload`` to the driver file ``path``, opened with
+    ``O_CREAT`` plus ``flags`` (``O_TRUNC`` or ``O_EXCL``), and give it
+    permission ``mode``, which the process umask does not narrow."""
+    fd = os.open(path, os.O_WRONLY | os.O_CREAT | flags, mode)
+    with open(fd, "wb") as fh:
+        os.fchmod(fd, mode)
+        fh.write(payload)
+
+
 def _write_all(stream, payload: bytes) -> None:
     """Write ``payload`` to a JVM output stream and close it."""
     try:
@@ -131,9 +174,48 @@ class HadoopFs:
         self._conf = spark._jsc.hadoopConfiguration()
         self._root = self._path_class(uri)
         self._fs = self._root.getFileSystem(self._conf)
-        #: the raw local FileSystem under ``_fs``, resolved on the first
-        #: replace (``False`` where there is none); see replace_object
-        self._raw = None
+        #: (bytes per checksum, new-file mode) where objects are written
+        #: on the driver (module docstring), else None
+        self._local = self._local_writes()
+
+    def _local_writes(self) -> tuple[int, int] | None:
+        """Hadoop's bytes-per-checksum and new-file mode when ``_fs`` is a
+        checksummed FileSystem over the raw local one, else None."""
+        if not is_instance_of(
+            self._gateway, self._fs, "org.apache.hadoop.fs.ChecksumFileSystem"
+        ) or not is_instance_of(
+            self._gateway,
+            self._fs.getRawFileSystem(),
+            "org.apache.hadoop.fs.RawLocalFileSystem",
+        ):
+            return None
+        # the umask the FileSystem's own create applies
+        umask = self._jvm.org.apache.hadoop.fs.permission.FsPermission.getUMask(
+            self._fs.getConf()
+        ).toShort()
+        return self._fs.getBytesPerSum(), 0o666 & ~umask
+
+    def _driver_path(self, uri: str) -> str | None:
+        """The driver path the object at ``uri`` is written to: that of a
+        ``file:`` URI or a schemeless absolute path, read as Hadoop's
+        ``Path`` reads it (no percent-decoding).  None where it is written
+        through Hadoop: another FileSystem, or a URI with a host."""
+        if self._local is None:
+            return None
+        for prefix in ("file://", "file:"):
+            if uri.startswith(prefix):
+                uri = uri[len(prefix) :]
+                break
+        return uri if uri.startswith("/") else None
+
+    def _write_checksummed(self, path: str, payload: bytes, flags: int) -> None:
+        """Write ``payload`` and its ``.crc`` as the checksummed create
+        would, making the parent folders."""
+        bytes_per_sum, mode = self._local
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        _write_file(path, payload, mode, flags)
+        crc = _crc_file(payload, bytes_per_sum)
+        _write_file(_crc_path(path), crc, mode, os.O_TRUNC)
 
     def path(self, uri: str):
         # every method starts here, so each thread's first call (the
@@ -217,25 +299,13 @@ class HadoopFs:
         return self.list_children(uri)[1]
 
     def write_bytes(self, uri: str, payload: bytes) -> None:
-        """Create (or overwrite) the object at ``uri``; the checksummed
-        create also makes its parent folders."""
+        """Create (or overwrite) the object at ``uri`` and its ``.crc``;
+        the create also makes its parent folders."""
+        path = self._driver_path(uri)
+        if path is not None:
+            self._write_checksummed(path, payload, os.O_TRUNC)
+            return
         _write_all(self._fs.create(self.path(uri), True), payload)
-
-    def _raw_fs(self):
-        """The raw local FileSystem under a checksummed ``_fs``, else
-        ``False``: the one FileSystem here whose rename replaces an
-        existing object."""
-        if self._raw is None:
-            self._raw = False
-            if is_instance_of(
-                self._gateway, self._fs, "org.apache.hadoop.fs.ChecksumFileSystem"
-            ):
-                raw = self._fs.getRawFileSystem()
-                if is_instance_of(
-                    self._gateway, raw, "org.apache.hadoop.fs.RawLocalFileSystem"
-                ):
-                    self._raw = raw
-        return self._raw
 
     def replace_object(self, uri: str, payload: bytes) -> None:
         """Commit ``payload`` at ``uri`` via temp-object + rename.
@@ -243,30 +313,32 @@ class HadoopFs:
         The commit primitive of every object that is rewritten in place
         (max-ts sidecar, sketch table, group cursors, epoch markers):
         never a truncate-then-write of the live object, so no reader sees
-        a torn file.  On a checksummed local FileSystem (``file://``) the
-        temp object is written through the raw FileSystem and renamed
-        over the old one there, so a reader always finds the old object
-        or the new one (see the module docstring); the object's stale
-        ``.crc``, if any, is deleted first.  Elsewhere
-        the rename is tried, and where the scheme refuses a rename onto an
-        existing name the old object is deleted first: it is absent until
-        the rename lands.
+        a torn file.  On ``file://`` the temp object is written with no
+        ``.crc``, the old object's stale ``.crc`` is deleted, and the temp
+        object is renamed over the old one with ``os.replace``, so a
+        reader always finds the old object or the new one (see the module
+        docstring).  Elsewhere the rename is tried, and where the scheme
+        refuses a rename onto an existing name the old object is deleted
+        first: it is absent until the rename lands.  Either way the write
+        makes the parent folders.
         """
-        import uuid as _uuid
-
-        tmp = f"{uri}.tmp-{_uuid.uuid4().hex}"
-        raw = self._raw_fs()
-        if raw:
-            path = self.path(uri)
-            # a checksummed write of this object (by any handle) leaves a
-            # .crc the new bytes would fail against
-            raw.delete(self._fs.getChecksumFile(path), False)
-            tmp_path = self.path(tmp)
-            _write_all(raw.create(tmp_path, True), payload)
-            if not raw.rename(tmp_path, path):
-                raw.delete(tmp_path, False)
-                raise IOError(f"object replace failed: {uri}")
+        suffix = f".tmp-{uuid.uuid4().hex}"
+        path = self._driver_path(uri)
+        if path is not None:
+            tmp_path = path + suffix
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            _write_file(tmp_path, payload, self._local[1], os.O_TRUNC)
+            try:
+                # a checksummed write of this object leaves a .crc the
+                # new bytes would fail against
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(_crc_path(path))
+                os.replace(tmp_path, path)
+            except OSError:
+                os.unlink(tmp_path)
+                raise
             return
+        tmp = uri + suffix
         self.write_bytes(tmp, payload)
         if not self.rename(tmp, uri):
             self.delete(uri)
@@ -277,11 +349,19 @@ class HadoopFs:
     def create_exclusive(self, uri: str, payload: bytes) -> bool:
         """Create-if-absent: False when the object already exists.
 
-        Uses Hadoop's non-overwrite create, which maps to an atomic
-        ``O_CREAT|O_EXCL``-style precondition on HDFS/local and an
-        if-generation-match precondition on the GCS connector — the
-        primitive behind advisory maintenance locks.
+        On ``file://`` the object is opened with ``O_CREAT|O_EXCL``, so of
+        many racing creators exactly one wins.  Elsewhere it is Hadoop's
+        non-overwrite create, an if-generation-match precondition on the
+        GCS connector and an atomic create on HDFS — the primitive behind
+        advisory maintenance locks.
         """
+        path = self._driver_path(uri)
+        if path is not None:
+            try:
+                self._write_checksummed(path, payload, os.O_EXCL)
+            except FileExistsError:
+                return False
+            return True
         try:
             stream = self._fs.create(self.path(uri), False)
         except Exception:

@@ -472,17 +472,20 @@ class Topic:
 
     def per_file_agg(
         self, files: list[tuple[str, str]], *aggs, ignore_corrupt: bool = False
-    ) -> DataFrame:
-        """One distributed aggregate per data file: a ``file`` column (the
-        file's URI) plus ``aggs`` over its rows, for ``(path, ext)``
-        pairs of any format.  Files that yield no rows have no output
-        row.  Backs the commit's manifest facts, :meth:`fsck` and the
+    ) -> dict:
+        """One distributed aggregate per data file, for ``(path, ext)``
+        pairs of any format: filename -> the row of ``aggs`` over its
+        rows, collected on the driver.  Files that yield no rows have no
+        entry.  Backs the commit's manifest facts, :meth:`fsck` and the
         sketch sidecar (:mod:`.topic_stats`)."""
-        return (
+        rows = (
             self._scan(files, ignore_corrupt, with_file=True)
             .groupBy("file")
             .agg(*aggs)
+            .collect()
         )
+        # the scan's file column is a percent-encoded URI
+        return {unquote(r["file"].rsplit("/", 1)[-1]): r for r in rows}
 
     def _scan(
         self,
@@ -491,7 +494,8 @@ class Topic:
         with_file: bool = False,
     ) -> DataFrame:
         """Distributed scan of ``(path, ext)`` pairs in MESSAGE_SCHEMA,
-        plus a ``file`` column when ``with_file``.
+        plus a ``file`` column when ``with_file``: each row's file URI,
+        percent-encoded as ``input_file_name()`` gives it.
 
         Avro files are read by the native datasource when spark-avro is
         on the classpath; otherwise each file is decoded by the engine's
@@ -619,13 +623,12 @@ class Topic:
             F.max("ulid_ts_ms").alias("max_ts_ms"),
             F.count(F.lit(1)).alias("cnt"),
             F.min_by("position", "ulid").alias("first_position"),
-        ).collect()
+        )
         size_by_name = {p.rsplit("/", 1)[-1]: s for p, s in parts}
         path_by_name = {p.rsplit("/", 1)[-1]: p for p, _ in parts}
         renames: list[tuple[str, str]] = []
         max_ts_of: dict[str, int] = {}
-        for row in stats:
-            part_name = row["file"].rsplit("/", 1)[-1]
+        for part_name, row in stats.items():
             src = path_by_name[part_name]
             filename = encode_filename(
                 from_ts_ms=row["from_ts_ms"],
@@ -707,9 +710,8 @@ class Topic:
             }
         rows = self.per_file_agg(
             [(p, e.ext) for p, e in manifest], F.max("ulid_ts_ms").alias("hi")
-        ).collect()
-        # the scan's file column is a percent-encoded URI
-        return {unquote(r["file"].rsplit("/", 1)[-1]): r["hi"] for r in rows}
+        )
+        return {name: r["hi"] for name, r in rows.items()}
 
     def _tail(self) -> tuple[int, tuple[int, str]]:
         """The topic's newest event time and its last listed file's sort
@@ -1007,9 +1009,9 @@ class Topic:
             yield
             return
         uri = self._maintenance_lock_uri()
-        self.fs.mkdirs(f"{self.uri}/metadata")
         owner = uuid.uuid4().hex
         payload = json.dumps({"op": op, "owner": owner}).encode("utf-8")
+        # the create makes the metadata/ folder
         if not self.fs.create_exclusive(uri, payload):
             raise ConcurrentMaintenanceError(
                 f"maintenance already running on topic {self.name!r} "
@@ -1295,8 +1297,8 @@ class Topic:
                 F.count(F.lit(1)).alias("n"),
                 F.min("ulid_ts_ms").alias("t0"),
                 ignore_corrupt=True,
-            ).collect()
-            actual = {r["file"].rsplit("/", 1)[-1]: (r["n"], r["t0"]) for r in got}
+            )
+            actual = {name: (r["n"], r["t0"]) for name, r in got.items()}
         out = []
         for name, (exp_n, exp_t0) in expected.items():
             act_n, act_t0 = actual.get(name, (0, None))

@@ -52,7 +52,7 @@ def load_sketches(topic) -> dict:
 
 def _store_sketches(topic, table: dict) -> None:
     payload = json.dumps(table, sort_keys=True).encode("utf-8")
-    topic.fs.mkdirs(f"{topic.uri}/metadata")
+    # the replace makes the metadata/ folder
     topic.fs.replace_object(_sketch_uri(topic), payload)
 
 
@@ -62,10 +62,10 @@ def _sketch_files(topic, paths: list[str], exts: dict, column: str, lg_k: int):
     rows = topic.per_file_agg(
         [(p, exts[p]) for p in paths],
         F.expr(f"hll_sketch_agg({column}, {lg_k})").alias("sk"),
-    ).collect()
+    )
     return {
-        r["file"].rsplit("/", 1)[-1]: base64.b64encode(bytes(r["sk"])).decode()
-        for r in rows
+        name: base64.b64encode(bytes(r["sk"])).decode()
+        for name, r in rows.items()
         if r["sk"] is not None  # column all-NULL in this file
     }
 

@@ -1,11 +1,16 @@
 """HadoopFs on the installed Hadoop: the one-reply listing parse, the py4j
-round-trip bound of a topic listing, and Nagle off on py4j connections."""
+round-trip bound of a topic listing, Nagle off on py4j connections, and
+``file://`` objects written on the driver as Hadoop's checksummed create
+would write them."""
 
 import os
+import stat
 import threading
 
 import pytest
 
+from rawdata_client_provider_gcs_spark import RawdataClient, RawdataMessage
+from rawdata_client_provider_gcs_spark import ulid as ulid_mod
 from rawdata_client_provider_gcs_spark.sources import fsutil
 from rawdata_client_provider_gcs_spark.sources.filenames import encode_filename
 from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
@@ -223,7 +228,154 @@ def test_replace_object_over_an_existing_object(spark, tmp_path, monkeypatch):
         assert os.listdir(tmp_path) == ["obj"]
     assert deleted == []
 
-    fs._raw = False  # as on a scheme with no raw local FileSystem
+    fs._local = None  # as on a scheme with no raw local FileSystem
     fs.replace_object(uri, b"fallback")
     assert fs.read_bytes(uri) == b"fallback"
     assert deleted == [uri]
+
+
+def _hadoop_writer(spark, root):
+    """A handle that writes through Hadoop's checksummed create, as on a
+    scheme with no raw local FileSystem under its checksummed one."""
+    fs = HadoopFs(spark, root)
+    fs._local = None
+    return fs
+
+
+@pytest.mark.parametrize("size", [0, 1, 511, 512, 513, 200_001])
+def test_local_crc_equals_hadoops(spark, tmp_path, size):
+    """A ``file://`` object written on the driver has the bytes and the
+    ``.crc`` a Hadoop create of the same payload has, at chunk edges
+    (512 bytes per checksum) and past py4j's reply buffer."""
+    payload = os.urandom(size)
+    root = f"file://{tmp_path}"
+    fs = HadoopFs(spark, root)
+    assert fs._local is not None
+    fs.write_bytes(f"{root}/ours/obj", payload)
+    _hadoop_writer(spark, root).write_bytes(f"{root}/hadoop/obj", payload)
+    ours, hadoop = tmp_path / "ours", tmp_path / "hadoop"
+    assert sorted(os.listdir(ours)) == sorted(os.listdir(hadoop)) == [".obj.crc", "obj"]
+    assert (ours / "obj").read_bytes() == (hadoop / "obj").read_bytes() == payload
+    assert (ours / ".obj.crc").read_bytes() == (hadoop / ".obj.crc").read_bytes()
+
+
+def _modes(folder):
+    return {n: stat.S_IMODE(os.stat(folder / n).st_mode) for n in os.listdir(folder)}
+
+
+@pytest.mark.parametrize("process_umask", [None, 0o077])
+def test_local_modes_equal_hadoops(spark, tmp_path, process_umask):
+    """Objects and ``.crc`` files written on the driver get the mode bits
+    Hadoop's create gives them (``0o666`` less the FileSystem's umask),
+    whatever the driver process's umask; so does a replaced object."""
+    root = f"file://{tmp_path}"
+    writers = (("ours", HadoopFs(spark, root)), ("hadoop", _hadoop_writer(spark, root)))
+    saved = os.umask(process_umask) if process_umask is not None else None
+    try:
+        for side, fs in writers:
+            fs.write_bytes(f"{root}/{side}/obj", b"object")
+            assert fs.create_exclusive(f"{root}/{side}/lock", b"lock")
+            fs.replace_object(f"{root}/{side}/replaced", b"replaced")
+    finally:
+        if saved is not None:
+            os.umask(saved)
+    ours, hadoop = _modes(tmp_path / "ours"), _modes(tmp_path / "hadoop")
+    # the replace writes no .crc on the driver; Hadoop's renames one along
+    assert ours == {n: m for n, m in hadoop.items() if n != ".replaced.crc"}
+
+
+def _flip_middle_byte(path):
+    data = bytearray(path.read_bytes())
+    data[len(data) // 2] ^= 0xFF
+    path.write_bytes(bytes(data))
+
+
+def test_flipped_byte_fails_every_checksummed_read(spark, tmp_path):
+    """The ``.crc`` written on the driver is the one Hadoop verifies: a
+    byte flipped in a flushed data file fails ``read_bytes``,
+    ``copy_to_local`` and a Spark scan of the topic."""
+    client = RawdataClient(spark, str(tmp_path / "root"))
+    with client.producer("t") as producer:
+        for i in range(50):
+            producer.publish(RawdataMessage(position=f"p-{i}", data={"k": os.urandom(64)}))
+    topic = client.topic("t")
+    [(uri, entry)] = topic.list_manifest()
+    folder = tmp_path / "root" / "t"
+    assert (folder / f".{entry.filename}.crc").exists()
+    assert topic.dataframe().count() == 50
+    _flip_middle_byte(folder / entry.filename)
+    with pytest.raises(Exception, match="ChecksumException"):
+        topic.fs.read_bytes(uri)
+    with pytest.raises(Exception, match="ChecksumException"):
+        topic.fs.copy_to_local(uri, str(tmp_path / "copy"))
+    with pytest.raises(Exception, match="ChecksumException"):
+        topic.dataframe().collect()
+    client.close()
+
+
+def _record_py4j_commands(monkeypatch):
+    from py4j.clientserver import ClientServerConnection
+
+    sent = []
+    real_send = ClientServerConnection.send_command
+
+    def send_command(conn, command):
+        sent.append(command)
+        return real_send(conn, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", send_command)
+    return sent
+
+
+def _creates(sent):
+    """The py4j commands that call a JVM method named ``create``."""
+    return [c for c in sent if c.startswith("c\n") and "\ncreate\n" in c]
+
+
+def test_file_writes_send_no_create_to_the_jvm(spark, tmp_path, monkeypatch):
+    """On ``file://`` a producer flush, a group-cursor commit, an object
+    replace and an exclusive create reach no Hadoop create; a handle
+    writing through Hadoop sends one per object."""
+    client = RawdataClient(spark, str(tmp_path / "root"))
+    topic = client.topic("t")
+    sent = _record_py4j_commands(monkeypatch)
+    with client.producer("t") as producer:
+        for i in range(5):
+            producer.publish(RawdataMessage(position=f"p-{i}", data={"k": b"v"}))
+    client.commit_group_cursor("g", "t", ulid_mod.encode(1_700_000_000_000, 1))
+    topic.fs.replace_object(f"{topic.uri}/metadata/obj", b"replaced")
+    assert topic.fs.create_exclusive(f"{topic.uri}/metadata/lock", b"lock")
+    assert _creates(sent) == []
+    consumer = client.consumer("t")
+    assert [consumer.receive(0).position for _ in range(5)] == [
+        f"p-{i}" for i in range(5)
+    ]
+    assert client.group_cursor("g", "t").ulid == ulid_mod.encode(1_700_000_000_000, 1)
+    assert topic.fs.read_bytes(f"{topic.uri}/metadata/obj") == b"replaced"
+
+    _hadoop_writer(spark, topic.root_uri).write_bytes(f"{topic.uri}/metadata/h", b"h")
+    assert len(_creates(sent)) == 1
+    client.close()
+
+
+def test_create_exclusive_has_one_winner(spark, tmp_path):
+    """Six threads race to create one lock object: exactly one wins, and
+    the object holds the winner's bytes."""
+    fs = HadoopFs(spark, f"file://{tmp_path}")
+    uri = f"file://{tmp_path}/metadata/engine-maintenance.lock"
+    racers = 6
+    barrier = threading.Barrier(racers)
+    won = {}
+
+    def race(i):
+        barrier.wait()
+        won[i] = fs.create_exclusive(uri, f"owner-{i}".encode() * 100)
+
+    threads = [threading.Thread(target=race, args=(i,)) for i in range(racers)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    winners = [i for i, ok in won.items() if ok]
+    assert len(won) == racers and len(winners) == 1, won
+    assert fs.read_bytes(uri) == f"owner-{winners[0]}".encode() * 100

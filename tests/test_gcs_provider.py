@@ -108,6 +108,25 @@ def test_gcs_listing_matches_per_status_reading(spark, gs_mount):
     assert fs.list_files("gs://fake-bucket/missing") == []
 
 
+def test_gcs_writes_go_through_hadoop(spark, gs_mount, monkeypatch):
+    """Only ``file://`` objects are written on the driver: on the viewfs
+    mount every write is a Hadoop create, and the objects read back."""
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+    from tests.test_fsutil import _creates, _record_py4j_commands
+
+    fs = HadoopFs(spark, "gs://fake-bucket/w")
+    assert fs._local is None
+    sent = _record_py4j_commands(monkeypatch)
+    fs.write_bytes("gs://fake-bucket/w/obj", b"written")
+    fs.replace_object("gs://fake-bucket/w/obj", b"replaced")
+    assert fs.create_exclusive("gs://fake-bucket/w/lock", b"lock")
+    assert not fs.create_exclusive("gs://fake-bucket/w/lock", b"again")
+    assert len(_creates(sent)) == 4
+    assert fs.read_bytes("gs://fake-bucket/w/obj") == b"replaced"
+    assert fs.read_bytes("gs://fake-bucket/w/lock") == b"lock"
+    assert (gs_mount / "w" / "obj").read_bytes() == b"replaced"
+
+
 def test_gcs_connector_conf_scoping():
     """Credential scoping parity with GCSRawdataClientInitializer.java:43-82."""
     rw = gcs_connector_conf(keyfile="/secrets/sa.json", upload_chunk_mb=8)

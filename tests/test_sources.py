@@ -531,6 +531,38 @@ def test_fsck_detects_lying_manifest_facts(spark, tmp_path):
     assert flagged[0]["actual_count"] == entry.count
 
 
+@pytest.mark.parametrize("file_format", ["parquet", "avro"])
+def test_fsck_and_sketches_key_files_by_their_real_names(
+    spark, tmp_path, file_format
+):
+    """A window whose first position holds a space, ``%`` and a comma
+    lands in a file named with it raw, while a scan's file column is
+    percent-encoded: fsck audits the file ok, and its sketch is stored
+    under its real name, with no mkdirs on the way."""
+    from rawdata_client_provider_gcs_spark.sources import topic_stats
+    from tests.test_topic_writes import instrument, uninstrument
+
+    client = RawdataClient(spark, str(tmp_path), file_format=file_format)
+    with client.producer("t") as p:
+        for i in range(3):
+            p.publish(RawdataMessage(position=f"p %, {i}", data={"k": b"v"}))
+    topic = client.topic("t")
+    [(_, entry)] = topic.list_manifest()
+    assert "_p %, 0." in entry.filename
+    audit = topic.fsck().collect()
+    assert [(r["filename"], r["actual_count"], r["ok"]) for r in audit] == [
+        (entry.filename, 3, True)
+    ]
+    calls = instrument(topic.fs)
+    try:
+        sketches = topic_stats.refresh_sketches(topic)
+    finally:
+        uninstrument(topic.fs)
+    assert list(sketches) == [entry.filename] and sketches[entry.filename]
+    assert "mkdirs" not in [name for name, _ in calls]
+    client.close()
+
+
 def test_fsck_flags_corrupt_file_instead_of_dying(spark, tmp_path):
     """fsck must report a corrupt file (actual_count 0, not ok), not
     crash on it — finding broken files is its job."""

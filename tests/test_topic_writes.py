@@ -6,8 +6,8 @@ Covers the producer flush that lands as one object, the writes that must
 give an entry-less file its entry (an overlapping window, interleaved
 producers, an event-time bulk publish, compaction), the reads that rely
 on (I) at a window split inside one millisecond, every crash point of a
-flush, the gap-free group-cursor replace, and polling a topic that does
-not exist yet."""
+flush, the gap-free group-cursor replace, metadata writes that make their
+own folder, and polling a topic that does not exist yet."""
 
 import os
 import sys
@@ -614,6 +614,20 @@ def test_an_overlapping_flush_reads_the_sidecar_once(client):
 
 
 # -- replace with no gap; polling a topic that does not exist ----------------
+
+
+def test_group_cursor_commit_on_a_fresh_topic_makes_no_mkdirs(client):
+    """The commit's write makes the topic's ``metadata/`` folder: a fresh
+    topic's first group-cursor commit is one replace and no mkdirs, and
+    the cursor reads back."""
+    topic = client.topic("fresh")
+    calls = instrument(topic.fs)
+    try:
+        client.commit_group_cursor("g", "fresh", ulid_mod.encode(T0, 7))
+    finally:
+        uninstrument(topic.fs)
+    assert [name for name, _ in calls] == ["replace_object"]
+    assert client.group_cursor("g", "fresh").ulid == ulid_mod.encode(T0, 7)
 
 
 def test_group_cursor_is_never_absent_while_it_is_committed(client):
