@@ -431,28 +431,23 @@ class RawdataConsumer:
     sidecar once, prunes to the files that can hold messages after the
     cursor, and splits them into groups of time-overlapping files (see
     :func:`~.sources.topic.overlap_groups`): every message of a group
-    precedes every message of the next one.  Delivery then comes from
+    precedes every message of the next one.  Delivery walks those groups
+    in order, reading the next one only when the last is exhausted, as
+    the reference walks its files (AvroRawdataConsumer.java:143-179):
 
-    - the **head** — the cursor's group plus its successor (plus one more
-      group when the cursor's group has a file with no max-ts entry,
-      which may end before the cursor), and any file before them that
-      may end in the cursor's millisecond — read on the
-      driver (:meth:`~.sources.topic.Topic.read_local`: the files are
-      copied to a driver temp folder and decoded by pyarrow), filtered on
-      the cursor and sorted by ULID: no Spark job, and a bounded number of
-      files whatever the topic's size.  This is the reference's
-      floorEntry/higherEntry walk (AvroRawdataConsumer.java:143-179) at
-      group granularity, read in-process as the reference reads it;
-    - the **tail** — every later file — read only once the head is
-      exhausted, as one range-sorted Spark scan (``orderBy("ulid")``), so
-      a full drain runs a number of jobs that does not grow with the file
-      count.
+    - a group whose manifest bytes are at most
+      ``spark.sql.files.maxPartitionBytes``, the amount Spark already
+      gives one scan task, is read on the driver
+      (:meth:`~.sources.topic.Topic.read_local`: the files are copied to a
+      driver temp folder and decoded by pyarrow), filtered on the cursor
+      and sorted by ULID: no Spark job;
+    - a larger group is read alone as one Spark scan sorted by ULID and
+      delivered through ``toLocalIterator``; ``seek`` and ``close`` close
+      that scan while it is still open.
 
-    The head is read on the driver only while its manifest byte size is
-    at most ``spark.sql.files.maxPartitionBytes``, the amount Spark
-    already gives one scan task; a larger head goes straight to the
-    range-sorted scan.  ``seek`` and ``close`` close a tail scan that is
-    still open.
+    So a seek plus a short read touches only the groups it reaches, and
+    the driver holds at most one group (within the bound) at a time.  For
+    bulk reads use :meth:`dataframe`.
 
     On exhaustion ``receive(timeout)`` re-lists the topic (throttled by
     ``listing_min_interval_seconds``, TopicAvroFileCache.java:23-30) every
@@ -525,39 +520,22 @@ class RawdataConsumer:
         )
 
     def _rows(self, manifest):
-        """Messages after the cursor in ULID order: the head group pair
-        read on the driver, then the rest range-sorted (see the class
-        docstring)."""
-        ts_ms = ulid_mod.timestamp_ms(self._after_ulid)
+        """Messages after the cursor in ULID order, one overlap group at a
+        time (see the class docstring)."""
         max_ts = self._topic.load_max_ts()
-        manifest = self._topic.prune_from_timestamp(manifest, ts_ms, max_ts)
-        groups = overlap_groups(manifest, max_ts)
-        # the cursor's group is the last one to start at or before the
-        # cursor; any before it were kept only because they may end in
-        # the cursor's millisecond (a window split inside it)
-        lead = 0
-        while lead + 1 < len(groups) and groups[lead + 1][0][1].from_ts_ms <= ts_ms:
-            lead += 1
-        end = lead + 2
-        # a cursor group with an entry-less file may end before the cursor
-        # (a seek into the gap after a producer window): take one more
-        end += end < len(groups) and any(
-            e.filename not in max_ts for _, e in groups[lead]
+        manifest = self._topic.prune_from_timestamp(
+            manifest, ulid_mod.timestamp_ms(self._after_ulid), max_ts
         )
-        head = [pe for group in groups[:end] for pe in group]
-        fits = bool(head) and self._topic.fits_driver_read(head)
-        if not fits and end > lead + 2:
-            end -= 1
-            head = head[: -len(groups[end])]
-            fits = self._topic.fits_driver_read(head)
-        if fits:
-            table = self._after_cursor(self._topic.read_local(head))
-            yield from _messages(table.sort_by("ulid"))
-            manifest = [pe for group in groups[end:] for pe in group]
-        if manifest:
-            # the cursor has moved past every head row by now
-            for row in self._scan(manifest).orderBy("ulid").toLocalIterator():
-                yield RawdataMessage.from_row(row)
+        bound = self._topic.driver_read_bytes()
+        # a group before the cursor's is kept only because it may end in
+        # the cursor's millisecond; the cursor filter drops its older rows
+        for group in overlap_groups(manifest, max_ts):
+            if sum(e.last_block_offset for _, e in group) <= bound:
+                table = self._after_cursor(self._topic.read_local(group))
+                yield from _messages(table.sort_by("ulid"))
+            else:
+                for row in self._scan(group).orderBy("ulid").toLocalIterator():
+                    yield RawdataMessage.from_row(row)
 
     def _rebuild_iter(self, manifest=None) -> None:
         if manifest is None:

@@ -50,7 +50,8 @@ so the number and speed of those round trips set its latency:
   file and once for its ``.crc``: four processes and ~10 ms per object.
   So where ``_fs`` is such a FileSystem, :meth:`HadoopFs.write_bytes`,
   :meth:`HadoopFs.create_exclusive` and :meth:`HadoopFs.replace_object`
-  write with plain file I/O instead, and start no process.  The new file
+  write with plain file I/O instead, and :meth:`HadoopFs.mkdirs` makes
+  folders with ``os.makedirs``: none of them starts a process.  The new file
   gets Hadoop's mode (``0o666`` less the configured umask) and a ``.crc``
   byte-identical to Hadoop's (:func:`_crc_file`): ``crc`` and a zero
   byte, the big-endian bytes-per-checksum, then one big-endian CRC-32 per
@@ -227,6 +228,13 @@ class HadoopFs:
         return self._fs.exists(self.path(uri))
 
     def mkdirs(self, uri: str) -> bool:
+        """Make the folder at ``uri`` and its parents; on ``file://`` with
+        ``os.makedirs``, as the object writes make theirs, since Hadoop's
+        local ``mkdirs`` runs ``chmod`` in a child process per new folder."""
+        path = self._driver_path(uri)
+        if path is not None:
+            os.makedirs(path, exist_ok=True)
+            return True
         return self._fs.mkdirs(self.path(uri))
 
     def delete(self, uri: str, recursive: bool = False) -> bool:

@@ -12,13 +12,13 @@ Spark-first mapping (SURVEY.md §3.4/§4):
   AvroRawdataConsumer.java:153-157), then one of two reads of the pruned
   file list.  Bulk reads are one distributed scan
   (:meth:`Topic.read_files`: ``spark.read.parquet(paths…)`` plus Avro),
-  with row-level predicates pushed down to it.  Point reads — the
-  consumer's head, lastMessage, cursorOf — touch a handful of files, so
-  while those files' bytes fit one scan task's share
-  (:meth:`Topic.fits_driver_read`) they are read on the driver with
-  pyarrow (:meth:`Topic.read_local`), as the reference reads them
-  in-process (AvroRawdataConsumer.java:143-179): no Spark job, whose fixed
-  cost would otherwise be most of the read.
+  with row-level predicates pushed down to it.  Point reads —
+  lastMessage, cursorOf, and each overlap group the consumer walks to —
+  touch a handful of files, so while those files' bytes fit one scan
+  task's share (:meth:`Topic.fits_driver_read`) they are read on the
+  driver with pyarrow (:meth:`Topic.read_local`), as the reference reads
+  them in-process (AvroRawdataConsumer.java:143-179): no Spark job, whose
+  fixed cost would otherwise be most of the read.
 - **Write** = a window encoded on the driver (producer flush,
   :meth:`Topic.write_single_rows`) or task files written by executors via
   the commit protocol (:meth:`Topic.write_dataframe`; this replaces the
@@ -75,7 +75,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 
 from ..datamodel import MESSAGE_SCHEMA
 from . import avro_codec
@@ -425,13 +425,16 @@ class Topic:
             manifest = [pe for pe in manifest if pe[1].from_ts_ms <= to_ts_ms]
         return manifest
 
+    def driver_read_bytes(self) -> int:
+        """``spark.sql.files.maxPartitionBytes``, the share Spark gives one
+        scan task: the most manifest bytes read on the driver
+        (:meth:`read_local`) in one go.  Four py4j round trips."""
+        return self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+
     def fits_driver_read(self, manifest: list[tuple[str, FileManifestEntry]]) -> bool:
         """True when ``manifest``'s bytes are at most
-        ``spark.sql.files.maxPartitionBytes``, the share Spark gives one
-        scan task: few enough to read on the driver (:meth:`read_local`)."""
-        conf = self.spark._jsparkSession.sessionState().conf()
-        total = sum(e.last_block_offset for _, e in manifest)
-        return total <= conf.filesMaxPartitionBytes()
+        :meth:`driver_read_bytes`: few enough to read on the driver."""
+        return sum(e.last_block_offset for _, e in manifest) <= self.driver_read_bytes()
 
     def read_local(self, manifest: list[tuple[str, FileManifestEntry]]) -> pa.Table:
         """The listed files read on the driver, unordered, as one table in
@@ -615,7 +618,6 @@ class Topic:
             if path.rsplit("/", 1)[-1].startswith("part-") and size > 0
         ]
         if not parts:
-            self.fs.delete(tmp_uri, recursive=True)
             return []
         stats = self.per_file_agg(
             [(p, ext) for p, _ in parts],
@@ -642,9 +644,7 @@ class Topic:
         if pre_commit is not None:
             pre_commit([dst.rsplit("/", 1)[-1] for _, dst in renames])
         with self._write_lock:
-            final_paths = self._land_parts(renames, max_ts_of)
-        self.fs.delete(tmp_uri, recursive=True)
-        return final_paths
+            return self._land_parts(renames, max_ts_of)
 
     def _land_parts(
         self, renames: list[tuple[str, str]], max_ts_of: dict[str, int]
@@ -904,31 +904,37 @@ class Topic:
             raise ValueError(f"unsupported topic format: {ext}")
         self.fs.mkdirs(self.uri)
         tmp_uri = f"{self.uri}/.tmp-{uuid.uuid4().hex}"
-        writer_df = df.select([f.name for f in MESSAGE_SCHEMA.fields])
-        if range_partition:
-            writer_df = writer_df.repartitionByRange("ulid")
-        if ext == "parquet":
-            writer = writer_df.write.mode("overwrite")
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", max_records_per_file)
-            writer.parquet(tmp_uri)
-        elif avro_codec.avro_datasource_available(self.spark):
-            env = writer_df.select(
-                F.col("ulid").alias("id"),
-                F.col("ordering_group").alias("orderingGroup"),
-                F.col("sequence_number").alias("sequenceNumber"),
-                F.col("position"),
-                F.col("data"),
-            )
-            writer = env.write.mode("overwrite").format("avro").option(
-                "avroSchema", avro_codec.ENVELOPE_SCHEMA_JSON
-            )
-            if max_records_per_file:
-                writer = writer.option("maxRecordsPerFile", max_records_per_file)
-            writer.save(tmp_uri)
-        else:
-            self._write_avro_parts(writer_df, tmp_uri, max_records_per_file)
-        return self._commit_part_files(tmp_uri, ext, pre_commit=pre_commit)
+        try:
+            writer_df = df.select([f.name for f in MESSAGE_SCHEMA.fields])
+            if range_partition:
+                writer_df = writer_df.repartitionByRange("ulid")
+            if ext == "parquet":
+                writer = writer_df.write.mode("overwrite")
+                if max_records_per_file:
+                    writer = writer.option("maxRecordsPerFile", max_records_per_file)
+                writer.parquet(tmp_uri)
+            elif avro_codec.avro_datasource_available(self.spark):
+                env = writer_df.select(
+                    F.col("ulid").alias("id"),
+                    F.col("ordering_group").alias("orderingGroup"),
+                    F.col("sequence_number").alias("sequenceNumber"),
+                    F.col("position"),
+                    F.col("data"),
+                )
+                writer = env.write.mode("overwrite").format("avro").option(
+                    "avroSchema", avro_codec.ENVELOPE_SCHEMA_JSON
+                )
+                if max_records_per_file:
+                    writer = writer.option("maxRecordsPerFile", max_records_per_file)
+                writer.save(tmp_uri)
+            else:
+                self._write_avro_parts(writer_df, tmp_uri, max_records_per_file)
+            return self._commit_part_files(tmp_uri, ext, pre_commit=pre_commit)
+        finally:
+            # nothing sweeps temp folders and listings hide them, so a
+            # failed write or commit must not leave one behind (best effort)
+            with suppress(Exception):
+                self.fs.delete(tmp_uri, recursive=True)
 
     def _write_avro_parts(
         self,
@@ -1460,9 +1466,7 @@ class Topic:
             except Exception:
                 # nothing sweeps temp objects and listings hide them, so a
                 # failed flush must not leave one behind (best effort)
-                try:
+                with suppress(Exception):
                     self.fs.delete(tmp)
-                except Exception:
-                    pass
                 raise
         return [dst]

@@ -358,6 +358,28 @@ def test_file_writes_send_no_create_to_the_jvm(spark, tmp_path, monkeypatch):
     client.close()
 
 
+def _mkdirs(sent):
+    """The py4j commands that call a JVM method named ``mkdirs``."""
+    return [c for c in sent if c.startswith("c\n") and "\nmkdirs\n" in c]
+
+
+def test_file_mkdirs_sends_no_mkdirs_to_the_jvm(spark, tmp_path, monkeypatch):
+    """On ``file://`` a mkdirs of a new nested folder, and of one that
+    exists, reaches no Hadoop mkdirs, and Hadoop then finds the folder; a
+    handle going through Hadoop sends one."""
+    root = f"file://{tmp_path}"
+    fs = HadoopFs(spark, root)
+    fs.exists(root)  # this thread's connection is set up
+    sent = _record_py4j_commands(monkeypatch)
+    assert fs.mkdirs(f"{root}/a/b/c")
+    assert fs.mkdirs(f"{root}/a/b/c")
+    assert _mkdirs(sent) == []
+    assert fs.exists(f"{root}/a/b/c") and (tmp_path / "a" / "b" / "c").is_dir()
+    assert fs.list_dirs(f"{root}/a") == ["b"]
+    assert _hadoop_writer(spark, root).mkdirs(f"{root}/h/i")
+    assert len(_mkdirs(sent)) == 1 and (tmp_path / "h" / "i").is_dir()
+
+
 def test_create_exclusive_has_one_winner(spark, tmp_path):
     """Six threads race to create one lock object: exactly one wins, and
     the object holds the winner's bytes."""

@@ -127,6 +127,21 @@ def test_gcs_writes_go_through_hadoop(spark, gs_mount, monkeypatch):
     assert (gs_mount / "w" / "obj").read_bytes() == b"replaced"
 
 
+def test_gcs_mkdirs_goes_through_hadoop(spark, gs_mount, monkeypatch):
+    """Only ``file://`` folders are made on the driver: on the viewfs
+    mount a mkdirs is a Hadoop mkdirs, and the folder lands in the
+    mount's backing folder."""
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+    from tests.test_fsutil import _mkdirs, _record_py4j_commands
+
+    fs = HadoopFs(spark, "gs://fake-bucket/m")
+    sent = _record_py4j_commands(monkeypatch)
+    assert fs.mkdirs("gs://fake-bucket/m/a/b")
+    assert len(_mkdirs(sent)) == 1
+    assert fs.exists("gs://fake-bucket/m/a/b")
+    assert (gs_mount / "m" / "a" / "b").is_dir()
+
+
 def test_gcs_connector_conf_scoping():
     """Credential scoping parity with GCSRawdataClientInitializer.java:43-82."""
     rw = gcs_connector_conf(keyfile="/secrets/sa.json", upload_chunk_mb=8)

@@ -537,7 +537,7 @@ def test_position_cursor_prunes_upper_bound(client, monkeypatch):
         )
 
 
-# -- the consumer's read path: head group pair, then a range-sorted tail -----
+# -- the consumer's read path: one overlap group at a time -------------------
 
 
 def _record_copies(monkeypatch):
@@ -611,15 +611,14 @@ def _assert_seeks_ordered_and_complete(client, name, truth, seek_points):
         assert exc == [x for x in truth if x > u]
 
 
-def test_consumer_ordered_across_compacted_overlap_group(client):
+def _compacted_overlap_topic(client, name):
     """Compacting non-adjacent small files makes one file that overlaps
-    the big files between them: a group of three.  Seeks into, across and
-    after that group deliver every later message exactly once, in ULID
-    order, through both the head read and the range-sorted tail."""
+    the big files between them: a group of three, then three groups of
+    one big file each.  Returns the topic, its ULIDs sorted, and t0."""
     from rawdata_client_provider_gcs_spark.sources.topic import overlap_groups
 
     t0 = 1_700_000_000_000
-    topic = client.topic("og")
+    topic = client.topic(name)
     truth = _write_windows(
         topic,
         [
@@ -640,6 +639,14 @@ def test_consumer_ordered_across_compacted_overlap_group(client):
     assert len(new_files) == 1 and len(removed) == 3
     groups = overlap_groups(topic.list_manifest(), topic.load_max_ts())
     assert [len(g) for g in groups] == [3, 1, 1, 1]
+    return topic, truth, t0
+
+
+def test_consumer_ordered_across_compacted_overlap_group(client):
+    """Seeks into, across and after a three-file overlap group deliver
+    every later message exactly once, in ULID order, with each group read
+    on the driver."""
+    _, truth, t0 = _compacted_overlap_topic(client, "og")
     _assert_seeks_ordered_and_complete(
         client,
         "og",
@@ -677,8 +684,8 @@ def test_consumer_ordered_across_event_time_publish_overlap(client, spark):
 
 def test_seek_read_of_part_of_a_file_runs_no_shuffle(client, spark, monkeypatch):
     """Seeking and reading fewer messages than one file holds reads the
-    cursor's group pair on the driver: no Spark job, no shuffle, and only
-    those two files."""
+    cursor's group on the driver: no Spark job, no shuffle, and only that
+    one file."""
     t0 = 1_700_000_000_000
     topic = client.topic("ns")
     truth = _write_windows(topic, [(i * 1_000, 20, 10) for i in range(12)], t0)
@@ -694,12 +701,13 @@ def test_seek_read_of_part_of_a_file_runs_no_shuffle(client, spark, monkeypatch)
     assert got == truth[start : start + 5]
     assert jobs == 0
     assert shuffle == 0
-    assert [src for src, _ in copied] == [manifest[5][0], manifest[6][0]]
+    assert [src for src, _ in copied] == [manifest[5][0]]
 
 
 def test_full_drain_job_count_does_not_grow_with_files(client, spark):
-    """A full drain runs a fixed number of Spark jobs however many files
-    the topic holds: the head runs none, the tail one range-sorted scan."""
+    """A full drain of a topic whose overlap groups each fit
+    ``spark.sql.files.maxPartitionBytes`` runs no Spark job, at 6 files
+    and at 24."""
     t0 = 1_700_000_000_000
     counts = {}
     for n_files in (6, 24):
@@ -710,11 +718,11 @@ def test_full_drain_job_count_does_not_grow_with_files(client, spark):
         got, jobs, _ = _spark_work(spark, lambda: _drain_all(client.consumer(name)))
         assert got == truth
         counts[n_files] = jobs
-    assert counts[24] <= counts[6], counts
+    assert counts == {6: 0, 24: 0}, counts
 
 
 def test_tail_poll_after_head_and_tail(client):
-    """A consumer that drained a multi-file topic (head then tail) picks
+    """A consumer that drained a multi-file topic group by group picks
     up files created after it subscribed, in order, without repeats."""
     t0 = 1_700_000_000_000
     topic = client.topic("tp")
@@ -852,8 +860,9 @@ def test_metadata_keys_of_a_new_topic_skip_the_missing_folder_listing(
 
 
 def test_closed_consumer_ends_its_tail_scan(client):
-    """close() and seek() close a consumer's open tail scan (a generator
-    mid-drain); a new consumer on the same session still drains it all."""
+    """close() and seek() close a consumer's open read (a generator
+    mid-drain, here in its third group); a new consumer on the same
+    session still drains it all."""
     import inspect
 
     t0 = 1_700_000_000_000
@@ -861,7 +870,7 @@ def test_closed_consumer_ends_its_tail_scan(client):
         client.topic("ct"), [(i * 1_000, 10, 10) for i in range(6)], t0
     )
     consumer = client.consumer("ct")
-    assert [m.ulid for m in drain(consumer, 25)] == truth[:25]  # head is 20
+    assert [m.ulid for m in drain(consumer, 25)] == truth[:25]  # 10 per group
     scan = consumer._iter
     assert inspect.getgeneratorstate(scan) == inspect.GEN_SUSPENDED
     consumer.close()
@@ -953,6 +962,45 @@ def test_point_reads_above_the_bound_take_the_spark_path(
     assert [m.ulid for m in drained] == truth[15:27]
     assert last.ulid == truth[-1]
     assert cursor == truth[24]
+
+
+def test_a_group_over_the_bound_is_read_alone_through_spark(
+    client, spark, monkeypatch, task_bytes
+):
+    """With ``spark.sql.files.maxPartitionBytes`` between one file's bytes
+    and a three-file overlap group's, that group is read alone as one
+    sorted Spark scan and every later group on the driver.  Seeks stay
+    ordered and complete, and a seek in the middle of the Spark scan
+    closes it and reads on in order from the new point."""
+    import inspect
+
+    from rawdata_client_provider_gcs_spark.sources.topic import overlap_groups
+
+    topic, truth, t0 = _compacted_overlap_topic(client, "over")
+    manifest = topic.list_manifest()
+    groups = overlap_groups(manifest, topic.load_max_ts())
+    bound = max(e.last_block_offset for _, e in manifest)
+    assert sum(e.last_block_offset for _, e in groups[0]) > bound
+    task_bytes(str(bound))
+    copied = _record_copies(monkeypatch)
+    got, jobs, _ = _spark_work(spark, lambda: _drain_all(client.consumer("over")))
+    assert got == truth
+    assert jobs > 0
+    assert [src for src, _ in copied] == [path for g in groups[1:] for path, _ in g]
+    _assert_seeks_ordered_and_complete(
+        client,
+        "over",
+        truth,
+        [t0, t0 + 5, t0 + 20_007, t0 + 40_014, t0 + 45_000, t0 + 60_000],
+    )
+    consumer = client.consumer("over")
+    assert [m.ulid for m in drain(consumer, 5)] == truth[:5]
+    scan = consumer._iter
+    consumer.seek(t0 + 10_200)
+    assert inspect.getgeneratorstate(scan) == inspect.GEN_CLOSED
+    assert _drain_all(consumer) == [
+        u for u in truth if ulid_mod.timestamp_ms(u) >= t0 + 10_200
+    ]
 
 
 def test_avro_topic_point_reads_match_the_spark_path(

@@ -6,8 +6,9 @@ Covers the producer flush that lands as one object, the writes that must
 give an entry-less file its entry (an overlapping window, interleaved
 producers, an event-time bulk publish, compaction), the reads that rely
 on (I) at a window split inside one millisecond, every crash point of a
-flush, the gap-free group-cursor replace, metadata writes that make their
-own folder, and polling a topic that does not exist yet."""
+flush, a refused bulk landing, the gap-free group-cursor replace,
+metadata writes that make their own folder, and polling a topic that
+does not exist yet."""
 
 import os
 import sys
@@ -611,6 +612,29 @@ def test_an_overlapping_flush_reads_the_sidecar_once(client):
     methods = [m for m, _ in calls]
     assert methods.count("read_bytes") == 1 and "replace_object" in methods, methods
     assert_invariant(topic)
+
+
+def test_a_refused_bulk_landing_leaves_no_temp_folder(
+    client, spark, tmp_path, monkeypatch
+):
+    """A ``publish_dataframe`` whose part-file renames are refused raises,
+    and leaves no ``.tmp-`` folder in the topic folder."""
+    from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
+
+    real = HadoopFs.rename
+    monkeypatch.setattr(
+        HadoopFs,
+        "rename",
+        lambda self, src, dst: "/.tmp-" not in src and real(self, src, dst),
+    )
+    df = spark.createDataFrame([(f"p-{i}",) for i in range(20)], "position string")
+    producer = client.producer("leak")
+    with pytest.raises(OSError):
+        producer.publish_dataframe(df)
+    producer.close()
+    listed = os.listdir(tmp_path / "root" / "leak")
+    assert not [n for n in listed if n.startswith(".tmp-")], listed
+    assert drain_all(client.consumer("leak")) == []
 
 
 # -- replace with no gap; polling a topic that does not exist ----------------
