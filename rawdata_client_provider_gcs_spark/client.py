@@ -83,10 +83,7 @@ class RawdataClient:
         """The client's one handle for topic ``name`` (compared after
         ``strip("/")``): every call returns the same :class:`Topic`, and
         its producers, consumers, point reads and :meth:`metadata` all go
-        through it.  So the handle's ``HadoopFs`` is built once, its last
-        good max-ts sidecar bridges a torn sidecar read from one call to
-        the next, and it knows the topic's newest event for every
-        producer's flush."""
+        through it, so the handle's ``HadoopFs`` is built once."""
         key = name.strip("/")
         topic = self._topics.get(key)
         if topic is None:
@@ -267,23 +264,12 @@ class RawdataProducer:
     AvroRawdataProducer.java:101-133).  For bulk data, use
     ``publish_dataframe`` which is the distributed path.
 
-    Single writer per topic, as in the reference, whose producers of a
-    topic exclude each other with an in-process lock
-    (AvroRawdataProducer.java:206-216).  Here every producer of a client
-    writes through the client's one handle for the topic
-    (:meth:`RawdataClient.topic`), which serializes their flushes and
-    knows the topic's newest event, so a window that starts at or after
-    it lands as one object with no sidecar update.  The handle keeps
-    those windows' max-ts sidecar entries in memory for its own reads and
-    saves them with its next sidecar write or when a producer closes.
-    Every writer of a topic in one process, ``publish_dataframe`` and
-    :func:`~.streaming.sink.stream_to_topic` included, must write through
-    that handle (``client.topic(name)``): another handle's writes leave
-    this one's view of the topic's newest event stale, and a later window
-    may then land without the entry that keeps the topic's reads
-    correct.  Producers in two processes (or two clients) writing one
-    topic are outside the contract, as the max-ts sidecar's
-    read-modify-write already is.
+    The window's file name carries its first and newest event times, so
+    a flush is one create plus one rename wherever the window falls, and
+    readers order windows from the names alone: producers of one client,
+    of two clients or of two processes may write one topic.  The
+    reference's producers of a topic exclude each other with an
+    in-process lock (AvroRawdataProducer.java:206-216) instead.
     """
 
     def __init__(self, client: RawdataClient, topic: str):
@@ -415,7 +401,6 @@ class RawdataProducer:
         self.flush()
         self._closed = True
         self._client._release(self)
-        self._topic.save_max_ts()
 
     def __enter__(self):
         return self
@@ -427,9 +412,10 @@ class RawdataProducer:
 class RawdataConsumer:
     """Ordered sequential consume with tail-polling (S5/S6).
 
-    Read model.  Each (re)build lists the manifest once, reads the max-ts
-    sidecar once, prunes to the files that can hold messages after the
-    cursor, and splits them into groups of time-overlapping files (see
+    Read model.  Each (re)build lists the manifest once, takes the files'
+    max-ts from it (:meth:`~.sources.topic.Topic.load_max_ts`), prunes to
+    the files that can hold messages after the cursor, and splits them
+    into groups of time-overlapping files (see
     :func:`~.sources.topic.overlap_groups`): every message of a group
     precedes every message of the next one.  Delivery walks those groups
     in order, reading the next one only when the last is exhausted, as
@@ -522,7 +508,7 @@ class RawdataConsumer:
     def _rows(self, manifest):
         """Messages after the cursor in ULID order, one overlap group at a
         time (see the class docstring)."""
-        max_ts = self._topic.load_max_ts()
+        max_ts = self._topic.load_max_ts(manifest)
         manifest = self._topic.prune_from_timestamp(
             manifest, ulid_mod.timestamp_ms(self._after_ulid), max_ts
         )

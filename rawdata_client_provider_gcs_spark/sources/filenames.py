@@ -13,10 +13,14 @@ mutually readable where the file format matches) but allow a ``.parquet``
 extension: this container ships no spark-avro datasource, and the engine's
 native columnar format is parquet.  ``lastBlockOffset`` carries the byte size
 of the file — the reference seeks to it for the last Avro block; here it
-sizes reads before they run (the consumer reads its head group in one task
-only while those bytes fit one scan task).  ``last_message`` instead reads
-top-1 by ULID over the file with the largest from-ts plus every file whose
-sidecar max-ts reaches that from-ts (one file on a time-disjoint topic).
+sizes reads before they run.
+
+The engine adds one fact, each file's newest event time: its ``from``
+field is ``<from-ts>~<max − from, in ms>``.  The suffix holds no ``_``, so
+engine Avro names still match the reference's regex.  Every engine write
+names its files so; a name without the suffix is reference-written (or an
+engine file written before the suffix existed), and readers bound it by
+the listing instead (``sources/topic.py``).
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from datetime import datetime, timedelta, timezone
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 FILENAME_RE = re.compile(
-    r"(?P<from>[^_]+)_(?P<count>[0-9]+)_(?P<lastBlockOffset>[0-9]+)_(?P<position>.+)"
+    r"(?P<from>[^_~]+)(?:~(?P<span>[0-9]+))?_(?P<count>[0-9]+)_(?P<lastBlockOffset>[0-9]+)_(?P<position>.+)"
     r"\.(?P<ext>avro|parquet)$"
 )
 
@@ -80,6 +84,8 @@ class FileManifestEntry:
     last_block_offset: int
     first_position: str
     ext: str
+    #: newest event time, from the name's ``~`` suffix; None without one
+    max_ts_ms: int | None = None
 
 
 def encode_filename(
@@ -88,6 +94,7 @@ def encode_filename(
     last_block_offset: int,
     first_position: str,
     ext: str = "parquet",
+    max_ts_ms: int | None = None,
 ) -> str:
     ts = format_timestamp_ms(from_ts_ms)
     if "_" in ts:
@@ -105,6 +112,10 @@ def encode_filename(
             "first_position must not contain path separators or control "
             f"characters: {first_position!r}"
         )
+    if max_ts_ms is not None:
+        if max_ts_ms < from_ts_ms:
+            raise ValueError("max_ts_ms must not precede from_ts_ms")
+        ts += f"~{max_ts_ms - from_ts_ms}"
     return f"{ts}_{count}_{last_block_offset}_{first_position}.{ext}"
 
 
@@ -112,13 +123,16 @@ def decode_filename(filename: str) -> FileManifestEntry:
     m = FILENAME_RE.match(filename)
     if not m:
         raise ValueError(f"filename does not match manifest pattern: {filename}")
+    from_ts = parse_timestamp_ms(m.group("from"))
+    span = m.group("span")
     return FileManifestEntry(
         filename=filename,
-        from_ts_ms=parse_timestamp_ms(m.group("from")),
+        from_ts_ms=from_ts,
         count=int(m.group("count")),
         last_block_offset=int(m.group("lastBlockOffset")),
         first_position=m.group("position"),
         ext=m.group("ext"),
+        max_ts_ms=None if span is None else from_ts + int(span),
     )
 
 

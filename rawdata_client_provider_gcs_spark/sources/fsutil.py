@@ -9,7 +9,7 @@ already ships — chunked uploads, seekable reads and credentials are
 connector configuration, not engine code (SURVEY.md §2A S3/S17/S18).
 
 Every call here is a py4j round trip, and the log's read contract (seek,
-cursorOf, lastMessage) is little more than a listing and a sidecar read,
+cursorOf, lastMessage) is little more than a listing and a file copy,
 so the number and speed of those round trips set its latency:
 
 - **One reply per listing.**  Reading each ``FileStatus`` of a listing
@@ -25,8 +25,8 @@ so the number and speed of those round trips set its latency:
   statuses print ``path=null``), that listing is read status by status
   instead.
 - **Nagle off on every py4j connection.**  py4j's JVM side writes a reply
-  through an 8,192-character buffer, so a longer reply (a base64 sidecar,
-  a large listing) leaves in two writes; with Nagle's algorithm on, the
+  through an 8,192-character buffer, so a longer reply (a base64 metadata
+  value, a large listing) leaves in two writes; with Nagle's algorithm on, the
   second waits for the Python side's delayed ACK — ~40 ms per reply.
   :func:`_set_tcp_nodelay` turns ``TCP_NODELAY`` on for the JVM socket of
   the calling thread's connection, once per thread (in pinned-thread mode
@@ -36,7 +36,7 @@ so the number and speed of those round trips set its latency:
   :meth:`HadoopFs.copy_to_local` streams the object JVM side into a plain
   driver file in one round trip whatever the file's size, while a
   ``byte[]`` reply travels base64 encoded through the py4j socket;
-  :meth:`HadoopFs.read_bytes` is for small objects such as sidecars.  It
+  :meth:`HadoopFs.read_bytes` is for small objects such as metadata values.  It
   does not use ``copyToLocalFile``: that creates its target through
   Hadoop's local FileSystem, which without the native-hadoop library
   sets the new file's permission by running ``chmod`` in a child process
@@ -61,7 +61,7 @@ so the number and speed of those round trips set its latency:
 - **Objects that are replaced are replaced with no gap.**  The local
   FileSystem's rename onto an existing name returns False, but POSIX
   ``rename(2)`` replaces the old object in one step.  So on ``file://``
-  :meth:`HadoopFs.replace_object` (the max-ts sidecar, group cursors,
+  :meth:`HadoopFs.replace_object` (the sketch sidecar, group cursors,
   ``put(atomic=True)`` values) writes a temp object with no ``.crc``,
   deletes the stale ``.crc`` of the old object, if any, and renames the
   temp object over it with ``os.replace``; the checksummed FileSystem
@@ -319,7 +319,7 @@ class HadoopFs:
         """Commit ``payload`` at ``uri`` via temp-object + rename.
 
         The commit primitive of every object that is rewritten in place
-        (max-ts sidecar, sketch table, group cursors, epoch markers):
+        (sketch table, group cursors, epoch markers):
         never a truncate-then-write of the live object, so no reader sees
         a torn file.  On ``file://`` the temp object is written with no
         ``.crc``, the old object's stale ``.crc`` is deleted, and the temp

@@ -24,41 +24,35 @@ Spark-first mapping (SURVEY.md §3.4/§4):
   the commit protocol (:meth:`Topic.write_dataframe`; this replaces the
   reference's upload thread + pre-upload verification,
   AvroRawdataProducer.java:101-133,192-198).  Both land through one path,
-  :meth:`Topic._land`: the sidecar entries the files need first, then each
-  rename to its manifest name.  ``repartitionByRange(ulid)`` before
-  ordered bulk writes keeps per-file min-ulid manifests truthful.  Files
-  leave through one path too, :meth:`Topic._retire` (delete or
-  quarantine, then one sidecar removal).
+  :meth:`Topic._land`: each rename to its manifest name.
+  ``repartitionByRange(ulid)`` before ordered bulk writes keeps per-file
+  min-ulid manifests truthful.  Files leave through one path too,
+  :meth:`Topic._retire` (delete or quarantine).
 
-The max-ts sidecar (``metadata/engine-file-maxts.json``) maps a filename
-to its newest event time.  Every reader that prunes by time
+Every file the engine writes also carries its newest event time in its
+name (``sources/filenames.py``), so every reader that prunes by time
 (:meth:`Topic.prune_from_timestamp`, :func:`overlap_groups`,
-:meth:`Topic.last_message_files`, :meth:`Topic.expire_before`) relies on
-one invariant, which every writer keeps:
+:meth:`Topic.last_message_files`, :meth:`Topic.expire_before`) takes the
+files' max-ts from the listing (:meth:`Topic.load_max_ts`), with no
+metadata object to read or keep right.  A file whose name has none was
+written by the reference, or by the engine before names carried it, and
+keeps one invariant:
 
-    **(I)** A listed data file with no sidecar entry holds no event later
-    than the from-ts of the file listed right after it.
+    **(I′)** A listed data file without a max-ts in its name holds no
+    event later than the from-ts of the next such file in the listing.
 
 The two files may share the boundary millisecond: rotation splits windows
-inside a millisecond, and ULIDs order the events within it.  A producer
-window that starts at or after the topic's newest event and sorts last
-keeps (I) with no entry, so a flush is one create plus one rename, as the
-reference's is (AvroRawdataProducer.java:162-190).  A write that may start
-inside an entry-less file's span gives that file its entry first
-(:meth:`Topic._bridge_entries`).  Reference-written topics have no
-sidecar and keep (I) by their producer's window rotation.
-
-An entry is also what lets a point read skip a file whose events end
-before the read's start.  So the handle keeps the entries of the
-windows it landed without one in memory, where its own reads use them,
-and saves them with its next sidecar write: an overlapping landing, a
-retirement, every :data:`SAVE_EVERY` such windows, or a producer's
-close (:meth:`Topic.save_max_ts`).
+inside a millisecond, and ULIDs order the events within it.  Reference
+producers keep (I′) by their window rotation, and no engine write can
+break it, so a write is only its renames: a flush is one create plus one
+rename, as the reference's is (AvroRawdataProducer.java:162-190), and
+any number of writers, in any number of processes, may share a topic.
+A topic written before names carried max-ts is moved onto them once by
+:meth:`Topic.maintain`.
 """
 
 from __future__ import annotations
 
-import bisect
 import io
 import json
 import os
@@ -86,11 +80,6 @@ from .filenames import (
     is_topic_data_file,
 )
 from .fsutil import HadoopFs
-
-#: entry-less windows a handle lands before it saves their entries to the
-#: sidecar (module docstring): bounds the handle's memory and what other
-#: processes' reads miss, at one sidecar rewrite per that many flushes
-SAVE_EVERY = 1024
 
 #: MESSAGE_SCHEMA in Arrow, field for field (map logical type for
 #: ``data``).  The flush writes it, and every file read on the driver is
@@ -143,17 +132,13 @@ def _encode_parquet_rows(
 
 
 def overlap_groups(
-    manifest: list[tuple[str, FileManifestEntry]], max_ts: dict[str, int]
+    manifest: list[tuple[str, FileManifestEntry]], max_ts: dict[str, float]
 ) -> list[list[tuple[str, FileManifestEntry]]]:
     """Split a from-ts-sorted manifest into runs of time-overlapping files.
 
     A group closes when the next file starts after the group's running
-    max event time, so every message of a group precedes (by ULID) every
-    message of the next one.  A file without a sidecar entry counts its
-    from-ts as its max: by (I) (module docstring) it ends by the next
-    file's from-ts.  It may share that millisecond with the next file, and
-    the split stays correct: a window rotation split inside a millisecond
-    leaves the earlier file's ULIDs below the later file's.
+    max event time (``max_ts``, :meth:`Topic.load_max_ts`), so every
+    message of a group precedes (by ULID) every message of the next one.
     """
     groups: list[list[tuple[str, FileManifestEntry]]] = []
     group_max = None
@@ -162,7 +147,7 @@ def overlap_groups(
             groups.append([])
             group_max = entry.from_ts_ms
         groups[-1].append((path, entry))
-        group_max = max(group_max, max_ts.get(entry.filename, entry.from_ts_ms))
+        group_max = max(group_max, max_ts[entry.filename])
     return groups
 
 
@@ -198,28 +183,14 @@ class Topic:
         self.name = name.strip("/")
         self.uri = f"{self.root_uri}/{self.name}"
         self.fs = HadoopFs(spark, self.root_uri)
-        #: last successfully parsed sidecar — served when a concurrent
-        #: writer leaves the sidecar momentarily torn or absent
-        self._maxts_last_good: dict[str, int] | None = None
         #: set once a listing found the topic folder; until then a listing
         #: asks whether it exists, which a missing folder answers far more
         #: cheaply than the listing's exception path
         self._folder_seen = False
-        #: the topic's newest event time and the (from-ts, filename) sort
-        #: key of its last listed file, as far as this handle knows: upper
-        #: bounds, learned by the first flush and advanced by every write
-        #: this handle lands; None until learned.  All producers of a
-        #: client share this handle (single writer per topic).
-        self._newest_ts_ms: int | None = None
-        self._last_key: tuple[int, str] = (-1, "")
-        #: filename -> newest event time of the windows this handle landed
-        #: with no sidecar entry, not saved yet (module docstring);
-        #: :meth:`load_max_ts` serves them with the sidecar's entries
-        self._unsaved: dict[str, int] = {}
-        #: one write at a time through this handle: the tail bounds and
-        #: entries above and the sidecar's read-modify-write are not
-        #: thread-safe
-        self._write_lock = threading.RLock()
+        #: one bulk landing at a time through this handle: its logical-twin
+        #: scan and its renames must not interleave with another's, or a
+        #: replayed window could land twice (:meth:`_commit_part_files`)
+        self._write_lock = threading.Lock()
         #: owner state while THIS handle holds the maintenance lock —
         #: lets maintain() hold one lock across its whole sweep while
         #: the sub-operations it calls re-enter instead of re-acquiring.
@@ -264,7 +235,7 @@ class Topic:
         self,
         manifest: list[tuple[str, FileManifestEntry]],
         ts_ms: int,
-        max_ts: dict[str, int] | None = None,
+        max_ts: dict[str, float] | None = None,
     ) -> list[tuple[str, FileManifestEntry]]:
         """Files that can contain events at/after ``ts_ms``.
 
@@ -275,16 +246,11 @@ class Topic:
         Overlap safety: floor pruning assumes files are time-disjoint,
         which the reference producer guarantees but ``compact()`` (union of
         non-adjacent small files) and repeated event-time bulk publishes do
-        not.  A file whose span may overlap a later one has a sidecar entry
-        (see :meth:`load_max_ts`); any file *before* the floor whose
-        ``[from_ts, max_ts]`` still reaches ``ts`` is retained too, and the
-        floor file itself is dropped when its max_ts ends before ``ts`` (a
-        seek into the gap after it).  A file before the floor without an
-        entry ends by the next file's from-ts (invariant (I), module
-        docstring), so it is retained exactly when that next file starts at
-        ``ts``: a window rotation split inside the seek's millisecond.
-        Pass ``max_ts`` when the caller already holds the sidecar table;
-        otherwise it is read here when needed.
+        not.  So any file *before* the floor whose max-ts
+        (:meth:`load_max_ts`) still reaches ``ts`` is retained too, and the
+        floor file itself is dropped when its max-ts ends before ``ts`` (a
+        seek into the gap after it).  Pass ``max_ts`` when the caller
+        already holds it for ``manifest``.
         """
         start = 0
         for i, (_, entry) in enumerate(manifest):
@@ -293,90 +259,49 @@ class Topic:
         if start == 0:
             return manifest
         if max_ts is None:
-            max_ts = self.load_max_ts()
+            max_ts = self.load_max_ts(manifest)
+        # ``> ts - 1``: may hold an event in millisecond ``ts`` or later
+        return [pe for pe in manifest if max_ts[pe[1].filename] > ts_ms - 1]
 
-        def may_reach(i: int, entry: FileManifestEntry) -> bool:
-            hi = max_ts.get(entry.filename)
-            if hi is None:
-                return i >= start or manifest[i + 1][1].from_ts_ms >= ts_ms
-            return hi >= ts_ms
+    def load_max_ts(
+        self, manifest: list[tuple[str, FileManifestEntry]]
+    ) -> dict[str, float]:
+        """filename -> newest event time of each file of ``manifest``, a
+        :meth:`list_manifest` listing, from the names.
 
-        return [pe for i, pe in enumerate(manifest) if may_reach(i, pe[1])]
+        A name without a max-ts (module docstring) gets a bound from (I′)
+        instead, and only here:
 
-    # -- sidecar manifest (engine-only; invisible to stream listings) -------
-
-    def _maxts_uri(self) -> str:
-        # lives under metadata/, which both the engine's and the
-        # reference's listing filters exclude from the stream
-        # (GCSRawdataUtils.java:30,103)
-        return f"{self.uri}/metadata/engine-file-maxts.json"
-
-    def load_max_ts(self) -> dict[str, int]:
-        """filename -> max event-time ms of the files that have an entry:
-        the sidecar's, plus those this handle holds unsaved (module
-        docstring).
-
-        A file without one keeps invariant (I) (module docstring).  A
-        torn or momentarily absent sidecar (a concurrent writer mid
-        replace on a scheme without atomic rename-over; ``file://``
-        replaces with no gap) falls back to the last successfully parsed
-        table rather than ``{}`` — returning empty would make
-        :meth:`prune_from_timestamp` treat every file as entry-less and
-        over-prune.  A client keeps one handle per topic
-        (``RawdataClient.topic``), so that table carries from one of its
-        calls to the next.
+        - the next listed file has none either: half a millisecond before
+          that file's from-ts.  The file ends in that millisecond at the
+          latest, before the next file's first message (a rotation split),
+          so a reader asking whether it may hold an event in a millisecond
+          ``t`` (``> t - 1``) keeps it for that millisecond, while
+          :func:`overlap_groups` and :meth:`last_message_files` (``>=`` a
+          from-ts) still put the next file after it;
+        - files with a max-ts sit in between: the from-ts of the next file
+          without one;
+        - no file without one follows: the file's newest event, read on
+          the driver (:meth:`_file_max_ts`).
         """
-        unsaved = self._unsaved
-        uri = self._maxts_uri()
-        if not self.fs.exists(uri):
-            return {**(self._maxts_last_good or {}), **unsaved}
-        try:
-            table = json.loads(self.fs.read_bytes(uri).decode("utf-8"))
-        except (ValueError, UnicodeDecodeError):
-            return {**(self._maxts_last_good or {}), **unsaved}
-        self._maxts_last_good = dict(table)
-        return {**table, **unsaved}
-
-    def _update_max_ts(
-        self,
-        add: dict[str, int] | None = None,
-        remove: list[str] | None = None,
-        table: dict[str, int] | None = None,
-    ) -> None:
-        """Merge-update the sidecar, saving this handle's unsaved entries
-        with it.  Single-writer per topic by contract (same exclusivity
-        the reference's producer lock provides,
-        AvroRawdataProducer.java:206-216); within a handle, under its
-        write lock.  Removing an entry never breaks invariant (I) for the
-        files left; adding one is how a writer keeps it
-        (:meth:`_bridge_entries`).  ``table`` is :meth:`load_max_ts`'s
-        result when the caller read it under the write lock.
-
-        The write is :meth:`HadoopFs.replace_object` — temp object +
-        rename, never a truncate-then-write of the live object, so no
-        reader sees a torn sidecar.  On ``file://`` the rename replaces the
-        old sidecar in one step; on a scheme that refuses a rename onto an
-        existing name the old one is deleted first and the sidecar is
-        absent in between, which :meth:`load_max_ts` bridges with
-        last-known-good.  The create makes the ``metadata/`` folder.
-        """
-        with self._write_lock:
-            table = dict(self.load_max_ts() if table is None else table)
-            for name in remove or []:
-                table.pop(name, None)
-            table.update(add or {})
-            payload = json.dumps(table, sort_keys=True).encode("utf-8")
-            self.fs.replace_object(self._maxts_uri(), payload)
-            self._maxts_last_good = dict(table)
-            self._unsaved = {}
-
-    def save_max_ts(self) -> None:
-        """Save the entries this handle holds unsaved (module docstring)
-        to the sidecar; nothing to do when it holds none.  A producer
-        calls it on close."""
-        with self._write_lock:
-            if self._unsaved:
-                self._update_max_ts()
+        out: dict[str, float] = {}
+        bound, last = None, None
+        for i in range(len(manifest) - 1, -1, -1):
+            path, entry = manifest[i]
+            if entry.max_ts_ms is not None:
+                out[entry.filename] = entry.max_ts_ms
+                continue
+            if bound is None:
+                last = (path, entry)
+            elif manifest[i + 1][1].max_ts_ms is None:
+                out[entry.filename] = bound - 0.5
+            else:
+                out[entry.filename] = bound
+            bound = entry.from_ts_ms
+        if last is not None:
+            name = last[1].filename
+            out[name] = self._file_max_ts([last]).get(name) or last[1].from_ts_ms
+        return out
 
     # -- read ---------------------------------------------------------------
 
@@ -395,7 +320,7 @@ class Topic:
         ``to_ts_ms`` is the time-travel bound (inclusive): the topic as
         of that event-time millisecond — the reproducible "train on the
         corpus as of T" read.  File pruning for the upper bound needs no
-        sidecar: a file whose first-event time exceeds T cannot contain
+        max-ts: a file whose first-event time exceeds T cannot contain
         events at/before T, overlap or not (from_ts is the file's min).
 
         ``ignore_corrupt=True`` is read-through availability during an
@@ -558,24 +483,18 @@ class Topic:
         """The files that can hold the newest message.
 
         Those are the file with the largest from-ts plus every file whose
-        sidecar max-ts reaches that from-ts: a compacted or event-time
-        file can start earlier yet end later.  Files without a sidecar
-        entry count their from-ts as their max: by invariant (I) (module
-        docstring) each ends by the next file's from-ts.  On
-        a topic of time-disjoint files that is one file — the
-        manifest-pruned analog of the reference's last-block-offset seek
+        max-ts (:meth:`load_max_ts`) reaches that from-ts: a compacted or
+        event-time file can start earlier yet end later.  On a topic of
+        time-disjoint files that is one file — the manifest-pruned analog
+        of the reference's last-block-offset seek
         (AvroRawdataClient.java:123-144).
         """
         manifest = self.list_manifest()
         if not manifest:
             return []
         last_from = manifest[-1][1].from_ts_ms
-        max_ts = self.load_max_ts()
-        return [
-            pe
-            for pe in manifest
-            if max_ts.get(pe[1].filename, pe[1].from_ts_ms) >= last_from
-        ]
+        max_ts = self.load_max_ts(manifest)
+        return [pe for pe in manifest if max_ts[pe[1].filename] >= last_from]
 
     def last_message_df(self) -> DataFrame:
         """Tail read: top-1 by ULID over :meth:`last_message_files`, read
@@ -598,19 +517,14 @@ class Topic:
         """Rename committed part files in ``tmp_uri`` to manifest names.
 
         One lightweight aggregate over the just-written files computes each
-        file's manifest facts (min ulid ts, count, first position); sizes
-        come from the listing.  Every new file gets its sidecar entry, and
-        an entry-less file a new one may start inside gets its own
-        (:meth:`_bridge_entries`).  Returns the final file URIs.
+        file's manifest facts (min and max ulid ts, count, first position);
+        sizes come from the listing.  Returns the final file URIs.
 
         ``pre_commit``, when given, is called with the list of planned
-        final filenames after the facts are computed but BEFORE anything
-        becomes visible (sidecar add, renames).  The streaming sink uses
-        it to durably record a commit *intent* so a crash mid-commit can
-        be rolled back on replay (:mod:`..streaming.sink`).  The listing
-        that the twin check and the bridge entries use is taken after it,
-        under the handle's write lock, so no flush lands between that
-        listing and the renames.
+        final filenames after the facts are computed but BEFORE any
+        rename makes one visible.  The streaming sink uses it to durably
+        record a commit *intent* so a crash mid-commit can be rolled back
+        on replay (:mod:`..streaming.sink`).
         """
         parts = [
             (path, size)
@@ -629,72 +543,52 @@ class Topic:
         size_by_name = {p.rsplit("/", 1)[-1]: s for p, s in parts}
         path_by_name = {p.rsplit("/", 1)[-1]: p for p, _ in parts}
         renames: list[tuple[str, str]] = []
-        max_ts_of: dict[str, int] = {}
         for part_name, row in stats.items():
-            src = path_by_name[part_name]
             filename = encode_filename(
                 from_ts_ms=row["from_ts_ms"],
                 count=row["cnt"],
                 last_block_offset=size_by_name[part_name],
                 first_position=row["first_position"],
                 ext=ext,
+                max_ts_ms=row["max_ts_ms"],
             )
-            renames.append((src, f"{self.uri}/{filename}"))
-            max_ts_of[filename] = row["max_ts_ms"]
+            renames.append((path_by_name[part_name], f"{self.uri}/{filename}"))
         if pre_commit is not None:
             pre_commit([dst.rsplit("/", 1)[-1] for _, dst in renames])
         with self._write_lock:
-            return self._land_parts(renames, max_ts_of)
-
-    def _land_parts(
-        self, renames: list[tuple[str, str]], max_ts_of: dict[str, int]
-    ) -> list[str]:
-        """:meth:`_commit_part_files` under the write lock: land the part
-        files that have no logical twin; returns the final file URIs."""
-        # logical-twin scan BEFORE anything lands: a replayed commit (the
-        # streaming sink's write-then-epoch crash window, or an idempotent
-        # re-append of the same rows) re-produces the same logical windows,
-        # but the byte size embedded in the name is shuffle-order-dependent,
-        # so an exact-name collision check alone never fires — and on
-        # rename-over-permissive schemes (POSIX file://) the rename would
-        # silently land a second copy of the window.  Equal facts
-        # (from-ts, count, first-position, ext) on the same deterministic
-        # range partitioning mean the same row set; converge on the
-        # already-committed twin instead of duplicating it.
-        twin_by_facts: dict[tuple, str] = {}
-        listing = self.fs.list_files(self.uri)
-        for path, _size in listing:
-            try:
-                have = decode_filename(path.rsplit("/", 1)[-1])
-            except Exception:
-                continue
-            twin_by_facts[
-                (have.from_ts_ms, have.count, have.first_position, have.ext)
-            ] = path
-        final_paths = []
-        to_land = []
-        for src, dst in renames:
-            name = dst.rsplit("/", 1)[-1]
-            want = decode_filename(name)
-            twin = twin_by_facts.get(
-                (want.from_ts_ms, want.count, want.first_position, want.ext)
-            )
-            if twin is None:
-                to_land.append((src, dst))
-                final_paths.append(dst)
-            else:
-                # the twin keeps its own sidecar entry; this copy never lands
-                self.fs.delete(src)
-                del max_ts_of[name]
-                final_paths.append(twin)
-        table = self.load_max_ts()
-        entries = self._bridge_entries(
-            self._manifest_of(listing),
-            table,
-            [decode_filename(name) for name in max_ts_of],
-        )
-        entries.update(max_ts_of)
-        self._land(to_land, max_ts_of, entries, table)
+            # logical-twin scan BEFORE anything lands: a replayed commit (the
+            # streaming sink's write-then-epoch crash window, or an idempotent
+            # re-append of the same rows) re-produces the same logical windows,
+            # but the byte size embedded in the name is shuffle-order-dependent,
+            # so an exact-name collision check alone never fires — and on
+            # rename-over-permissive schemes (POSIX file://) the rename would
+            # silently land a second copy of the window.  Equal facts
+            # (from-ts, count, first-position, ext) on the same deterministic
+            # range partitioning mean the same row set; converge on the
+            # already-committed twin instead of duplicating it.
+            twin_by_facts: dict[tuple, str] = {}
+            for path, _size in self.fs.list_files(self.uri):
+                try:
+                    have = decode_filename(path.rsplit("/", 1)[-1])
+                except ValueError:  # not a data file name
+                    continue
+                twin_by_facts[
+                    (have.from_ts_ms, have.count, have.first_position, have.ext)
+                ] = path
+            final_paths = []
+            to_land = []
+            for src, dst in renames:
+                want = decode_filename(dst.rsplit("/", 1)[-1])
+                twin = twin_by_facts.get(
+                    (want.from_ts_ms, want.count, want.first_position, want.ext)
+                )
+                if twin is None:
+                    to_land.append((src, dst))
+                    final_paths.append(dst)
+                else:
+                    self.fs.delete(src)  # this copy never lands
+                    final_paths.append(twin)
+            self._land(to_land)
         return final_paths
 
     def _file_max_ts(
@@ -713,175 +607,54 @@ class Topic:
         )
         return {name: r["hi"] for name, r in rows.items()}
 
-    def _tail(self) -> tuple[int, tuple[int, str]]:
-        """The topic's newest event time and its last listed file's sort
-        key, as upper bounds; ``(-1, (-1, ""))`` for an empty topic.
-
-        Learned on the first call from one listing and one sidecar read;
-        by (I) only the last listed file can hold events past every other
-        file's bound, so it is read when it has no entry.  :meth:`_land`
-        advances both afterwards, and files leaving only lower the true
-        values, so the bounds stay bounds.
-        """
-        if self._newest_ts_ms is None:
-            manifest = self.list_manifest()
-            newest, last_key = -1, (-1, "")
-            if manifest:
-                newest = self._newest_event(manifest, self.load_max_ts())
-                last = manifest[-1][1]
-                last_key = (last.from_ts_ms, last.filename)
-            self._newest_ts_ms, self._last_key = newest, last_key
-        return self._newest_ts_ms, self._last_key
-
-    def _newest_event(
-        self, manifest: list[tuple[str, FileManifestEntry]], max_ts: dict[str, int]
-    ) -> int:
-        """The newest event time of a non-empty listed topic.  By (I) an
-        entry-less file ends by the next file's start, so only the last
-        listed file is read, and only when it has no entry."""
-        last = manifest[-1][1]
-        newest = max(
-            [last.from_ts_ms]
-            + [max_ts[e.filename] for _, e in manifest if e.filename in max_ts]
-        )
-        if last.filename not in max_ts:
-            newest = max(newest, self._file_max_ts(manifest[-1:])[last.filename])
-        return newest
-
-    def _bridge_entries(
-        self,
-        manifest: list[tuple[str, FileManifestEntry]],
-        max_ts: dict[str, int],
-        new: list[FileManifestEntry],
-    ) -> dict[str, int]:
-        """The sidecar entries that keep (I) once the ``new`` files are
-        listed among ``manifest``'s.
-
-        Landing a file changes the successor of one file only: the one
-        listed right before it.  If that file has no entry and the new
-        file may start inside its span — before the start of the file
-        that used to follow it, or, for the last file, before the
-        newest event this handle knows of — the file's max-ts is read
-        (:meth:`_file_max_ts`) and returned as its entry.
-        """
-        keys = [(e.from_ts_ms, e.filename) for _, e in manifest]
-        spans = {}
-        for entry in new:
-            pos = bisect.bisect_left(keys, (entry.from_ts_ms, entry.filename))
-            if pos == 0 or manifest[pos - 1][1].filename in max_ts:
-                continue
-            bound = keys[pos][0] if pos < len(keys) else self._newest_ts_ms
-            if bound is None or entry.from_ts_ms < bound:
-                spans[manifest[pos - 1][0]] = manifest[pos - 1][1]
-        return self._file_max_ts(list(spans.items())) if spans else {}
-
-    def _land(
-        self,
-        pairs: list[tuple[str, str]],
-        max_ts: dict[str, int],
-        entries: dict[str, int],
-        table: dict[str, int] | None = None,
-    ) -> None:
+    def _land(self, pairs: list[tuple[str, str]]) -> None:
         """Make written files visible: the one commit path of every write.
 
         ``pairs`` are ``(src, dst)`` renames from invisible temp names to
-        manifest names; ``max_ts`` maps each dst filename to its max
-        event time.  ``entries`` are the sidecar entries the landing
-        needs to keep invariant (I) (module docstring): those of new
-        files that may overlap a later one, and those that
-        :meth:`_bridge_entries` found.  They land BEFORE the renames: a
-        reader that lists the topic between a rename and a later sidecar
-        write would see an entry-less file break (I), and
-        :meth:`prune_from_timestamp` would over-prune; entries for files
-        not yet visible are harmless.  With no entries the sidecar is
-        not touched, and the landed files' max-ts join the handle's
-        unsaved entries, saved once there are :data:`SAVE_EVERY` of them
-        (module docstring); ``table`` is the caller's :meth:`load_max_ts`
-        result, read under the write lock.  More than two renames run on
-        a thread pool; sources stay invisible until each rename lands, so
-        a crash mid-way leaves a valid (shorter) topic, never a torn file.  On
-        success the handle's tail bounds (:meth:`_tail`) advance over the
-        landed files.  On failure the entries of exactly the renames that
-        did not land are dropped (best effort, so failed commits don't
-        accrete orphans; ``compact`` sweeps stragglers), the tail bounds
-        are forgotten, and the error is raised.
+        manifest names.  More than two run on a thread pool; sources stay
+        invisible until each rename lands, so a crash mid-way leaves a
+        valid (shorter) topic, never a torn file.  A refused rename raises.
         """
-        if not pairs:
-            return
-        if entries:
-            self._update_max_ts(add=entries, table=table)
-        landed: set[str] = set()
 
         def rename(pair: tuple[str, str]) -> None:
             src, dst = pair
             if not self.fs.rename(src, dst):
                 raise IOError(f"rename failed: {src} -> {dst}")
-            landed.add(dst)
 
-        try:
-            if len(pairs) <= 2:
-                for pair in pairs:
-                    rename(pair)
-            else:
-                with ThreadPoolExecutor(max_workers=min(32, len(pairs))) as pool:
-                    list(pool.map(rename, pairs))
-        except Exception:
-            # some renames may have landed: learn the tail afresh
-            self._newest_ts_ms = None
-            names = [dst.rsplit("/", 1)[-1] for _, dst in pairs if dst not in landed]
-            unlanded = [name for name in names if name in entries]
-            try:
-                if unlanded:
-                    self._update_max_ts(remove=unlanded)
-            except Exception:
-                pass
-            raise
-        if self._newest_ts_ms is not None:
-            self._newest_ts_ms = max(self._newest_ts_ms, *max_ts.values())
-            self._last_key = max(
-                self._last_key, *((decode_filename(n).from_ts_ms, n) for n in max_ts)
-            )
-        unsaved = {n: ts for n, ts in max_ts.items() if n not in entries}
-        if unsaved:
-            self._unsaved = {**self._unsaved, **unsaved}
-            if len(self._unsaved) >= SAVE_EVERY:
-                try:
-                    self._update_max_ts()
-                except Exception:
-                    pass  # the files have landed; the entries wait for the next write
+        if len(pairs) <= 2:
+            for pair in pairs:
+                rename(pair)
+        else:
+            with ThreadPoolExecutor(max_workers=min(32, len(pairs))) as pool:
+                list(pool.map(rename, pairs))
 
     def _retire(self, paths: list[str], quarantine: bool = False) -> list[str]:
         """Take data files out of the topic: the one exit path.
 
         Deletes each path (or, with ``quarantine``, renames it into the
         topic's ``quarantine/`` folder, invisible to the non-recursive
-        data listing), THEN drops the sidecar entries in one update — an
-        entry without a file is harmless, a listed file without its entry
-        is not.  Deletes are idempotent, so every named entry goes; a
-        quarantine move that fails keeps its file and entry.  Returns the
-        retired filenames.
+        data listing).  Returns the retired filenames: every named one
+        for deletes, which are idempotent; those whose move succeeded for
+        a quarantine.
         """
         names = [p.rsplit("/", 1)[-1] for p in paths]
         if quarantine:
             self.fs.mkdirs(f"{self.uri}/quarantine")
-            names = [
+            return [
                 name
                 for path, name in zip(paths, names)
                 if self.fs.rename(path, f"{self.uri}/quarantine/{name}")
             ]
-        else:
-            for path in paths:
-                self.fs.delete(path)
-        if names:
-            self._update_max_ts(remove=names)
+        for path in paths:
+            self.fs.delete(path)
         return names
 
     def rollback_files(self, names: list[str]) -> None:
-        """Remove files (and their sidecar entries) from a failed commit.
+        """Remove files from a failed commit.
 
         Used by the streaming sink's replay path to undo the visible
         remains of a crashed micro-batch before rewriting it.  Idempotent:
-        missing files and absent sidecar entries are fine.
+        missing files are fine.
         """
         self._retire([f"{self.uri}/{name}" for name in names])
 
@@ -1080,12 +853,6 @@ class Topic:
             max_records_per_file=target_records_per_file,
         )
         self._retire(paths)
-        # sweep sidecar entries left by crashed commits (files that never
-        # landed in a listing)
-        listed = {p.rsplit("/", 1)[-1] for p, _ in self.fs.list_files(self.uri)}
-        orphans = [name for name in self.load_max_ts() if name not in listed]
-        if orphans:
-            self._update_max_ts(remove=orphans)
         return new_files, paths
 
     @_with_maintenance_lock
@@ -1093,66 +860,27 @@ class Topic:
         """Retention sweep: delete files whose EVERY event predates ``ts_ms``.
 
         The 100 TB log's other maintenance half (with :meth:`compact`):
-        without retention a topic grows without bound and every listing,
-        seek floor-scan, and sidecar grows with it.  The reference
-        delegates this to GCS bucket lifecycle rules (age-based object
-        expiry); doing it engine-side keeps the manifest, sidecar, and
-        data consistent in one sweep and works on any scheme.
+        without retention a topic grows without bound and every listing
+        and seek floor-scan grows with it.  The reference delegates this
+        to GCS bucket lifecycle rules (age-based object expiry); doing it
+        engine-side keeps the manifest and data consistent in one sweep
+        and works on any scheme.
 
-        Deletability is decided from the manifest and the sidecar, plus
-        at most one file read:
-
-        - a file with a sidecar entry is deletable iff ``max_ts < ts_ms``;
-        - files without one (producer windows, reference-written files)
-          are time-disjoint and ordered by the producer contract
-          (AvroRawdataProducer.java window rotation; invariant (I), module
-          docstring) — but only among THEMSELVES: engine-written files
-          (compact() unions, event-time bulk publishes) interleave in
-          ``from_ts`` order without being time-disjoint with the
-          reference sequence.  So the upper bound for a sidecar-less file
-          is the next sidecar-LESS entry's ``from_ts``, skipping any
-          engine entries in between; the LAST such file is unbounded and
-          never expires on that basis.  The one sidecar-less file that
-          starts before ``ts_ms`` while its bound does not is read, and
-          goes when its newest event predates ``ts_ms``.
+        Deletability is decided from each file's max-ts
+        (:meth:`load_max_ts`): from its name, or for a file whose name has
+        none, from the next such file's from-ts (invariant (I′), module
+        docstring) — an engine file listed in between may start earlier
+        than that file's last event, so it must not bound it.  The last
+        such file is read.
 
         Returns deleted paths.  Single maintenance owner per topic, like
         :meth:`compact`; readers started before the sweep may observe
         missing files (same contract as any log retention).
         """
         manifest = self.list_manifest()
-        max_ts = self.load_max_ts()
-        # successor map within the reference-producer (sidecar-less)
-        # subsequence: bounding by the immediate manifest neighbor would
-        # let an overlapping engine file with a small from_ts undercut a
-        # reference file's true max event time and over-delete
-        no_sidecar = [
-            i
-            for i, (_, entry) in enumerate(manifest)
-            if entry.filename not in max_ts
-        ]
-        next_ref_from: dict[int, int] = {}
-        for pos, i in enumerate(no_sidecar[:-1]):
-            next_ref_from[i] = manifest[no_sidecar[pos + 1]][1].from_ts_ms
-        deletable: list[str] = []
-        straddling = []
-        for i, (path, entry) in enumerate(manifest):
-            hi = max_ts.get(entry.filename)
-            if hi is None:
-                hi = next_ref_from.get(i)
-                if hi is None:
-                    continue  # open-ended tail of the reference sequence
-                # disjoint + sorted => everything here <= next ref file's
-                # start; bound INCLUSIVE of the boundary millisecond —
-                # rotation can split mid-millisecond (ULIDs order sub-ms),
-                # and an exclusive bound would over-delete boundary events
-                if entry.from_ts_ms < ts_ms <= hi:
-                    straddling.append((path, entry))
-            if hi < ts_ms:
-                deletable.append(path)
-        if straddling:
-            newest = self._file_max_ts(straddling)
-            deletable += [p for p, e in straddling if newest[e.filename] < ts_ms]
+        max_ts = self.load_max_ts(manifest)
+        # ``<= ts - 1``: holds no event in millisecond ``ts`` or later
+        deletable = [p for p, e in manifest if max_ts[e.filename] <= ts_ms - 1]
         self._retire(deletable)
         return deletable
 
@@ -1241,7 +969,7 @@ class Topic:
         GCSSeekableInput.java:38-44) with a DISTRIBUTED probe (binary
         source, bytes stay on executors), renames failures into the
         topic's ``quarantine/`` subdirectory (invisible to the
-        non-recursive data listing), and drops their sidecar entries.
+        non-recursive data listing).
 
         Returns quarantined filenames.  Single maintenance owner, like
         :meth:`compact`.  Probe cost is one pass over file bytes —
@@ -1328,16 +1056,13 @@ class Topic:
         """Manifest-only topic summary.
 
         Counts, bytes, event-time span, and format mix straight from the
-        filename facts plus the max-ts sidecar; the ops one-liner before
-        deciding on compaction/retention (file count and small-file
-        share are the triggers).  The only data read is the last file's,
-        when it has no sidecar entry: nothing else bounds the newest
-        event (invariant (I), module docstring).
+        filename facts; the ops one-liner before deciding on
+        compaction/retention (file count and small-file share are the
+        triggers).  The only data read is that of :meth:`load_max_ts`.
         """
         files, folders = self.fs.list_children(self.uri)
         manifest = self._manifest_of(files)
         sizes = dict(files)
-        max_ts = self.load_max_ts()
         quarantined = 0
         if "quarantine" in folders:
             quarantined = len(self.fs.list_files(f"{self.uri}/quarantine"))
@@ -1349,7 +1074,7 @@ class Topic:
             "n_bytes": sum(sizes[p] for p, _ in manifest),
             "formats": sorted({e.ext for e in entries}),
             "first_ts_ms": min((e.from_ts_ms for e in entries), default=None),
-            "last_ts_ms": self._newest_event(manifest, max_ts) if manifest else None,
+            "last_ts_ms": max(self.load_max_ts(manifest).values(), default=None),
             "n_quarantined": quarantined,
         }
 
@@ -1384,8 +1109,12 @@ class Topic:
         The sweep holds ONE maintenance lock for its full duration (the
         sub-operations re-enter it), so a concurrent owner fails fast
         and two sweeps can never interleave, even at step boundaries.
+
+        First, always, it moves a topic written before file names carried
+        max-ts onto them (:meth:`_name_legacy_max_ts`); such a topic must
+        be maintained once before it is read.
         """
-        report: dict = {}
+        report: dict = {"max_ts_named": self._name_legacy_max_ts()}
         if quarantine:
             report["quarantined"] = self.quarantine_corrupt()
         if expire_before_ms is not None:
@@ -1408,6 +1137,33 @@ class Topic:
         report["describe"] = self.describe()
         return report
 
+    def _name_legacy_max_ts(self) -> list[str]:
+        """Rename each listed file that has an entry in the max-ts sidecar
+        of older engine versions (``metadata/engine-file-maxts.json``) to
+        its name with that max-ts, then delete the sidecar.  Files without
+        an entry kept (I′) already (module docstring).  Rerunnable after a
+        crash: a renamed file is no longer listed under its entry's name,
+        and the sidecar goes last.  Returns the new filenames."""
+        uri = f"{self.uri}/metadata/engine-file-maxts.json"
+        if not self.fs.exists(uri):
+            return []
+        entries = json.loads(self.fs.read_bytes(uri).decode("utf-8"))
+        pairs = []
+        for path, e in self.list_manifest():
+            if e.max_ts_ms is None and e.filename in entries:
+                name = encode_filename(
+                    e.from_ts_ms,
+                    e.count,
+                    e.last_block_offset,
+                    e.first_position,
+                    e.ext,
+                    max_ts_ms=entries[e.filename],
+                )
+                pairs.append((path, f"{self.uri}/{name}"))
+        self._land(pairs)
+        self.fs.delete(uri)
+        return [dst.rsplit("/", 1)[-1] for _, dst in pairs]
+
     def write_single_rows(
         self,
         rows: list[tuple[bytes, str | None, int, str, dict[str, bytes]]],
@@ -1425,11 +1181,9 @@ class Topic:
         AvroRawdataProducer.java:148-152); ``ext="parquet"`` writes one
         arrow-encoded file with exactly MESSAGE_SCHEMA's layout.
 
-        A window that starts at or after the topic's newest event and
-        sorts after its last file (:meth:`_tail`) keeps invariant (I)
-        with no sidecar entry: it lands as one create plus one rename.
-        Any other window lists the topic and lands with its own entry and
-        the one :meth:`_bridge_entries` finds.
+        The name carries the window's newest event time too, so the
+        window lands as one create plus one rename, wherever its span
+        falls in the topic.
         """
         if ext not in ("parquet", "avro"):
             raise ValueError(f"unsupported topic format: {ext}")
@@ -1447,26 +1201,17 @@ class Topic:
             last_block_offset=len(blob),
             first_position=rows[0][3],
             ext=ext,
+            max_ts_ms=max_ts,
         )
         tmp = f"{self.uri}/.tmp-{uuid.uuid4().hex}.{ext}"
         dst = f"{self.uri}/{filename}"
-        with self._write_lock:
-            newest, last_key = self._tail()
-            entries = {}
-            table = None
-            if from_ts < newest or (from_ts, filename) < last_key:
-                table = self.load_max_ts()
-                entries = self._bridge_entries(
-                    self.list_manifest(), table, [decode_filename(filename)]
-                )
-                entries[filename] = max_ts
-            try:
-                self.fs.write_bytes(tmp, blob)
-                self._land([(tmp, dst)], {filename: max_ts}, entries, table)
-            except Exception:
-                # nothing sweeps temp objects and listings hide them, so a
-                # failed flush must not leave one behind (best effort)
-                with suppress(Exception):
-                    self.fs.delete(tmp)
-                raise
+        try:
+            self.fs.write_bytes(tmp, blob)
+            self._land([(tmp, dst)])
+        except Exception:
+            # nothing sweeps temp objects and listings hide them, so a
+            # failed flush must not leave one behind (best effort)
+            with suppress(Exception):
+                self.fs.delete(tmp)
+            raise
         return [dst]

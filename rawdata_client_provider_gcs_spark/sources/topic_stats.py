@@ -15,7 +15,7 @@ Refresh is lazy and idempotent: callers (or a maintenance cron) invoke
 self-heals by sketching any file the sidecar is missing.  Entries for
 files removed by ``compact()``/``expire_before()`` are dropped on the
 next refresh.  The sidecar write uses the same temp+rename commit
-primitive as the topic's max-ts sidecar.
+primitive as the metadata KV's atomic puts.
 """
 
 from __future__ import annotations
@@ -34,8 +34,8 @@ DEFAULT_LG_K = 12
 
 
 def _sketch_uri(topic) -> str:
-    # lives under metadata/, excluded from data listings like the
-    # max-ts sidecar (GCSRawdataUtils.java:30,103)
+    # lives under metadata/, which data listings exclude
+    # (GCSRawdataUtils.java:30,103)
     return f"{topic.uri}/metadata/engine-file-sketches.json"
 
 

@@ -5,10 +5,10 @@ appends to a topic continuously (AvroRawdataProducer.java:148-152 rotates
 and uploads on its window triggers); the Spark-native equivalent is a
 ``writeStream`` whose micro-batches land through the topic's existing
 commit protocol (``Topic.write_dataframe``: part files in a temp dir, then
-``Topic._land`` adds their max-ts sidecar entries and renames each to its
-manifest name — the same landing path as a producer flush), so every file
-a streaming sink produces is indistinguishable from a batch-written one:
-manifest-named, time-disjoint when range-partitioned, prunable, tailable.
+``Topic._land`` renames each to its manifest name — the same landing path
+as a producer flush), so every file a streaming sink produces is
+indistinguishable from a batch-written one: manifest-named, time-disjoint
+when range-partitioned, prunable, tailable.
 
 Exactly-once: Spark replays the in-flight micro-batch after a failure
 (same ``batch_id``), so the sink records its progress in the topic's
@@ -109,12 +109,6 @@ def stream_to_topic(
     ``max_records_per_file`` — so file count and time-disjointness are
     controlled per batch and manifest pruning stays truthful for
     readers tailing concurrently.
-
-    Pass the client's handle, ``client.topic(name)``, when producers of
-    that client write the same topic: the handle serializes the sink's
-    landings with their flushes and keeps the topic's newest event they
-    rely on (``RawdataProducer``).  A second handle's writes leave that
-    view stale.
     """
     meta = RawdataMetadataClient(topic.fs, topic.uri, topic.name)
     key = _epoch_key(sink_id)

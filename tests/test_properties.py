@@ -60,17 +60,27 @@ def test_timestamp_text_roundtrip(ts):
     offset=st.integers(min_value=0, max_value=2**40),
     position=_POSITION,
     ext=st.sampled_from(["parquet", "avro"]),
+    span=st.one_of(st.none(), st.integers(min_value=0, max_value=2**40)),
 )
-def test_filename_codec_roundtrip(ts, count, offset, position, ext):
+def test_filename_codec_roundtrip(ts, count, offset, position, ext, span):
+    max_ts = None if span is None else ts + span
     name = encode_filename(
         from_ts_ms=ts,
         count=count,
         last_block_offset=offset,
         first_position=position,
         ext=ext,
+        max_ts_ms=max_ts,
     )
     entry = decode_filename(name)
     assert entry.from_ts_ms == ts
+    assert entry.max_ts_ms == max_ts
+    # the reference's regex still splits an engine name into its fields
+    ref = re.match(
+        r"(?P<from>[^_]+)_(?P<count>[0-9]+)_(?P<lastBlockOffset>[0-9]+)_(?P<position>.+)\.",
+        name,
+    )
+    assert (ref["count"], ref["position"]) == (str(count), position)
     assert entry.count == count
     assert entry.last_block_offset == offset
     assert entry.first_position == position

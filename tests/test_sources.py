@@ -456,8 +456,8 @@ def test_hll_file_sketches_incremental_and_no_rescan(spark, tmp_path):
 
 def test_quarantine_corrupt_files(spark, tmp_path):
     """A garbage file with a valid manifest name poisons scans; the
-    quarantine sweep moves it aside (distributed magic probe), drops its
-    sidecar entry, and scans recover.  ignore_corrupt reads through the
+    quarantine sweep moves it aside (distributed magic probe), and scans
+    recover.  ignore_corrupt reads through the
     incident before repair."""
     import pathlib
 
@@ -487,7 +487,7 @@ def test_quarantine_corrupt_files(spark, tmp_path):
 
     moved = topic.quarantine_corrupt()
     assert moved == [victim.name]
-    assert victim.name not in topic.load_max_ts()
+    assert victim.name not in {e.filename for _, e in topic.list_manifest()}
     assert len(topic.list_manifest()) == 1
     assert topic.dataframe().count() == 50
     # quarantined object preserved for forensics, out of the data listing

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from rawdata_client_provider_gcs_spark import ulid as ulid_mod
 from rawdata_client_provider_gcs_spark.sources.topic import Topic
 from rawdata_client_provider_gcs_spark.streaming import sink as S
+from tests.test_topic_writes import assert_names_carry_max_ts
 
 
 def _stage_messages(spark, tmp_path, n_files=3, per_file=10, base=1_700_000_000_000):
@@ -301,9 +302,8 @@ def test_crash_between_write_and_epoch_rolls_back(spark, tmp_path, monkeypatch):
     got = topic.ordered_dataframe().collect()
     assert [r["sequence_number"] for r in got] == list(range(len(rows)))
     assert S.last_committed_batch(topic, "s1") == 1
-    # no orphan sidecar entries: every entry maps a listed file
-    listed = {p.rsplit("/", 1)[-1] for p, _ in topic.fs.list_files(topic.uri)}
-    assert set(topic.load_max_ts()) <= listed
+    # every landed file names its span; no max-ts sidecar
+    assert_names_carry_max_ts(topic)
 
 
 def test_replayed_write_converges_even_when_rename_would_succeed(spark, tmp_path):
@@ -341,9 +341,8 @@ def test_replayed_write_converges_even_when_rename_would_succeed(spark, tmp_path
     assert sorted(p.rsplit("/", 1)[-1] for p in second) == sorted(
         p.rsplit("/", 1)[-1] for p in first
     )
-    # sidecar holds exactly the listed files, no orphan entries
-    listed = {p.rsplit("/", 1)[-1] for p, _ in topic.fs.list_files(topic.uri)}
-    assert set(topic.load_max_ts()) <= listed
+    # every landed file names its span; no max-ts sidecar
+    assert_names_carry_max_ts(topic)
 
 
 def test_torn_epoch_marker_reads_as_absent(spark, tmp_path):
@@ -510,7 +509,6 @@ def test_crash_mid_renames_rolls_back_partial_batch(spark, tmp_path, monkeypatch
     got = topic.ordered_dataframe().collect()
     assert [r["sequence_number"] for r in got] == list(range(len(rows)))
     assert S.last_committed_batch(topic, "s1") == 1
-    # no orphan sidecar entries, no stray files
-    listed = {p.rsplit("/", 1)[-1] for p, _ in topic.fs.list_files(topic.uri)}
-    assert set(topic.load_max_ts()) <= listed
+    # every landed file names its span, no stray files
+    assert_names_carry_max_ts(topic)
     assert sum(e.count for _, e in topic.list_manifest()) == len(rows)

@@ -318,18 +318,15 @@ def test_compact_topic(spark, tmp_path):
     assert len(before) > 5
     before_positions = [m.position for m in drain(client.consumer("c"), 100)]
 
-    # plant an orphan sidecar entry (as a crashed commit would leave):
-    # compaction must sweep it along with entries for deleted inputs
-    topic._update_max_ts(add={"9999-ORPHAN-1-0-x.parquet": 4102444800000})
-
     new_files, removed = topic.compact(
         small_file_max_records=30, target_records_per_file=30
     )
     assert removed and new_files
-    sidecar = topic.load_max_ts()
-    assert "9999-ORPHAN-1-0-x.parquet" not in sidecar
-    assert not any(name.rsplit("/", 1)[-1] in sidecar for name in removed)
     after = topic.list_manifest()
+    # each compacted file's name carries its newest event
+    for path, entry in after:
+        newest = max(topic.read_local([(path, entry)])["ulid_ts_ms"].to_pylist())
+        assert entry.max_ts_ms == newest
     assert len(after) < len(before)
     assert sum(e.count for _, e in after) == 60
     after_positions = [m.position for m in drain(client.consumer("c"), 100)]
@@ -343,8 +340,8 @@ def test_compact_topic(spark, tmp_path):
 
 def test_expire_before_retention(spark, tmp_path):
     """Engine extension: age-based retention. Files wholly before the
-    cutoff are deleted (manifest-only decision), the sidecar is swept,
-    and consumers see exactly the surviving suffix of the stream."""
+    cutoff are deleted (manifest-only decision), and consumers see
+    exactly the surviving suffix of the stream."""
     client = RawdataClient(
         spark, str(tmp_path), avro_file_max_bytes=256  # many small windows
     )
@@ -369,8 +366,7 @@ def test_expire_before_retention(spark, tmp_path):
     assert sorted(p.rsplit("/", 1)[-1] for p in deleted) == sorted(expect_gone)
     after = topic.list_manifest()
     assert len(after) == len(manifest) - len(expect_gone)
-    for name in expect_gone:
-        assert name not in topic.load_max_ts()
+    assert not {e.filename for _, e in after} & set(expect_gone)
 
     # the stream now starts at the first surviving message, still ordered
     survivors = [m.position for m in drain(client.consumer("r"), 100)]
@@ -382,25 +378,26 @@ def test_expire_before_retention(spark, tmp_path):
     # idempotent: nothing else ages out at the same cutoff
     assert topic.expire_before(cutoff) == []
 
-    # a far-future cutoff keeps sidecar-less tail files: strip the
-    # sidecar (reference-written topics have none) and expire far ahead —
-    # every file but the unbounded last one goes
-    topic._update_max_ts(remove=list(topic.load_max_ts()))
-    assert topic.load_max_ts() == {}
-    topic._maxts_last_good = None
-    remaining = topic.list_manifest()
-    deleted2 = topic.expire_before(4_102_444_800_000)  # year 2100
-    assert len(deleted2) == len(remaining) - 1
-    assert len(topic.list_manifest()) == 1
+    # names without a max-ts, as the reference writes them: each file is
+    # bounded by the next one's from-ts and the last one is read, so a
+    # cutoff at its start keeps it and a far-future one expires it too
+    from tests.test_topic_writes import as_reference_named
+
+    as_reference_named(topic)
+    last_path, last = topic.list_manifest()[-1]
+    assert last_path not in topic.expire_before(last.from_ts_ms)
+    assert last_path in topic.expire_before(4_102_444_800_000)  # year 2100
+    assert topic.list_manifest() == []
 
 
 def test_expire_mixed_topic_bounds_by_reference_sequence(spark, tmp_path):
-    """Retention in a MIXED topic: a sidecar-less (reference-written)
-    file is bounded by the next sidecar-LESS file's from_ts — an
+    """Retention in a MIXED topic: a file whose name has no max-ts
+    (reference-written) is bounded by the next such file's from_ts — an
     overlapping engine-written file that sorts right after it must not
     undercut the bound and cause deletion of live events."""
     from rawdata_client_provider_gcs_spark.sources.topic import Topic
     from rawdata_client_provider_gcs_spark import ulid as ulid_mod
+    from tests.test_topic_writes import as_reference_named
 
     topic = Topic(spark, f"file://{tmp_path}/root", "mix")
     base = 1_700_000_000_000
@@ -423,14 +420,14 @@ def test_expire_mixed_topic_bounds_by_reference_sequence(spark, tmp_path):
     topic.write_single_rows(rows_for([base + 200_000, base + 210_000], "b"))
     # engine file E: overlaps A, from_ts sorts between A's and B's
     topic.write_single_rows(rows_for([base + 5_000, base + 150_000], "e"))
+    # A and B are "reference-written": their names carry no max-ts
+    a_name, e_name, b_name = (e.filename for _, e in topic.list_manifest())
+    a_name, b_name = as_reference_named(topic, [a_name, b_name])
     manifest = topic.list_manifest()
-    assert len(manifest) == 3
-    names = [e.filename for _, e in manifest]
-    # strip sidecar entries for A and B: they are "reference-written"
-    a_name, e_name, b_name = names[0], names[1], names[2]
-    topic._update_max_ts(remove=[a_name, b_name])
-    topic._maxts_last_good = None
-    assert set(topic.load_max_ts()) == {e_name}
+    assert [e.filename for _, e in manifest] == [a_name, e_name, b_name]
+    max_ts = topic.load_max_ts(manifest)
+    assert max_ts[a_name] == base + 200_000  # B's from-ts
+    assert max_ts[e_name] == base + 150_000
 
     # cutoff between A's from_ts and A's true max: the buggy
     # next-manifest-entry bound (E.from_ts = base+5000 < cutoff) would
@@ -637,7 +634,8 @@ def _compacted_overlap_topic(client, name):
         small_file_max_records=10, target_records_per_file=1000
     )
     assert len(new_files) == 1 and len(removed) == 3
-    groups = overlap_groups(topic.list_manifest(), topic.load_max_ts())
+    manifest = topic.list_manifest()
+    groups = overlap_groups(manifest, topic.load_max_ts(manifest))
     assert [len(g) for g in groups] == [3, 1, 1, 1]
     return topic, truth, t0
 
@@ -978,7 +976,7 @@ def test_a_group_over_the_bound_is_read_alone_through_spark(
 
     topic, truth, t0 = _compacted_overlap_topic(client, "over")
     manifest = topic.list_manifest()
-    groups = overlap_groups(manifest, topic.load_max_ts())
+    groups = overlap_groups(manifest, topic.load_max_ts(manifest))
     bound = max(e.last_block_offset for _, e in manifest)
     assert sum(e.last_block_offset for _, e in groups[0]) > bound
     task_bytes(str(bound))
@@ -1076,26 +1074,16 @@ def test_driver_read_of_a_corrupt_file_raises_and_leaves_no_staged_file(
 # -- one landing path for every write, one per-file scan for every audit ------
 
 
-def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
-    """A flush that starts inside an earlier window adds its sidecar
-    entries (its own, and the one of the entry-less window it starts
-    inside) before its data file is renamed into the listing; a flush
-    past the topic's newest event writes none; a failed rename leaves
-    neither a file nor its entry."""
+def test_flush_names_its_window_newest_event(client, monkeypatch):
+    """Every flush, past the topic's newest event or inside an earlier
+    window, is one object whose name carries the window's first and
+    newest event times; a failed rename leaves no file."""
     from rawdata_client_provider_gcs_spark.sources.filenames import is_topic_data_file
     from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
-    from rawdata_client_provider_gcs_spark.sources.topic import Topic
 
     t0 = 1_700_000_000_000
     topic = client.topic("land")
-    stored = Topic(client.spark, client.root_uri, "land")  # no unsaved entries
     real_rename = HadoopFs.rename
-    sidecar_at_rename = []
-
-    def recording_rename(self, src, dst):
-        if is_topic_data_file(dst):
-            sidecar_at_rename.append(stored.load_max_ts())
-        return real_rename(self, src, dst)
 
     def rows(stamps, rand0):
         return [
@@ -1103,18 +1091,11 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
             for i, ts in enumerate(stamps)
         ]
 
-    monkeypatch.setattr(HadoopFs, "rename", recording_rename)
-    (first,) = topic.write_single_rows(rows(range(5), 0))
-    (second,) = topic.write_single_rows(rows(range(10, 15), 10))
-    assert sidecar_at_rename == [{}, {}]
-    (late,) = topic.write_single_rows(rows([2, 3, 12], 20))
-    first_name, second_name, late_name = (
-        p.rsplit("/", 1)[-1] for p in (first, second, late)
-    )
-    # the first window's entry keeps (I); the handle saves the second's
-    # with it
-    landed = {first_name: t0 + 4, second_name: t0 + 14, late_name: t0 + 12}
-    assert sidecar_at_rename[2] == landed
+    topic.write_single_rows(rows(range(5), 0))
+    topic.write_single_rows(rows(range(10, 15), 10))
+    topic.write_single_rows(rows([2, 3, 12], 20))
+    spans = [(e.from_ts_ms - t0, e.max_ts_ms - t0) for _, e in topic.list_manifest()]
+    assert spans == [(0, 4), (2, 12), (10, 14)]
 
     def failing_rename(self, src, dst):
         if is_topic_data_file(dst):
@@ -1125,12 +1106,11 @@ def test_flush_lands_sidecar_entry_before_data_file(client, monkeypatch):
     with pytest.raises(IOError):
         topic.write_single_rows(rows([1], 100))
     assert len(topic.list_manifest()) == 3
-    assert topic.load_max_ts() == landed
 
 
 def test_failed_flush_removes_its_temp_object(client, monkeypatch):
     """A flush whose data-file rename fails removes its ``.tmp-`` object
-    and leaves no sidecar entry for the window."""
+    and lists no file for the window."""
     from rawdata_client_provider_gcs_spark.sources.filenames import is_topic_data_file
     from rawdata_client_provider_gcs_spark.sources.fsutil import HadoopFs
 
@@ -1149,7 +1129,7 @@ def test_failed_flush_removes_its_temp_object(client, monkeypatch):
         )
     listed = [p.rsplit("/", 1)[-1] for p, _ in topic.fs.list_files(topic.uri)]
     assert not [name for name in listed if name.startswith(".tmp-")], listed
-    assert topic.load_max_ts() == {}
+    assert topic.list_manifest() == []
 
 
 def test_avro_fsck_and_sketch_job_counts_do_not_grow_with_files(

@@ -1,26 +1,31 @@
-"""Topic writes keep invariant (I) of ``sources/topic.py``: a listed data
-file with no max-ts sidecar entry holds no event later than the from-ts of
-the file listed right after it.
+"""Every topic write names its files with their newest event time, and
+readers take each file's max-ts from the listing (``sources/topic.py``);
+a file whose name has none, as the reference names files, keeps
+invariant (I′).
 
-Covers the producer flush that lands as one object, the writes that must
-give an entry-less file its entry (an overlapping window, interleaved
-producers, an event-time bulk publish, compaction), the reads that rely
-on (I) at a window split inside one millisecond, every crash point of a
-flush, a refused bulk landing, the gap-free group-cursor replace,
-metadata writes that make their own folder, and polling a topic that
-does not exist yet."""
+Covers the producer flush, one object wherever its window falls; writers
+that interleave windows (producers of one client, two clients on one
+root, an event-time bulk publish, compaction); the reads at a window split
+inside one millisecond; the FS calls of point reads at 200 and 2,000
+files; every crash point of a flush; moving a topic written with the
+max-ts sidecar of older versions onto names; a refused bulk landing; the
+gap-free group-cursor replace; metadata writes that make their own
+folder; and polling a topic that does not exist yet."""
 
+import json
 import os
 import sys
 import threading
 import time
+from collections import Counter
 
 import pytest
 
 from rawdata_client_provider_gcs_spark import RawdataClient, RawdataMessage
 from rawdata_client_provider_gcs_spark import ulid as ulid_mod
+from rawdata_client_provider_gcs_spark.datamodel import MESSAGE_SCHEMA
 from rawdata_client_provider_gcs_spark.sources import topic as topic_mod
-from rawdata_client_provider_gcs_spark.sources.topic import Topic
+from rawdata_client_provider_gcs_spark.sources.filenames import encode_filename
 from rawdata_client_provider_gcs_spark.ulid import UlidCursor
 from tests.test_fsutil import _count_py4j_commands
 
@@ -105,22 +110,28 @@ def drain_all(consumer):
         out.append(m)
 
 
-def disk_max_ts(topic):
-    """The sidecar's entries as stored, without those the handle holds
-    unsaved."""
-    return Topic(topic.spark, topic.root_uri, topic.name).load_max_ts()
-
-
-def assert_invariant(topic):
-    """(I) on the listed files, from the stored sidecar and the files' own
-    messages."""
-    manifest = topic.list_manifest()
-    max_ts = disk_max_ts(topic)
-    for (path, entry), (_, after) in zip(manifest, manifest[1:]):
-        if entry.filename in max_ts:
-            continue
+def assert_names_carry_max_ts(topic):
+    """Each listed file's name carries its newest event time, and the
+    topic keeps no max-ts sidecar."""
+    for path, entry in topic.list_manifest():
         newest = max(topic.read_local([(path, entry)])["ulid_ts_ms"].to_pylist())
-        assert newest <= after.from_ts_ms, (entry.filename, newest, after.filename)
+        assert entry.max_ts_ms == newest, entry.filename
+    assert not topic.fs.exists(f"{topic.uri}/metadata/engine-file-maxts.json")
+
+
+def as_reference_named(topic, names=None):
+    """Rename the listed files (those in ``names``, or all) to names
+    without a max-ts, as the reference, or an engine version before names
+    carried it, names them; returns the new names in listing order."""
+    out = []
+    for path, e in topic.list_manifest():
+        if names is None or e.filename in names:
+            bare = encode_filename(
+                e.from_ts_ms, e.count, e.last_block_offset, e.first_position, e.ext
+            )
+            assert topic.fs.rename(path, f"{topic.uri}/{bare}")
+            out.append(bare)
+    return out
 
 
 def assert_reads_match(client, name, truth):
@@ -146,10 +157,10 @@ def assert_reads_match(client, name, truth):
 def test_disjoint_flush_is_one_create_and_one_rename_at_20_and_200_files(
     client, monkeypatch
 ):
-    """After the handle's first write, a window past the topic's newest
-    event makes exactly ``write_bytes(tmp)`` and ``rename(tmp, dst)``:
-    no listing, no sidecar read or rewrite, no mkdirs.  The calls and the
-    py4j commands they send are the same at 20 and at 200 files."""
+    """A window past the topic's newest event makes exactly
+    ``write_bytes(tmp)`` and ``rename(tmp, dst)``: no listing, no
+    metadata read or write, no mkdirs.  The calls and the py4j commands
+    they send are the same at 20 and at 200 files."""
     seen = {}
     for n_files in (20, 200):
         topic = client.topic(f"flush{n_files}")
@@ -167,40 +178,38 @@ def test_disjoint_flush_is_one_create_and_one_rename_at_20_and_200_files(
         tmp = calls[0][1][0]
         assert os.path.basename(tmp).startswith(".tmp-")
         assert calls[1][1] == (tmp, dst)
-        assert disk_max_ts(topic) == {}
-        assert_invariant(topic)
+        assert_names_carry_max_ts(topic)
         seen[n_files] = sent
     assert seen[20] == seen[200], seen
 
 
-def test_first_flush_learns_the_newest_event_of_an_entry_less_tail(client):
-    """A new handle's first flush lists the topic once, reads no sidecar
-    it does not have, and reads the last file when it has no entry; a
-    window that starts inside that file is then an overlapping one."""
-    name = "learn"
-    first = client.topic(name)
-    window(first, [T0, T0 + 50, T0 + 90], "a")
-    other = RawdataClient(client.spark, client.root_uri)
+def test_an_overlapping_flush_is_one_create_and_one_rename(client, spark):
+    """A window that starts inside an earlier one, flushed as Avro through
+    another client's handle, makes the same two calls as a disjoint one;
+    every read matches."""
+    name = "overlap"
+    truth = window(client.topic(name), [T0 + i * 10 for i in range(10)], "a")
+    truth += window(client.topic(name), [T0 + 200 + i for i in range(5)], "b", 100)
+    other = RawdataClient(spark, client.root_uri)
     topic = other.topic(name)
     calls = instrument(topic.fs)
-    window(topic, [T0 + 60, T0 + 70], "b")
+    late = rows_at([T0 + 15, T0 + 55, T0 + 250], "c", 200)
+    topic.write_single_rows(late, ext="avro")
+    truth += [r[0] for r in late]
     uninstrument(topic.fs)
-    methods = [m for m, _ in calls]
-    assert methods.count("list_children") == 2  # learn, then the overlap's
-    assert "copy_to_local" in methods  # the entry-less last file
-    (a_name,) = [e.filename for _, e in topic.list_manifest() if "_a0." in e.filename]
-    assert topic.load_max_ts()[a_name] == T0 + 90
-    assert_invariant(topic)
     other.close()
+    assert [m for m, _ in calls] == ["write_bytes", "rename"], calls
+    assert_names_carry_max_ts(client.topic(name))
+    assert_reads_match(client, name, sorted(truth))
 
 
-# -- writes that must give an entry-less file its entry ----------------------
+# -- writers that interleave windows ------------------------------------------
 
 
 def test_flush_of_older_explicit_ulids_bridges_the_window_it_starts_in(client):
     """A window published with ULIDs older than the topic's newest event
-    lands with its own entry and with one for the entry-less window it
-    starts inside; every read still matches."""
+    starts inside an earlier window and lands as is, its span in its
+    name; every read still matches."""
     name = "older"
     truth = []
     with client.producer(name) as producer:
@@ -217,23 +226,23 @@ def test_flush_of_older_explicit_ulids_bridges_the_window_it_starts_in(client):
         )
         truth += [r[0] for r in late]
     topic = client.topic(name)
-    by_tag = {e.filename.rsplit("_", 1)[-1]: e.filename for _, e in topic.list_manifest()}
-    # w1's entry is the one (I) needs; the late window's own, and w0's and
-    # w2's (held unsaved until then), land with it
-    assert disk_max_ts(topic) == {
-        by_tag["w0-0.parquet"]: T0 + 110,
-        by_tag["w1-0.parquet"]: T0 + 1_110,
-        by_tag["w2-0.parquet"]: T0 + 2_110,
-        by_tag["late-0.parquet"]: T0 + 1_105,
+    spans = {
+        e.first_position: (e.from_ts_ms - T0, e.max_ts_ms - T0)
+        for _, e in topic.list_manifest()
     }
-    assert_invariant(topic)
+    assert spans == {
+        "w0-0": (0, 110),
+        "w1-0": (1_000, 1_110),
+        "late-0": (1_055, 1_105),
+        "w2-0": (2_000, 2_110),
+    }
+    assert_names_carry_max_ts(topic)
     assert_reads_match(client, name, sorted(truth))
 
 
 def test_two_producers_of_one_client_interleave_windows(client):
-    """Two producers of one client share its topic handle: windows whose
-    spans interleave get the entries that keep (I), and every read
-    matches the sorted messages."""
+    """Two producers of one client flush windows whose spans interleave,
+    and every read matches the sorted messages."""
     name = "pair"
     truth = []
     p1, p2 = client.producer(name), client.producer(name)
@@ -250,14 +259,14 @@ def test_two_producers_of_one_client_interleave_windows(client):
     p2.close()
     topic = client.topic(name)
     assert len(topic.list_manifest()) == 6
-    assert_invariant(topic)
+    assert_names_carry_max_ts(topic)
     assert_reads_match(client, name, sorted(truth))
 
 
 def test_concurrent_producers_of_one_client_keep_the_invariant(client):
     """More producer threads than cores flush interleaved windows through
-    one topic handle at once: every message lands, (I) holds, and a
-    drain is in ULID order."""
+    one topic handle at once: every message lands in a file that names
+    its span, and a drain is in ULID order."""
     name = "many"
     n_threads = (os.cpu_count() or 2) + 2
     truth, errors = [], []
@@ -296,21 +305,56 @@ def test_concurrent_producers_of_one_client_keep_the_invariant(client):
     assert not errors
     topic = client.topic(name)
     assert len(topic.list_manifest()) == 3 * n_threads
-    assert_invariant(topic)
+    assert_names_carry_max_ts(topic)
     assert [m.ulid for m in drain_all(client.consumer(name))] == sorted(truth)
     assert client.last_message(name).ulid == max(truth)
 
 
+def test_two_clients_produce_interleaved_windows_into_one_topic(client, spark):
+    """Two clients on one root take turns producing windows.  A flushes
+    [T, T+150]; B, whose handle has seen the topic end at T+150, flushes
+    [T+200, T+300]; A's handle, which has not seen B's window, flushes
+    [T+250, T+350], inside B's.  While both producers are still open, a
+    fresh client drains every message in ULID order, and its
+    ``last_message`` is the newest."""
+    name = "two"
+    other = RawdataClient(spark, client.root_uri)
+    a, b = client.producer(name), other.producer(name)
+    truth = []
+
+    def produce(producer, offsets, tag):
+        msgs = [
+            RawdataMessage(
+                position=f"{tag}{i}", data={}, ulid=ulid_mod.encode(T0 + ms, len(truth) + i)
+            )
+            for i, ms in enumerate(offsets)
+        ]
+        producer.publish(*msgs)
+        producer.flush()
+        truth.extend(m.ulid for m in msgs)
+
+    produce(a, [0, 50, 100, 150], "a")
+    produce(b, [200, 250, 300], "b")
+    produce(a, [250, 300, 350], "c")
+    fresh = RawdataClient(spark, client.root_uri)
+    assert [m.ulid for m in drain_all(fresh.consumer(name))] == sorted(truth)
+    assert fresh.last_message(name).ulid == max(truth)
+    assert_reads_match(fresh, name, sorted(truth))
+    fresh.close()
+    a.close()
+    b.close()
+    other.close()
+    assert_names_carry_max_ts(client.topic(name))
+
+
 def test_event_time_publish_inside_an_entry_less_window(client, spark):
     """An event-time ``publish_dataframe`` whose files start inside an
-    entry-less producer window gives that window its entry before
-    landing; reads match."""
+    earlier producer window lands as is; reads match."""
     name = "evt"
     topic = client.topic(name)
     truth = []
     for w in range(3):
         truth += window(topic, [T0 + w * 1_000 + i * 10 for i in range(30)], f"w{w}-", w * 100)
-    assert disk_max_ts(topic) == {}
     late = spark.createDataFrame(
         [(f"late-{i}", T0 + 1_105 + i * 7) for i in range(20)],
         "position string, ts_ms long",
@@ -319,18 +363,15 @@ def test_event_time_publish_inside_an_entry_less_window(client, spark):
         producer.publish_dataframe(late, ts_ms_col="ts_ms")
     rows = topic.dataframe().filter("position LIKE 'late-%'").collect()
     truth = sorted(truth + [bytes(r["ulid"]) for r in rows])
-    w1 = [e.filename for _, e in topic.list_manifest() if "_w1-0." in e.filename][0]
-    assert disk_max_ts(topic)[w1] == T0 + 1_290
-    assert_invariant(topic)
+    assert_names_carry_max_ts(topic)
     assert_reads_match(client, name, truth)
 
 
 def test_flush_inside_pre_commit_lands_before_the_bulk_listing(client, spark):
     """A producer of the same client flushes a window while a bulk write
     runs its ``pre_commit`` (between the bulk write's facts and its
-    landing); the bulk write lists the topic after that flush, its file
-    that starts inside the window lands after it, and every read
-    matches."""
+    landing); the bulk write's file that starts inside the window lands
+    after it, and every read matches."""
     name = "mid"
     topic = client.topic(name)
     producer = client.producer(name)
@@ -363,24 +404,20 @@ def test_flush_inside_pre_commit_lands_before_the_bulk_listing(client, spark):
     renames = [i for i, (m, args) in enumerate(calls) if m == "rename"]
     (flushed_at,) = [i for i in renames if "_w1-0." in calls[i][1][1]]
     (landed_at,) = [i for i in renames if "_late-0." in calls[i][1][1]]
-    assert any(
-        calls[i] == ("list_children", (topic.uri,))
-        for i in range(flushed_at, landed_at)
-    ), calls
+    assert flushed_at < landed_at, calls
     rows = topic.dataframe().filter("position LIKE 'late-%'").collect()
     assert len(rows) == 20
     truth = sorted(truth + [r[0] for r in flushed] + [bytes(r["ulid"]) for r in rows])
-    w1 = [e.filename for _, e in topic.list_manifest() if "_w1-0." in e.filename][0]
-    assert disk_max_ts(topic)[w1] == T0 + 1_290
-    assert_invariant(topic)
+    assert_names_carry_max_ts(topic)
     fresh = RawdataClient(spark, client.root_uri)
     assert_reads_match(fresh, name, truth)
     fresh.close()
 
 
 def test_compact_of_non_adjacent_entry_less_windows_keeps_the_invariant(client):
-    """Compacting small entry-less windows between big ones lands a file
-    that spans the big windows; (I) holds and reads match afterwards."""
+    """Compacting small windows between big ones lands a file that spans
+    the big windows; its name carries its span, and reads match
+    afterwards."""
     name = "cmp"
     topic = client.topic(name)
     truth = []
@@ -390,41 +427,43 @@ def test_compact_of_non_adjacent_entry_less_windows_keeps_the_invariant(client):
         truth += window(topic, [T0 + start + i * step for i in range(count)], f"w{w}-", w * 100)
     new_files, removed = topic.compact(small_file_max_records=10, target_records_per_file=1_000)
     assert len(new_files) == 1 and len(removed) == 3
-    assert_invariant(topic)
+    assert_names_carry_max_ts(topic)
     assert_reads_match(client, name, sorted(truth))
     # a window after compaction still lands as one object
     calls = instrument(topic.fs)
     truth += window(topic, [T0 + 9_000 + i for i in range(3)], "after-", 900)
     uninstrument(topic.fs)
     assert [m for m, _ in calls] == ["write_bytes", "rename"]
-    assert_invariant(topic)
+    assert_names_carry_max_ts(topic)
 
 
-def test_bridge_above_the_driver_bound_reads_with_one_aggregate(client, spark):
-    """Past ``spark.sql.files.maxPartitionBytes`` the entry-less window an
-    overlapping flush starts inside is read by a per-file aggregate, whose
-    percent-encoded file URIs still name the window."""
+# -- files whose names carry no max-ts -----------------------------------------
+
+
+def test_an_unsuffixed_last_file_above_the_driver_bound_reads_with_one_aggregate(
+    client, spark
+):
+    """Past ``spark.sql.files.maxPartitionBytes`` the last file whose name
+    has no max-ts is read by a per-file aggregate, whose percent-encoded
+    file URIs still name the file."""
+    from tests.test_tck import _spark_work
+
     key = "spark.sql.files.maxPartitionBytes"
     old = spark.conf.get(key, None)
+    topic = client.topic("agg")
+    window(topic, [T0, T0 + 40, T0 + 80], "p %, ")
+    window(topic, [T0 + 20, T0 + 30], "q", 10)
+    (p_name,) = as_reference_named(topic, [e.filename for _, e in topic.list_manifest()][:1])
     spark.conf.set(key, "64")
-    other = RawdataClient(spark, client.root_uri)
     try:
-        window(client.topic("agg"), [T0, T0 + 40, T0 + 80], "p %, ")
-        # another client's handle holds no entry for p, so it reads p
-        topic = other.topic("agg")
-        window(topic, [T0 + 20, T0 + 30], "q", 10)
+        max_ts, jobs, _ = _spark_work(spark, lambda: topic.load_max_ts(topic.list_manifest()))
     finally:
-        other.close()
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    (p_name,) = [e.filename for _, e in topic.list_manifest() if "_p %, 0." in e.filename]
-    assert disk_max_ts(topic)[p_name] == T0 + 80
-    assert_invariant(topic)
-
-
-# -- entries an entry-less window's reads use --------------------------------
+    assert max_ts[p_name] == T0 + 80
+    assert jobs > 0  # the aggregate, not a driver read
 
 
 def _gap_lookup_copies(client, name):
@@ -439,10 +478,9 @@ def _gap_lookup_copies(client, name):
 
 
 def test_producer_windows_keep_their_entries_for_point_reads(client, spark):
-    """The handle serves the entries of the windows it landed without one,
-    so its point reads skip a window that ends before their start; a
-    producer's close saves them, and another client's reads skip it too.
-    Until then another client reads that window as well."""
+    """Each window's name carries its max-ts from the moment it lands, so
+    a point read from any client skips a window that ends before the
+    read's start, while the producer is still open and after."""
     name = "gap"
     with client.producer(name) as producer:
         for w in range(4):
@@ -453,13 +491,9 @@ def test_producer_windows_keep_their_entries_for_point_reads(client, spark):
                 ]
             )
             producer.flush()
-        assert disk_max_ts(client.topic(name)) == {}
-        copied = _gap_lookup_copies(client, name)
-        assert len(copied) == 1 and "_w2-0." in copied[0], copied
-        other = RawdataClient(spark, client.root_uri)
-        assert len(_gap_lookup_copies(other, name)) == 2
-        other.close()
-    assert len(disk_max_ts(client.topic(name))) == 4
+        for reader in (client, RawdataClient(spark, client.root_uri)):
+            copied = _gap_lookup_copies(reader, name)
+            assert len(copied) == 1 and "_w2-0." in copied[0], copied
     fresh = RawdataClient(spark, client.root_uri)
     copied = _gap_lookup_copies(fresh, name)
     assert len(copied) == 1 and "_w2-0." in copied[0], copied
@@ -469,71 +503,96 @@ def test_producer_windows_keep_their_entries_for_point_reads(client, spark):
 def test_seek_into_the_gap_after_an_entry_less_window_reads_on_the_driver(
     client, spark
 ):
-    """A consumer seeking into the gap after a window that has no entry
-    reads that window, and two after it, on the driver: reading on into
-    the second runs no Spark job."""
+    """A consumer seeking into the gap after a window whose name has no
+    max-ts reads that window, and two after it, on the driver: reading on
+    into the second runs no Spark job."""
     from tests.test_tck import _spark_work
 
     name = "seekgap"
+    topic = client.topic(name)
     truth = []
-    with client.producer(name) as producer:
-        for w in range(4):
-            rows = rows_at([T0 + w * 1_000 + i * 10 for i in range(5)], f"w{w}-", w * 100)
-            producer.publish(
-                *[RawdataMessage(position=r[3], data=r[4], ulid=r[0]) for r in rows]
-            )
-            producer.flush()
-            truth += [r[0] for r in rows]
-        other = RawdataClient(spark, client.root_uri)
-        assert other.topic(name).load_max_ts() == {}
+    for w in range(4):
+        truth += window(topic, [T0 + w * 1_000 + i * 10 for i in range(5)], f"w{w}-", w * 100)
+    as_reference_named(topic)
 
-        def seek_and_read():
-            consumer = other.consumer(name, seek_to_ts_ms=T0 + 1_500)
-            return [consumer.receive(0).ulid for _ in range(8)]
+    def seek_and_read():
+        consumer = client.consumer(name, seek_to_ts_ms=T0 + 1_500)
+        return [consumer.receive(0).ulid for _ in range(8)]
 
-        got, jobs, _ = _spark_work(spark, seek_and_read)
-        other.close()
+    got, jobs, _ = _spark_work(spark, seek_and_read)
     assert got == truth[10:18]
     assert jobs == 0
-
-
-def test_a_handle_saves_its_entries_every_save_every_windows(client, monkeypatch):
-    """Once a handle holds SAVE_EVERY unsaved entries, the flush that
-    reaches that count saves them after its rename."""
-    monkeypatch.setattr(topic_mod, "SAVE_EVERY", 3)
-    topic = client.topic("bound")
-    for w in range(7):
-        calls = instrument(topic.fs)
-        window(topic, [T0 + w * 100 + i for i in range(3)], f"w{w}-", w * 10)
-        uninstrument(topic.fs)
-        methods = [m for m, _ in calls]
-        assert methods[:2] == ["write_bytes", "rename"] or w == 0, methods
-        assert ("replace_object" in methods) == (w in (2, 5)), (w, methods)
-    assert len(disk_max_ts(topic)) == 6
-    assert len(topic.load_max_ts()) == 7
-    assert_invariant(topic)
 
 
 # -- reads at a window split inside one millisecond --------------------------
 
 
 def test_seek_keeps_an_entry_less_window_split_inside_the_seek_millisecond(client):
-    """Two entry-less windows split inside ms 5 (a1@0, a2@5, a3@5 |
-    b1@5, b2@9): seek(5) returns a2, a3, b1, b2, and a consumer resuming
-    after a2 returns a3, b1, b2."""
+    """Two windows whose names have no max-ts split inside ms 5 (a1@0,
+    a2@5, a3@5 | b1@5, b2@9): seek(5) returns a2, a3, b1, b2, and a
+    consumer resuming after a2 returns a3, b1, b2."""
     name = "split"
     topic = client.topic(name)
     window(topic, [T0, T0 + 5, T0 + 5], "a", 1)
     window(topic, [T0 + 5, T0 + 9], "b", 10)
-    a_and_b = [e.filename for _, e in topic.list_manifest()]
-    topic._update_max_ts(remove=a_and_b)
-    topic._maxts_last_good = None
-    assert topic.load_max_ts() == {}
+    as_reference_named(topic)
+    manifest = topic.list_manifest()
+    assert [e.max_ts_ms for _, e in manifest] == [None, None]
     seek = [m.position for m in drain_all(client.consumer(name, seek_to_ts_ms=T0 + 5))]
     assert seek == ["a1", "a2", "b0", "b1"]
     a2 = ulid_mod.encode(T0 + 5, 2)
     resumed = drain_all(client.consumer(name, cursor=UlidCursor(a2, False)))
     assert [m.position for m in resumed] == ["a2", "b0", "b1"]
+    assert client.last_message(name).position == "b1"
+    assert [len(g) for g in topic_mod.overlap_groups(manifest, topic.load_max_ts(manifest))] == [1, 1]
+
+
+# -- the FS calls of point reads ----------------------------------------------
+
+
+def _point_read_calls(spark, root, n_files):
+    """The FS calls of a seek plus 50 receives, ``last_message`` and
+    ``cursor_of_position`` by a fresh client on a ``write_dataframe``
+    topic of ``n_files`` 10-message files."""
+    rows = [
+        (ulid_mod.encode(T0 + i * 10, i), T0 + i * 10, None, 0, f"p-{i}", {"k": b"v"})
+        for i in range(n_files * 10)
+    ]
+    writer = RawdataClient(spark, root)
+    writer.topic("t").write_dataframe(
+        spark.createDataFrame(rows, MESSAGE_SCHEMA), max_records_per_file=10
+    )
+    writer.close()
+    client = RawdataClient(spark, root)
+    topic = client.topic("t")
+    calls = instrument(topic.fs)
+    first = (n_files - 10) * 10
+    consumer = client.consumer("t", seek_to_ts_ms=T0 + first * 10)
+    got = [consumer.receive(0).position for _ in range(50)]
+    newest = client.last_message("t").position
+    at = (n_files - 3) * 10 + 4
+    found = client.cursor_of_position("t", f"p-{at}", True, T0 + at * 10, 5)
+    uninstrument(topic.fs)
+    client.close()
+    assert len(topic.list_manifest()) == n_files
+    assert got == [f"p-{i}" for i in range(first, first + 50)]
+    assert newest == f"p-{n_files * 10 - 1}"
+    assert found.ulid == ulid_mod.encode(T0 + at * 10, at)
+    return calls
+
+
+def test_point_reads_make_the_same_fs_calls_at_200_and_2000_files(spark, tmp_path):
+    """A seek plus 50 receives, ``last_message`` and ``cursor_of_position``
+    make the same FS calls, of the same kinds and in the same counts, on
+    topics of 200 and 2,000 files, and none of them touches the topic's
+    ``metadata/`` folder."""
+    kinds = {}
+    for n_files in (200, 2_000):
+        calls = _point_read_calls(spark, str(tmp_path / f"n{n_files}"), n_files)
+        assert not [c for c in calls if any("/metadata" in str(a) for a in c[1])], calls
+        kinds[n_files] = [m for m, _ in calls]
+    assert kinds[200] == kinds[2_000], kinds
+    assert Counter(kinds[200]) == {"exists": 1, "list_children": 3, "copy_to_local": 7}
 
 
 # -- crash points of a flush -------------------------------------------------
@@ -569,7 +628,7 @@ def _crash_every_call(spark, tmp_path, build, flush):
         assert fresh.last_message("t").ulid == seen[-1]
         listed = [p.rsplit("/", 1)[-1] for p, _ in fresh.topic("t").list_manifest()]
         assert not [n for n in listed if n.startswith(".tmp-")]
-        assert_invariant(fresh.topic("t"))
+        assert_names_carry_max_ts(fresh.topic("t"))
         fresh.close()
     return n_calls
 
@@ -593,25 +652,71 @@ def test_every_crash_point_of_an_overlapping_flush(spark, tmp_path):
         )
 
     def flush(topic):
-        # starts inside window a, which has no entry yet
+        # starts inside window a and ends inside window b
         return window(topic, [T0 + 15, T0 + 25, T0 + 150], "c", 200)
 
-    assert _crash_every_call(spark, tmp_path, build, flush) > 2
+    assert _crash_every_call(spark, tmp_path, build, flush) == 2
 
 
-def test_an_overlapping_flush_reads_the_sidecar_once(client):
-    """An overlapping flush reads the stored sidecar once: the table it
-    bridges from is the one it rewrites."""
-    topic = client.topic("once")
-    window(topic, [T0 + i * 10 for i in range(5)], "a")
-    window(topic, [T0 + 100 + i * 10 for i in range(5)], "b", 100)
-    window(topic, [T0 + 15, T0 + 150], "c", 200)  # stores the sidecar
-    calls = instrument(topic.fs)
-    window(topic, [T0 + 35, T0 + 160], "d", 300)
-    uninstrument(topic.fs)
-    methods = [m for m, _ in calls]
-    assert methods.count("read_bytes") == 1 and "replace_object" in methods, methods
-    assert_invariant(topic)
+# -- topics written with the max-ts sidecar of older versions ------------------
+
+
+def test_maintain_moves_a_sidecar_topic_onto_names_once(client, spark):
+    """A topic written by an older version: its files' names carry no
+    max-ts, and ``metadata/engine-file-maxts.json`` holds the entries of
+    the files that needed one (here a compacted file spanning two
+    producer windows and an event-time window that reaches into the
+    third).  ``maintain()`` crashes
+    after its first rename; run again, it renames the rest, deletes the
+    sidecar and reads match."""
+    name = "legacy"
+    topic = client.topic(name)
+    truth = []
+    for w in range(3):
+        truth += window(topic, [T0 + w * 1_000 + i * 10 for i in range(5)], f"w{w}-", w * 100)
+    truth += window(topic, [T0 + 50, T0 + 1_500, T0 + 2_050], "cmp", 500)
+    truth += window(topic, [T0 + 1_045, T0 + 2_030], "evt", 600)
+    bare = as_reference_named(topic)
+    spans = {e.filename: e.max_ts_ms for _, e in client.topic(name).list_manifest()}
+    assert set(spans.values()) == {None}
+    cmp_name = next(n for n in bare if "_cmp0." in n)
+    evt_name = next(n for n in bare if "_evt0." in n)
+    sidecar = f"{topic.uri}/metadata/engine-file-maxts.json"
+    entries = {cmp_name: T0 + 2_050, evt_name: T0 + 2_030, "gone_1_1_x.parquet": T0}
+    topic.fs.replace_object(sidecar, json.dumps(entries).encode("utf-8"))
+
+    real = topic.fs.rename
+    renamed = []
+
+    def rename_then_crash(src, dst):
+        if renamed:
+            raise Crash("crash after the first rename")
+        renamed.append(dst.rsplit("/", 1)[-1])
+        return real(src, dst)
+
+    topic.fs.rename = rename_then_crash
+    with pytest.raises(Crash):
+        topic.maintain()
+    del topic.fs.rename
+    assert topic.fs.exists(sidecar)
+
+    fresh = RawdataClient(spark, client.root_uri)
+    report = fresh.topic(name).maintain()
+    assert len(renamed) == 1 and len(report["max_ts_named"]) == 1
+    assert not fresh.topic(name).fs.exists(sidecar)
+    named = {
+        e.first_position: e.max_ts_ms for _, e in fresh.topic(name).list_manifest()
+    }
+    assert named == {
+        "w0-0": None,
+        "cmp0": T0 + 2_050,
+        "w1-0": None,
+        "evt0": T0 + 2_030,
+        "w2-0": None,
+    }
+    assert fresh.topic(name).maintain()["max_ts_named"] == []
+    assert_reads_match(fresh, name, sorted(truth))
+    fresh.close()
 
 
 def test_a_refused_bulk_landing_leaves_no_temp_folder(
